@@ -12,14 +12,19 @@ Five strategies, each expressed as a shuffle-conscious DataFrame plan:
                      trick: only pairs sharing ≥1 shingle are generated.
 * minhash_lsh      — shingle → ONE groupBy(id) computing m minhashes AND
                      the per-doc set size (all fixed-width buffers) → b
-                     band keys → bucket aggregation enumerates candidate
-                     pairs in-row → count-based exact-Jaccard verify over
-                     the materialized index. Near-linear; no all-pairs
-                     join and no shingle arrays anywhere.
+                     band keys → bucket count(*) census + bucket self-join
+                     for the candidate pairs → count-based exact-Jaccard
+                     verify over the materialized index. Near-linear; no
+                     all-pairs join and no shingle arrays anywhere.
 * simhash          — 64-bit simhash per doc (vectorized pandas UDF, no
                      shuffle) → 16-bit chunk banding (pigeonhole: hamming
-                     ≤3 ⇒ ≥1 of 4 chunks equal) → candidate join →
-                     popcount verify.
+                     ≤3 ⇒ ≥1 of 4 chunks equal) → the same bucket census +
+                     bucket self-join → popcount verify.
+
+Both banding families pair buckets through one helper (``_bucket_pairs``):
+its census and join keep every aggregation buffer fixed-width (no member
+arrays, no interpreted lambdas), and capped and uncapped callers share the
+one plan.
 * embedding cosine — see similarity.py (near_duplicates_by_embedding).
 
 All emit candidate/confirmed duplicate PAIRS (id_a < id_b) so downstream
@@ -28,28 +33,22 @@ can pick survivors; ``dedup_exact`` also offers keep-first directly.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
 def _materialize_index(df: DataFrame) -> DataFrame:
-    """Lazily materialize a corpus-sized inverted index that several plan
-    branches read (lazy local checkpoint — same fault-tolerance posture as
-    before; swap for a reliable checkpoint on a cluster where executor loss
-    must be survivable). Storage level is env-tunable for measurement:
-    FUGUE_SPARK_INDEX_STORAGE=DISK_ONLY keeps the index out of the executor
-    heap (the index is a large fraction of heap at corpus scale; GC-driven
-    swings vs a sequential spill/read are a measured tradeoff)."""
-    from pyspark import StorageLevel
+    """Lazily materialize a corpus-sized index that several plan branches
+    read (lazy local checkpoint at MEMORY_AND_DISK; swap for a reliable
+    checkpoint on a cluster where executor loss must be survivable). Every
+    index in this module is materialized here and nowhere else. DISK_ONLY
+    was measured and lost: p6@sf10 min 38.6 s vs 18.4 s (OPTIMIZATION_r10
+    §1) — the GC relief does not pay for the write."""
+    return df.localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
 
-    level = getattr(
-        StorageLevel, os.environ.get("FUGUE_SPARK_INDEX_STORAGE", "MEMORY_AND_DISK")
-    )
-    return df.localCheckpoint(eager=False, storageLevel=level)
 
 __all__ = [
     "dedup_exact",
@@ -233,8 +232,8 @@ def ngram_jaccard_pairs(
     # executor loss must be survivable; the structure — index materialized
     # once — is the scale-critical part.)
     #
-    # PPJoin prefix filtering was tried and REVERTED (r11,
-    # scripts/diag_prefix*.py): generating candidates from sorted-prefix
+    # PPJoin prefix filtering was tried and REVERTED (2d67509; measurements
+    # in OPTIMIZATION_r11.md §1): generating candidates from sorted-prefix
     # rows and exact-verifying them over the full index loses to this
     # one-aggregation plan on corpora whose co-shingled pairs come from
     # RARE shingles — prefixes (hash order OR df-ascending order) still
@@ -457,40 +456,54 @@ def minhash_signatures(
 
     One explode + one groupBy(id) with m min() aggregates: a single
     shuffle keyed on id, carrying only (id, m×8 bytes)."""
-    ex = _shingle_index(df, n, text_col, id_col)
-    return _minhash_from_index(ex, num_hashes)
+    doc = _minhash_doc(_shingle_index(df, n, text_col, id_col), num_hashes)
+    slots = ", ".join(f"h{i}" for i in range(num_hashes))
+    return doc.selectExpr("id", f"array({slots}) AS sig")
 
 
-def _minhash_from_index(ex: DataFrame, num_hashes: int) -> DataFrame:
-    # hash family: one 64-bit fingerprint per shingle (already in the
-    # index), then m cheap (seed, h) long hashes — never m string hashes
-    aggs = [
-        F.min(F.xxhash64(F.lit(i), F.col("g"))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    sig = ex.groupBy("id").agg(*aggs)
-    return sig.select("id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig"))
+def _minhash_doc(ex: DataFrame, num_hashes: int) -> DataFrame:
+    """(id, h0..h{m-1}, n_sh) from a shingle index (id, g): the m minhashes
+    and the per-doc set size in ONE HashAggregate — min() and count() are
+    fixed-width buffers, so fusing n_sh in is free. (Fusing collect_list(g)
+    of the shingle SET instead — tried r10 — turned the aggregation into
+    ObjectHashAggregate, whose hash map falls back to SORT-based aggregation
+    past 128 keys, and checkpointed KB-sized array rows: p6@sf10 min 16.3 s
+    → 56.5 s. Count-based verify keeps every buffer fixed-width.)
+
+    Hash family: one 64-bit fingerprint per shingle (already in the index),
+    then m cheap (seed, g) long hashes — never m string hashes. Each
+    aggregate is parsed from SQL text, one py4j call instead of the five
+    that assembling it from Columns takes."""
+    aggs = [F.expr(f"min(xxhash64({i}, g)) AS h{i}") for i in range(num_hashes)]
+    return ex.groupBy("id").agg(*aggs, F.expr("count(1) AS n_sh"))
 
 
-def _band_keys(doc: DataFrame, bands: int, r: int, h: "Callable[[int], F.Column]") -> DataFrame:
+def _minhash_side(
+    df: DataFrame, num_hashes: int, n: int, text_col: str, id_col: str
+) -> "tuple[DataFrame, DataFrame]":
+    """One corpus side of the LSH plans: the shingle index (id, g), 16
+    bytes/row, partitioned on id and materialized ONCE — the signature
+    aggregation reads it exchange-free and the verify joins read it again
+    instead of re-running the shingling scan — plus its materialized
+    signatures (id, h0..h{m-1}, n_sh), read by the banding AND the size
+    join."""
+    ex = _materialize_index(_shingle_index(df, n, text_col, id_col).repartition("id"))
+    return ex, _materialize_index(_minhash_doc(ex, num_hashes))
+
+
+def _band_keys(doc: DataFrame, bands: int, r: int) -> DataFrame:
     """(id, bh) LSH bucket keys: one 64-bit hash per band over that band's r
-    signature slots (band index folded into the hash as a seed — docs collide
-    only when the same band's slots are equal, so capture is unchanged vs. a
-    (band, hash) composite key; cross-band hash collisions merely add
-    candidates the exact verify discards). ``h(k)`` yields signature slot k.
-    Hashing the slot longs directly (no string concat) keeps the banding
-    projection allocation-free."""
-    return doc.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.xxhash64(F.lit(i), *[h(i * r + j) for j in range(r)])
-                    for i in range(bands)
-                ]
-            )
-        ).alias("bh"),
+    signature slots h{i·r}..h{i·r+r-1} (band index folded into the hash as a
+    seed — docs collide only when the same band's slots are equal, so
+    capture is unchanged vs. a (band, hash) composite key; cross-band hash
+    collisions merely add candidates the exact verify discards). Hashing
+    the slot longs directly (no string concat) keeps the banding projection
+    allocation-free; it is parsed from one SQL string."""
+    keys = ", ".join(
+        "xxhash64({}, {})".format(i, ", ".join(f"h{i * r + j}" for j in range(r)))
+        for i in range(bands)
     )
+    return doc.selectExpr("id", f"explode(array({keys})) AS bh")
 
 
 def _bucket_pairs(
@@ -498,44 +511,52 @@ def _bucket_pairs(
     max_bucket_size: "int | None",
     left: str = "id_a",
     right: str = "id_b",
+    key: str = "bh",
+    other: "DataFrame | None" = None,
 ) -> DataFrame:
-    """Distinct candidate pairs from LSH buckets: ONE aggregation on the
-    bucket key, pairs enumerated in-row from the sorted member array — no
-    bucket-census join and no bucket self-join. A k-member bucket emits
-    k(k-1)/2 ordered pairs; buckets above ``max_bucket_size`` are dropped
-    before any pair materializes (the quadratic guard every banding consumer
-    inherits), which also bounds the in-row pair array at cap²/2 structs.
+    """Distinct candidate pairs from LSH buckets — the one pairing path of
+    every banding consumer. ``banded`` holds (id, key, *carry) rows; each
+    carried column comes out once per side, as ``<col>_a`` and ``<col>_b``.
 
-    Uncapped callers (``max_bucket_size=None`` — tests and deliberately
-    guard-off gates) fall back to the bucket self-join: a degenerate bucket
-    there must stream its k²/2 pairs through the join, never materialize
-    them as one in-row array."""
-    if max_bucket_size is None:
-        l = banded.select(F.col("id").alias(left), "bh")
-        r = banded.select(F.col("id").alias(right), "bh")
-        return (
-            l.join(r, on="bh")
-            .filter(F.col(left) < F.col(right))
-            .select(left, right)
-            .distinct()
+    Plan: a per-bucket count(*) census keeps the buckets with
+    2 ≤ k ≤ ``max_bucket_size`` members, a semi-join brings their rows
+    back, and a self-join on the bucket key emits each pair once with
+    left < right. A k-member bucket emits k(k-1)/2 pairs, so the census is
+    the quadratic guard: a degenerate bucket is dropped before any of its
+    pairs exists. Every aggregation buffer is fixed-width (a count, a
+    distinct over longs), so the plan stays HashAggregate with no member
+    arrays and no interpreted lambdas, and capped and uncapped callers run
+    the same plan: ``max_bucket_size=None`` only skips the census.
+
+    With ``other``, pairs run across two frames — left ids from
+    ``banded``, right ids from ``other`` — each side's census keeps
+    k ≤ ``max_bucket_size`` on that side (a 1×1 bucket is a match), and
+    every bucket-key match is a pair."""
+
+    def members(side: DataFrame, lo: int) -> DataFrame:
+        if max_bucket_size is None:
+            return side
+        k = F.col("__k__")
+        keep = (
+            side.groupBy(key)
+            .agg(F.count(F.lit(1)).alias("__k__"))
+            .filter((k >= lo) & (k <= int(max_bucket_size)))
+            .select(key)
         )
-    buckets = banded.groupBy("bh").agg(F.array_sort(F.collect_list("id")).alias("ids"))
-    keep = (F.size("ids") >= 2) & (F.size("ids") <= int(max_bucket_size))
-    pairs = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + F.lit(2), F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    return (
-        buckets.filter(keep)
-        .select(F.explode(pairs).alias("p"))
-        .select(F.col("p.a").alias(left), F.col("p.b").alias(right))
-        .distinct()
-    )
+        return side.join(keep, on=key, how="left_semi")
+
+    carry = [c for c in banded.columns if c not in ("id", key)]
+    if other is None:
+        a = b = members(banded, 2)
+    else:
+        a, b = members(banded, 1), members(other, 1)
+    la = a.select(F.col("id").alias(left), key, *[F.col(c).alias(f"{c}_a") for c in carry])
+    rb = b.select(F.col("id").alias(right), key, *[F.col(c).alias(f"{c}_b") for c in carry])
+    pairs = la.join(rb, on=key)
+    if other is None:
+        pairs = pairs.filter(F.col(left) < F.col(right))
+    out = [left, right] + [f"{c}_a" for c in carry] + [f"{c}_b" for c in carry]
+    return pairs.select(*out).distinct()
 
 
 def minhash_lsh_pairs(
@@ -551,39 +572,20 @@ def minhash_lsh_pairs(
     """MinHash+LSH near-duplicate pairs, verified with exact Jaccard.
 
     banding: b=16 bands × r=4 rows ⇒ candidate-capture probability
-    1-(1-j^r)^b (≈0.98 at j=0.7). Candidates come from a groupBy on
-    (band, band-hash) buckets — never an all-pairs join — then are
+    1-(1-j^r)^b (≈0.98 at j=0.7). Candidates come from the (band,
+    band-hash) buckets — a count(*) census plus a self-join on the bucket
+    key (:func:`_bucket_pairs`), never an all-pairs join — then are
     verified exactly (shingle-set Jaccard) so the output has no false
-    positives. Buckets larger than ``max_bucket_size`` are dropped before
-    the self-join (a k-doc bucket emits k²/2 candidates; at corpus scale a
-    degenerate bucket is a quadratic blowup). Run :func:`dedup_exact`
-    first — clusters of byte-identical documents land every band in the
-    same bucket and are exact-dedup's job, not LSH's.
+    positives. The census drops buckets larger than ``max_bucket_size``
+    before the self-join (a k-doc bucket emits k²/2 candidates; at corpus
+    scale a degenerate bucket is a quadratic blowup). Run
+    :func:`dedup_exact` first — clusters of byte-identical documents land
+    every band in the same bucket and are exact-dedup's job, not LSH's.
     Output: id_a, id_b, jaccard_e4.
     """
     assert num_hashes % bands == 0
-    r = num_hashes // bands
-    # The index is materialized ONCE (16 bytes/row, partitioned on id): the
-    # signature aggregation reads it exchange-free and the two verify joins
-    # read it again instead of re-running the shingling scan. Signatures and
-    # the per-doc set size come from ONE HashAggregate — count() is a
-    # fixed-width buffer, so fusing n_sh into the m min() aggregates is
-    # free. (Fusing collect_list(g) of the shingle SET instead — tried
-    # r10 — turned the aggregation into ObjectHashAggregate, whose hash map
-    # falls back to SORT-based aggregation past 128 keys, and checkpointed
-    # KB-sized array rows: p6@sf10 min 16.3 s → 56.5 s. Count-based verify
-    # keeps every buffer fixed-width and every exchange long-sized.)
-    ex = _materialize_index(
-        _shingle_index(df, n, text_col, id_col).repartition("id")
-    )
-    aggs = [
-        F.min(F.xxhash64(F.lit(i), F.col("g"))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    doc = ex.groupBy("id").agg(*aggs, F.count(F.lit(1)).alias("n_sh"))
-    doc = doc.localCheckpoint(eager=False)  # read by banding AND the size join
-    banded = _band_keys(doc, bands, r, lambda k: F.col(f"h{k}"))
-    cands = _bucket_pairs(banded, max_bucket_size)
+    ex, doc = _minhash_side(df, num_hashes, n, text_col, id_col)
+    cands = _bucket_pairs(_band_keys(doc, bands, num_hashes // bands), max_bucket_size)
     # exact verify on the candidate set only (the minhash index has no
     # hot-cap, so the count IS the exact intersection size); the shared
     # helper also semi-filters the index to candidate ids when the probed
@@ -637,8 +639,9 @@ def minhash_lsh_pairs_against(
 
     Each side is shingled and signed independently (same hash family, so
     bucket keys are comparable), then candidates come from an equi-join of
-    the two sides' (band, band-hash) buckets — never a cross join. The
-    per-side ``max_bucket_size`` guard bounds the join fan-out at
+    the two sides' (band, band-hash) buckets — never a cross join. A
+    per-side bucket census (:func:`_bucket_pairs`) drops buckets above
+    ``max_bucket_size`` on either side, bounding the join fan-out at
     ``max_bucket_size²`` rows per degenerate bucket. Candidates are verified
     with exact shingle-set Jaccard, so the output has no false positives;
     like the self-join variant, banding can miss pairs only marginally above
@@ -654,40 +657,16 @@ def minhash_lsh_pairs_against(
     assert num_hashes % bands == 0
     r = num_hashes // bands
 
-    def _side(frame: DataFrame) -> "tuple[DataFrame, DataFrame]":
-        # per side: index materialized once (16 B/row, id-partitioned), then
-        # signatures + per-doc size in ONE HashAggregate (same hash family on
-        # both sides so bucket keys are comparable; count-based verify — see
-        # the self-join variant for why no shingle arrays are materialized)
-        ex = (
-            _shingle_index(frame, n, text_col, id_col)
-            .repartition("id")
-            .localCheckpoint(eager=False)
-        )
-        aggs = [
-            F.min(F.xxhash64(F.lit(i), F.col("g"))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
-        doc = ex.groupBy("id").agg(*aggs, F.count(F.lit(1)).alias("n_sh"))
-        return ex, doc.localCheckpoint(eager=False)
-
-    exp, docp = _side(probe)
-    exc, docc = _side(corpus)
-    bp = _band_keys(docp, bands, r, lambda k: F.col(f"h{k}"))
-    bc = _band_keys(docc, bands, r, lambda k: F.col(f"h{k}"))
-    # per-side bucket membership lists (one aggregation each, capped per
-    # side — the join fan-out stays bounded by max_bucket_size² per bucket),
-    # then pairs enumerate from the joined lists
-    pa = bp.groupBy("bh").agg(F.collect_list("id").alias("ia"))
-    pc = bc.groupBy("bh").agg(F.collect_list("id").alias("ib"))
-    if max_bucket_size is not None:
-        pa = pa.filter(F.size("ia") <= int(max_bucket_size))
-        pc = pc.filter(F.size("ib") <= int(max_bucket_size))
-    cands = (
-        pa.join(pc, on="bh")
-        .select(F.explode("ia").alias("probe_id"), "ib")
-        .select("probe_id", F.explode("ib").alias("corpus_id"))
-        .distinct()
+    # each side: index + signatures from the one builder (same hash family
+    # on both sides, so bucket keys are comparable)
+    exp, docp = _minhash_side(probe, num_hashes, n, text_col, id_col)
+    exc, docc = _minhash_side(corpus, num_hashes, n, text_col, id_col)
+    cands = _bucket_pairs(
+        _band_keys(docp, bands, r),
+        max_bucket_size,
+        left="probe_id",
+        right="corpus_id",
+        other=_band_keys(docc, bands, r),
     )
     # exact verify on candidates only: count co-occurring shingles across the
     # two materialized indexes — exchanges carry (probe_id, corpus_id, g)
@@ -775,73 +754,34 @@ def _simhash_candidates(
     id_col: str,
     max_bucket_size: "int | None",
     n_chunks: int,
+    max_hamming: int,
 ) -> DataFrame:
-    """Banded simhash candidate pairs: (id_a, id_b, sh_a, sh_b), id_a<id_b.
-    Shared by :func:`simhash_pairs` (popcount verify) and
-    :func:`simhash_verified_pairs` (exact-Jaccard verify)."""
+    """Banded simhash candidate pairs within ``max_hamming``:
+    (id_a, id_b, hamming), id_a<id_b. Shared by :func:`simhash_pairs`
+    (popcount verify) and :func:`simhash_verified_pairs` (exact-Jaccard
+    verify)."""
     if 64 % n_chunks != 0:
         raise ValueError(f"n_chunks must divide 64, got {n_chunks}")
     chunk_bits = 64 // n_chunks
     chunk_mask = (1 << chunk_bits) - 1
     sim_udf = F.pandas_udf(_simhash_batch, "long")
-    # one python stage computes the signatures; ONE aggregation per bucket
-    # key (chunk index folded into the key exactly: key = chunk·2^bits | ch
-    # — no hash, so no cross-chunk collisions) collects the members and
-    # enumerates pairs in-row from the sorted (id, sh) structs. No census
-    # join, no self-join, and the python UDF runs in exactly one plan
-    # branch, so no checkpoint is needed to stop Catalyst re-running it.
-    s = df.select(F.col(id_col).alias("id"), sim_udf(F.col(text_col)).alias("sh"))
-    chunks = s.select(
-        F.struct("id", "sh").alias("m"),
-        F.explode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("sh"), c * chunk_bits)
-                    .bitwiseAND(F.lit(chunk_mask))
-                    .bitwiseOR(F.lit(c << chunk_bits))
-                    .alias("bk")
-                    for c in range(n_chunks)
-                ]
-            )
-        ).alias("bk"),
+    # one python stage computes the signatures, materialized so the census
+    # and both self-join sides read it instead of re-running the UDF; the
+    # chunk index is folded into the bucket key exactly (key = chunk·2^bits
+    # | ch — no hash, so no cross-chunk collisions)
+    s = _materialize_index(
+        df.select(F.col(id_col).alias("id"), sim_udf(F.col(text_col)).alias("sh"))
     )
-    if max_bucket_size is None:
-        # uncapped (guard-off callers): stream pairs through a bucket
-        # self-join — a degenerate bucket's k²/2 pairs must never
-        # materialize as one in-row array. The signature column rides the
-        # join sides, so no extra lookup is needed. The python UDF feeds
-        # both sides: checkpoint so it runs once.
-        sc = chunks.select(F.col("m.id").alias("id"), F.col("m.sh").alias("sh"), "bk")
-        sc = sc.localCheckpoint(eager=False)
-        l = sc.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), "bk")
-        r = sc.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"), "bk")
-        return (
-            l.join(r, on="bk")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "sh_a", "sh_b")
-            .distinct()
-        )
-    buckets = chunks.groupBy("bk").agg(F.array_sort(F.collect_list("m")).alias("ms"))
-    keep = (F.size("ms") >= 2) & (F.size("ms") <= int(max_bucket_size))
-    pairs = F.flatten(
-        F.transform(
-            F.col("ms"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ms"), i + F.lit(2), F.size(F.col("ms"))),
-                lambda y: F.struct(
-                    x["id"].alias("id_a"),
-                    y["id"].alias("id_b"),
-                    x["sh"].alias("sh_a"),
-                    y["sh"].alias("sh_b"),
-                ),
-            ),
-        )
+    keys = ", ".join(
+        f"(shiftrightunsigned(sh, {c * chunk_bits}) & {chunk_mask}) | {c << chunk_bits}"
+        for c in range(n_chunks)
     )
+    banded = s.selectExpr("id", "sh", f"explode(array({keys})) AS bk")
+    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).alias("hamming")
     return (
-        buckets.filter(keep)
-        .select(F.explode(pairs).alias("p"))
-        .select("p.id_a", "p.id_b", "p.sh_a", "p.sh_b")
-        .distinct()
+        _bucket_pairs(banded, max_bucket_size, key="bk")
+        .select("id_a", "id_b", hamming)
+        .filter(F.col("hamming") <= max_hamming)
     )
 
 
@@ -865,12 +805,8 @@ def simhash_pairs(
     (byte-identical clusters belong to :func:`dedup_exact`).
     Output: id_a, id_b, hamming.
     """
-    cands = _simhash_candidates(df, text_col, id_col, max_bucket_size, n_chunks)
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (
-        cands.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+    return _simhash_candidates(
+        df, text_col, id_col, max_bucket_size, n_chunks, max_hamming
     )
 
 
@@ -906,22 +842,14 @@ def simhash_verified_pairs(
     Output: id_a, id_b (a<b), jaccard_e4.
     """
     thr = int(threshold * 10000)
-    cands = _simhash_candidates(df, text_col, id_col, max_bucket_size, n_chunks)
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    cand_ids = (
-        cands.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b")
-    )
+    cand_ids = _simhash_candidates(
+        df, text_col, id_col, max_bucket_size, n_chunks, max_hamming
+    ).select("id_a", "id_b")
     # exact verify on the candidate set only (same shape as minhash_lsh,
     # via the shared helper — no hot-cap, so the count is exact; the index
     # is semi-filtered to candidate ids when the probed candidate count is
     # bounded)
-    ex = (
-        _shingle_index(df, n, text_col, id_col)
-        .repartition("id")
-        .localCheckpoint(eager=False)
-    )
+    ex = _materialize_index(_shingle_index(df, n, text_col, id_col).repartition("id"))
     pairs = _verified_pair_counts(
         cand_ids, ex, ex, prefilter_max_pairs=_verify_prefilter_bound(df)
     )

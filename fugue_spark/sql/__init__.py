@@ -1536,6 +1536,9 @@ def fsql(
         v = all_vars[name]
         return str(v)
 
+    # the script outside {{...}} placeholders: a path variable it only
+    # templates in is a string, never a source to load
+    untemplated = _JINJA_RE.sub(" ", script)
     script = _JINJA_RE.sub(sub, script)
     ex = _Executor(
         spark, functions, yield_dir, ignore_case=fsql_ignore_case, dialect=dialect
@@ -1559,12 +1562,14 @@ def fsql(
         elif (
             isinstance(val, str)
             and val.endswith((".parquet", ".csv", ".json", ".csv.gz", ".json.gz"))
+            and re.search(rf"\b{re.escape(name)}\b", untemplated, re.IGNORECASE)
             and os.path.exists(val)
         ):
-            # an explicit data-file path that exists: load it (raising on
-            # a real load error). A not-yet-existing path stays a string —
-            # it may be a SAVE destination — and an arbitrary string that
-            # merely names some existing dir is never loaded.
+            # an explicit data-file path that exists and that the script
+            # names as a source: load it (raising on a real load error). A
+            # not-yet-existing path stays a string — it may be a SAVE
+            # destination — and an arbitrary string that merely names some
+            # existing dir is never loaded.
             ex.vars[name] = fa.load(spark, val)
     for stmt in split_statements(script, ignore_case=fsql_ignore_case):
         ex.run_statement(stmt)

@@ -88,6 +88,7 @@ def p6_phases(spark, sf_dir, passes):
         _bucket_pairs,
         _jaccard_from_counts,
         _materialize_index,
+        _minhash_doc,
         _shingle_index,
     )
 
@@ -103,17 +104,14 @@ def p6_phases(spark, sf_dir, passes):
 
     num_hashes, bands = 64, 16
     r = num_hashes // bands
-    aggs = [F.min(F.xxhash64(F.lit(i), F.col("g"))).alias(f"h{i}")
-            for i in range(num_hashes)]
 
-    _time(lambda: _noop(ex.groupBy("id").agg(*aggs, F.count(F.lit(1)).alias("n_sh"))),
+    _time(lambda: _noop(_minhash_doc(ex, num_hashes)),
           "p6.2 doc agg (64 minhash + n_sh) from ckpt", passes)
 
-    doc = (ex.groupBy("id").agg(*aggs, F.count(F.lit(1)).alias("n_sh"))
-           .localCheckpoint(eager=False))
+    doc = _materialize_index(_minhash_doc(ex, num_hashes))
     _noop(doc)
 
-    banded = _band_keys(doc, bands, r, lambda k: F.col(f"h{k}"))
+    banded = _band_keys(doc, bands, r)
     _time(lambda: _noop(banded), "p6.3 banding projection", passes)
     _time(lambda: _noop(_bucket_pairs(banded, 1000)),
           "p6.3b + bucket pairs agg", passes)

@@ -114,7 +114,7 @@ def main() -> None:
     for name, mk in arms.items():
         doc = ex.groupBy("id").agg(*mk(), F.count(F.lit(1)).alias("n_sh"))
         doc = doc.localCheckpoint(eager=False)
-        banded = D._band_keys(doc, bands, r, lambda k: F.col(f"h{k}"))
+        banded = D._band_keys(doc, bands, r)
         cands = D._bucket_pairs(banded, 1000)
         n_cand = cands.count()
         pairs = D._verified_pair_counts(cands, ex, ex, prefilter_max_pairs=4_000_000)

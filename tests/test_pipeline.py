@@ -350,7 +350,8 @@ def test_hot_shingle_cap_bounds_candidates(spark):
 
 
 def test_minhash_bucket_cap(spark):
-    """Band buckets above max_bucket_size are dropped before the self-join."""
+    """Band buckets above max_bucket_size are dropped before the self-join,
+    and the cap is inclusive for minhash and simhash alike."""
     base = "alpha beta gamma delta epsilon zeta eta theta kappa"
     rows = [[i, base + f" tail{i}"] for i in range(6)]
     df = spark.createDataFrame(rows, parse_schema("doc_id:long,text:str"))
@@ -358,6 +359,30 @@ def test_minhash_bucket_cap(spark):
     assert full.count() > 0
     capped = minhash_lsh_pairs(df, threshold=0.3, max_bucket_size=1)
     assert capped.count() == 0  # the whole cluster sits in >1-doc buckets
+
+    # boundary: identical texts put a 4-doc cluster in 4-member buckets and
+    # a 2-doc cluster in 2-member buckets (every band/chunk of identical
+    # texts matches). A cap equal to the largest bucket keeps its pairs,
+    # one less drops them, and a cap at or above the largest bucket equals
+    # max_bucket_size=None
+    other = "spark shuffles partitions across executors while the driver plans"
+    rows = [[i, base] for i in range(4)] + [[10, other], [11, other]]
+    df = spark.createDataFrame(rows, parse_schema("doc_id:long,text:str"))
+    big = {(i, j) for i in range(4) for j in range(i + 1, 4)}
+
+    def mh(cap):
+        out = minhash_lsh_pairs(df, threshold=0.3, max_bucket_size=cap)
+        return {(r.id_a, r.id_b) for r in out.collect()}
+
+    def sh(cap):
+        out = simhash_pairs(df, max_hamming=0, max_bucket_size=cap)
+        return {(r.id_a, r.id_b) for r in out.collect()}
+
+    for pairs in (mh, sh):
+        assert pairs(None) == big | {(10, 11)}
+        assert pairs(4) == pairs(5) == pairs(None)
+        assert pairs(3) == pairs(2) == {(10, 11)}
+        assert pairs(1) == set()
 
 
 def test_verify_prefilter_exactness_and_bound(spark, docs):
@@ -1275,6 +1300,47 @@ def test_cross_corpus_neardup_bucket_cap(spark):
         minhash_lsh_pairs_against(probe, corpus, threshold=0.3, max_bucket_size=1).count()
         == 0
     )
+
+    # cap boundary, per side: 2 probe × 3 corpus copies of one text plus a
+    # 1 × 1 match of another. A cap equal to the larger side's bucket (3)
+    # keeps all pairs, like max_bucket_size=None; one less drops the 2 × 3
+    # bucket, and the 1 × 1 bucket survives every cap ≥ 1
+    other = "spark shuffles partitions across executors while the driver plans"
+    probe = spark.createDataFrame(
+        [[0, base], [1, base], [2, other]], parse_schema("doc_id:long,text:str")
+    )
+    corpus = spark.createDataFrame(
+        [[100, base], [101, base], [102, base], [103, other]],
+        parse_schema("doc_id:long,text:str"),
+    )
+
+    def pairs(cap):
+        got = minhash_lsh_pairs_against(probe, corpus, threshold=0.3, max_bucket_size=cap)
+        return {(r.probe_id, r.corpus_id) for r in got.collect()}
+
+    full = {(p, c) for p in (0, 1) for c in (100, 101, 102)} | {(2, 103)}
+    assert pairs(None) == full
+    assert pairs(3) == pairs(4) == full
+    assert pairs(2) == pairs(1) == {(2, 103)}
+
+
+def test_lsh_families_plan_fixed_width(spark, docs):
+    """The three LSH/simhash families pair buckets with a count(*) census
+    and a bucket join: their executed plans hold no collect_list-style
+    aggregation (ObjectHashAggregate, SortAggregate) and no interpreted
+    lambda."""
+    from fugue_spark.pipeline import minhash_lsh_pairs_against
+
+    probe = docs.filter(F.col("doc_id") % 5 == 0)
+    for out in (
+        minhash_lsh_pairs(docs, threshold=0.5),
+        simhash_pairs(docs, max_hamming=12),
+        minhash_lsh_pairs_against(probe, docs, threshold=0.5),
+    ):
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        for op in ("ObjectHashAggregate", "SortAggregate", "lambdafunction"):
+            assert op not in plan, (op, plan)
 
 
 def test_gopher_flags_planted(spark):

@@ -308,7 +308,8 @@ def test_yield_file(spark, tmp_path):
 def test_yield_file_reuse_and_string_source_rules(spark, tmp_path):
     """YieldedFile results load as sources in a later script; an arbitrary
     string that names an existing dir is NOT loaded; a not-yet-existing
-    .parquet string stays a string (it may be a SAVE destination); a
+    .parquet string stays a string (it may be a SAVE destination); an
+    existing data-file string used only as a {{template}} is never loaded; a
     tagged YieldedFile that fails to load raises instead of passing."""
     from fugue_spark.sql import YieldedFile
 
@@ -341,6 +342,18 @@ def test_yield_file_reuse_and_string_source_rules(spark, tmp_path):
         dest=dest,
     )
     assert rows(spark.read.parquet(dest)) == [(3,)]
+
+    # template-only path: an existing but unreadable .parquet file that the
+    # script names only as {{src}} is substituted, never loaded as a source
+    bad = tmp_path / "not_parquet.parquet"
+    bad.write_text("not a parquet file")
+    res5 = fsql(
+        "a = CREATE [[5]] SCHEMA x:long\n"
+        "SELECT x, '{{src}}' AS p FROM a\nYIELD DATAFRAME AS out",
+        spark=spark,
+        src=str(bad),
+    )
+    assert rows(res5["out"]) == [(5, str(bad))]
 
     # a broken tagged path is a real error, not a silent pass
     with pytest.raises(Exception):
