@@ -47,7 +47,7 @@ TABLES = (
 # MULTI-row-group scan-bound tables (the sf1/sf10 inputs: 13-489 row
 # groups) are deliberately NOT cached (r10): the native parquet scan
 # already parallelizes, and the measured comparison
-# (scripts/scan_experiment.py, clean window, sf10) showed the
+# (OPTIMIZATION_r10.md, methodology notes; clean window, sf10) showed the
 # InMemoryColumnar posture is BIMODAL under heap pressure — q1 cached
 # sampled 2.4s best / 27-68s under GC, while the native multi-split scan
 # held a tight 1.90-2.26s and BEAT the best cached sample. Skipping the

@@ -39,6 +39,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from fugue_spark.session import plan_fits
+
 
 def _materialize_index(df: DataFrame) -> DataFrame:
     """Lazily materialize a corpus-sized index that several plan branches
@@ -106,7 +108,7 @@ def _shingles(text_col: str, n: int) -> F.Column:
     instead of collapse-whitespace-then-split-on-space: token boundaries
     are identical for any separator class (maximal runs of non-separator
     chars), and dropping the regexp_replace pass measured ~0.4 s of the
-    sf10 corpus scan (scripts/shingle_variants.py v6 vs v7)."""
+    sf10 corpus scan (OPTIMIZATION_r10.md §6)."""
     words = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     hw = F.transform(words, lambda w: F.xxhash64(w))
     k = F.size(words) - (n - 1)
@@ -150,7 +152,7 @@ def _shingle_index(
     every consumer of the array — ``size()`` + the generator input cost
     2× the chain, and an explode whose generator input is the raw chain
     (no other reference) re-evaluates it per OUTPUT row. Measured at sf10
-    (scripts/shingle_variants.py): chain once 2.6 s; size+explode of the
+    (OPTIMIZATION_r10.md §6): chain once 2.6 s; size+explode of the
     inline chain 7.1 s; explode-only inline 21 s; struct-carrying explode
     111 s; size+explode over the materialized arrays **0.09 s**. The
     arrays are the same bytes as the exploded index (~8 B/gram), so the
@@ -357,62 +359,47 @@ _VERIFY_PREFILTER_MAX_PAIRS = 4_000_000
 # and the probe's fixed cost (checkpoint + count job + broadcast build)
 # exceeds what the joins save (measured: p6@sf0.1 — est 1.6 MiB — pays
 # +0.15 s for the probe; p6@sf10 — est ≈ 230 MiB — saves 1.5-2 s, p38@sf10
-# 6+ s). Unknown estimates read as 8 EiB and prefilter — fail-safe at
-# scale, same convention as the save_df clustering bound.
+# 6+ s). plan_fits reads an unknown estimate as large, so such inputs
+# prefilter — fail-safe at scale, same rule as the save_df clustering bound.
 _VERIFY_PREFILTER_MIN_INPUT_BYTES = 64 << 20
-
-
-def _est_input_bytes(df: DataFrame) -> "int | None":
-    """Optimizer pre-execution size estimate (column-pruned, no job)."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # noqa: BLE001 - estimate is best-effort
-        return None
-
-
-def _verify_prefilter_bound(df: DataFrame) -> "int | None":
-    """Scale-adaptive prefilter decision for :func:`_verified_pair_counts`:
-    the candidate-pair bound when ``df`` (the corpus input) is estimated
-    large enough for the prefilter to pay, else ``None`` (skip)."""
-    est = _est_input_bytes(df)
-    if est is None or est > _VERIFY_PREFILTER_MIN_INPUT_BYTES:
-        return _VERIFY_PREFILTER_MAX_PAIRS
-    return None
 
 
 def _verified_pair_counts(
     cands: DataFrame,
     ex_a: DataFrame,
     ex_b: DataFrame,
+    corpus: DataFrame,
     left: str = "id_a",
     right: str = "id_b",
-    prefilter_max_pairs: "int | None" = _VERIFY_PREFILTER_MAX_PAIRS,
 ) -> DataFrame:
     """COUNT(*)-based exact verify shared by the LSH/simhash families:
     restrict the inverted index(es) to candidate pairs and count the
     co-occurring shingles — fixed-width aggregation buffers, long-sized
     exchanges, never shingle arrays.
 
-    Runtime specialization (the AQE trade, same as p5's hot probe): the
-    candidate frame is materialized (its lazy checkpoint is read again by
-    the first verify join) and probed with ONE bounded driver job — a
+    Runtime specialization (the AQE trade, same as p5's hot probe): when
+    the optimizer estimate of the ``corpus`` input does not fit
+    ``_VERIFY_PREFILTER_MIN_INPUT_BYTES``, the candidate frame is
+    materialized (its lazy checkpoint is read again by the first verify
+    join) and probed with ONE bounded driver job — a
     ``limit(bound+1).count()``, so an over-bound candidate set (the
     pathological dup-rate regime) stops the probe after bound+1 rows
     instead of materializing every pair. When bounded by
-    ``prefilter_max_pairs``, each index side is semi-filtered to the
+    ``_VERIFY_PREFILTER_MAX_PAIRS``, each index side is semi-filtered to the
     candidate ids through a broadcast BEFORE the verify joins. The indexes
     are corpus-sized (every doc × every shingle) while candidates are
     usually metadata-sized, so this turns the (right, g) exchange of the
     full index into an exchange of only candidate docs' rows — measured at
-    sf10 (scripts/r10b_experiments.py E3): verify 2.8-3.3 s → 2.2 s with
+    sf10 (OPTIMIZATION_r10.md §8): verify 2.8-3.3 s → 2.2 s with
     25k candidate pairs against an 80M-row index. A semi-join on the join
     key never changes inner-join results, so the output is exact either
     way; above the bound the broadcast is skipped (never an unbounded
     driver-side set).
     """
-    if prefilter_max_pairs:
+    if not plan_fits(corpus, _VERIFY_PREFILTER_MIN_INPUT_BYTES):
+        bound = _VERIFY_PREFILTER_MAX_PAIRS
         cands = cands.localCheckpoint(eager=False)
-        if cands.limit(prefilter_max_pairs + 1).count() <= prefilter_max_pairs:
+        if cands.limit(bound + 1).count() <= bound:
             ids_a = cands.select(F.col(left).alias("id"))
             ids_b = cands.select(F.col(right).alias("id"))
             if ex_a is ex_b:
@@ -590,9 +577,7 @@ def minhash_lsh_pairs(
     # hot-cap, so the count IS the exact intersection size); the shared
     # helper also semi-filters the index to candidate ids when the probed
     # candidate count is bounded — see _verified_pair_counts
-    pairs = _verified_pair_counts(
-        cands, ex, ex, prefilter_max_pairs=_verify_prefilter_bound(df)
-    )
+    pairs = _verified_pair_counts(cands, ex, ex, df)
     return _jaccard_from_counts(pairs, doc.select("id", "n_sh"), int(threshold * 10000))
 
 
@@ -674,8 +659,7 @@ def minhash_lsh_pairs_against(
     # candidate count is bounded (see _verified_pair_counts — the corpus
     # index is the 100-TB side, the matched ids are metadata-sized)
     pairs = _verified_pair_counts(
-        cands, exp, exc, left="probe_id", right="corpus_id",
-        prefilter_max_pairs=_verify_prefilter_bound(corpus),
+        cands, exp, exc, corpus, left="probe_id", right="corpus_id"
     )
     return _jaccard_from_counts(
         pairs,
@@ -850,9 +834,7 @@ def simhash_verified_pairs(
     # is semi-filtered to candidate ids when the probed candidate count is
     # bounded)
     ex = _materialize_index(_shingle_index(df, n, text_col, id_col).repartition("id"))
-    pairs = _verified_pair_counts(
-        cand_ids, ex, ex, prefilter_max_pairs=_verify_prefilter_bound(df)
-    )
+    pairs = _verified_pair_counts(cand_ids, ex, ex, df)
     # sizes come from the UNFILTERED index: n_sh is each doc's full
     # shingle-set size, independent of the candidate prefilter
     sizes = ex.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from fugue_spark.session import plan_fits
+
 __all__ = [
     "with_token_stats",
     "with_quality_score",
@@ -654,6 +656,18 @@ def tfidf_doc_scores(
     )
 
 
+# One partition's sort budget: a global running sum over an input whose
+# optimizer estimate fits it runs as one single-partition window, because
+# the hierarchical plan's 3 extra jobs never amortize below this size.
+_SINGLE_PARTITION_SORT_BYTES = 128 << 20
+
+# select_until_budget keeps at most budget // min(size) + 1 rows; up to this
+# bound the candidates come from a per-partition top-K whose merge runs in
+# ONE partition, so the bound caps that partition at 5M rows. Above it the
+# selection falls back to the global running sum.
+_BUDGET_TOPK_MAX_ROWS = 5_000_000
+
+
 def assign_pack_bins(
     df: DataFrame,
     budget: int,
@@ -678,7 +692,10 @@ def assign_pack_bins(
     per shard) become exclusive shard offsets on the driver, and each
     shard then runs its own window prefix-sum plus its offset — all
     shards sort and scan in parallel, and the only serial state is one
-    long per shard. ``order_by`` should be unique (ties at a range-shard
+    long per shard. An input whose optimizer estimate fits
+    ``_SINGLE_PARTITION_SORT_BYTES`` (128 MiB, below which the two-pass
+    constant never amortizes) uses the plain single-partition window
+    instead. ``order_by`` should be unique (ties at a range-shard
     boundary have engine-arbitrary relative order, as in any engine).
 
     Output: input columns + ``pack_bin`` (long).
@@ -711,11 +728,11 @@ def _exclusive_prefix(
 
     ADAPTIVE small-input path: when Catalyst's size estimate for the
     (already column-pruned) input fits one partition's sort budget
-    (``fugue.spark.global_order.single_partition_bytes``, default 128 MB),
-    the hierarchical machinery is skipped for the plain single-partition
-    global window DuckDB would use — the two-pass constant (range-sample
-    + checkpoint + offsets collect, 3 extra jobs) never amortizes below
-    that size, and a 128 MB in-partition sort is cheap. Above the
+    (``_SINGLE_PARTITION_SORT_BYTES``, 128 MiB), the hierarchical
+    machinery is skipped for the plain single-partition global window
+    DuckDB would use — the two-pass constant (range-sample + checkpoint
+    + offsets collect, 3 extra jobs) never amortizes below that size,
+    and a 128 MiB in-partition sort is cheap. Above the
     threshold — including any genuinely large corpus, where the estimate
     is the parquet scan size — the hierarchical plan is unchanged.
     """
@@ -728,24 +745,14 @@ def _exclusive_prefix(
         )
         return df, F.coalesce(F.sum(F.col(size_col)).over(w), F.lit(0)), cols
 
-    spark = df.sparkSession
-    threshold = int(
-        spark.conf.get(
-            "fugue.spark.global_order.single_partition_bytes", str(128 << 20)
-        )
-    )
-    try:
-        est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-    except Exception:
-        est = None
-    if est is not None and est <= threshold:
+    if plan_fits(df, _SINGLE_PARTITION_SORT_BYTES):
         w = (
             Window.orderBy(F.col(order_by))
             .rowsBetween(Window.unboundedPreceding, -1)
         )
         return df, F.coalesce(F.sum(F.col(size_col)).over(w), F.lit(0)), cols
 
-    shards = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    shards = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
     # contiguous global ranges; shard id pinned by the checkpoint so the
     # totals pass and the window pass see identical shard boundaries
     rdf = (
@@ -793,7 +800,8 @@ def select_until_budget(
     group (e.g. per language); without it the kept set is first BOUNDED:
     every kept row contributes at least ``min(size_col)``, so at most
     ``budget // min + 1`` rows can ever be kept — when that bound is
-    modest (``fugue.spark.budget_select.topk_rows``, default 5M) the plan
+    modest (``_BUDGET_TOPK_MAX_ROWS``, 5M rows, which caps the one
+    partition that merges the top-K candidates) the plan
     is a per-partition top-K merge (``TakeOrderedAndProject`` — no global
     sort, NO shuffle of the data) followed by a window over just the K
     candidate rows. This is the right 100 TB plan whenever the budget
@@ -805,13 +813,9 @@ def select_until_budget(
     """
     budget = int(budget)
     if not by:
-        spark = df.sparkSession
-        cap = int(
-            spark.conf.get("fugue.spark.budget_select.topk_rows", str(5_000_000))
-        )
         # bounded control-plane read: one aggregated row
         m = df.agg(F.min(F.col(size_col))).collect()[0][0]
-        if m is not None and m > 0 and budget // int(m) + 1 <= cap:
+        if m is not None and m > 0 and budget // int(m) + 1 <= _BUDGET_TOPK_MAX_ROWS:
             k = budget // int(m) + 1
             cols = df.columns
             top = df.orderBy(F.col(order_by)).limit(k)

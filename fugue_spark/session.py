@@ -10,9 +10,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["get_spark", "configure_builder", "tune_for_input"]
+__all__ = ["get_spark", "configure_builder", "tune_for_input", "plan_fits"]
 
 _DEFAULTS = {
     # AQE: coalesce small shuffle partitions, split skewed ones, re-plan joins
@@ -59,6 +59,23 @@ SMALL_INPUT_BYTES = 64 * 1024 * 1024
 # every partition trivially cache-resident while still giving the scheduler
 # a handful of tasks to overlap.
 _SMALL_PARTITION_BYTES = 2 * 1024 * 1024
+
+
+def plan_fits(df: DataFrame, max_bytes: int) -> bool:
+    """True when Catalyst's size estimate for ``df`` is at most ``max_bytes``.
+
+    The estimate is read from the optimized (column-pruned) plan before
+    execution, so it costs no job. An unknown estimate counts as large:
+    the read can fail, and plans without statistics (e.g. RDD-backed
+    frames) report ``spark.sql.defaultSizeInBytes`` (Long.MaxValue), which
+    exceeds any threshold. Every plan-time size branch in the engine
+    decides through this one reading.
+    """
+    try:
+        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # noqa: BLE001 - estimate is best-effort
+        return False
+    return est <= max_bytes
 
 
 def _dir_bytes(path: str) -> int:

@@ -21,10 +21,16 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 
 from fugue_spark.schema import parse_schema
+from fugue_spark.session import plan_fits
 
 __all__ = ["load_df", "save_df", "infer_format"]
 
 _FORMATS = ("parquet", "csv", "json", "orc", "avro")
+
+# Target size of one partitioned-write output file: 128 MiB, the usual
+# parquet/HDFS block size. save_df pays the clustering shuffle only when the
+# frame may not fit files_per_partition files of this size.
+_TARGET_FILE_BYTES = 128 << 20
 
 
 def infer_format(path: str) -> str:
@@ -126,16 +132,12 @@ def save_df(
         # bounded by its scan/shuffle task count — which for an input this
         # small is of the same order as k — so the shuffle buys nothing.
         # The bound scales with DATA (estimate grows 100 TB-ward → always
-        # cluster), not with the local core count. Unknown estimates come
-        # back as 8 EiB and keep the clustered path — fail-safe. An EXPLICIT
-        # files_per_partition is a layout request (compact_dataset sizes its
-        # output through it) and always clusters.
-        threshold = int(params.pop("cluster_threshold_bytes", k * (128 << 20)))
-        try:
-            est_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        except Exception:  # noqa: BLE001 - estimate is best-effort
-            est_bytes = None
-        if explicit_layout or est_bytes is None or est_bytes > threshold:
+        # cluster), not with the local core count. plan_fits reads an
+        # unknown estimate as large, so such frames keep the clustered
+        # path — fail-safe. An EXPLICIT files_per_partition is a layout
+        # request (compact_dataset sizes its output through it) and always
+        # clusters.
+        if explicit_layout or not plan_fits(df, k * _TARGET_FILE_BYTES):
             exprs = [df[c] for c in partition_by]
             salt_cols = [f.name for f in df.schema.fields if hashable(f.dataType)]
             if k > 1 and salt_cols:

@@ -1117,16 +1117,14 @@ def transform(
         contiguous = False
         if spec.algo not in ("default", "hash"):
             df = apply_partition_spec(df, PartitionSpec(by=safe_keys, num=spec.num, algo=spec.algo))
-            use_apply = False
         else:
             # co-locate each key group via one hash exchange; groups are then
             # processed with an in-process pandas groupby inside mapInPandas.
             # This beats groupBy().applyInPandas by 10-50× when groups are
             # small: one Arrow stream per PARTITION instead of a JVM↔Python
-            # round trip per GROUP. (applyInPandas remains available via
-            # partition algo='hash' + engine internals for huge-group cases.)
-            # The count is pinned explicitly: AQE would otherwise coalesce by
-            # BYTE size, collapsing a python-cost-heavy stage onto one core.
+            # round trip per GROUP. The count is pinned explicitly: AQE
+            # would otherwise coalesce by BYTE size, collapsing a
+            # python-cost-heavy stage onto one core.
             num = spec.resolve_num(df)
             if num <= 0:
                 # python stages are CPU-bound: parallelism is core-bound, not
@@ -1156,15 +1154,6 @@ def transform(
             df = df.sortWithinPartitions(*sort_cols)
             presort = []  # already applied
             contiguous = True
-            use_apply = False
-
-        if use_apply:  # pragma: no cover - kept for parity experiments
-            def grouped_udf(pdf: pd.DataFrame) -> pd.DataFrame:
-                maybe_init()
-                kv = [pdf.iloc[0][k] for k in keys] if len(pdf) else [None] * len(keys)
-                return run_one(pdf, PartitionCursor(keys, kv, _partition_no()))
-
-            return df.groupBy(*keys).applyInPandas(grouped_udf, schema=out_schema)
 
         def run_raw(pdf: pd.DataFrame, cursor: PartitionCursor) -> Any:
             pdf = _sort_pandas(pdf, presort)

@@ -1,12 +1,14 @@
 """Capture .explain("formatted") output for named queries into plans/r10/.
 
-Usage: python scripts/capture_plans.py <suffix> [q1,q2,...] [sf_dir]
+Usage: python scripts/capture_plans.py <suffix> [q1,q2,...] [sf_dir] [out_dir]
 
   suffix: 'before' or 'after' (file name becomes <query>_<suffix>.txt)
   queries: comma list; default = every bench-tagged query
   sf_dir: default /root/testdata/sf0.1 (plan shape, not execution — explain
           only; AQE plans print isFinalPlan=false, which is fine: Exchange
           placement, join strategy, scan pushdown are all visible)
+  out_dir: default plans/r10 in this repo; pass another directory to diff
+           two checkouts without overwriting the committed plans
 
 The judge cannot run Spark: these files are the committed evidence for any
 plan claim in OPTIMIZATION_r10.md.
@@ -24,6 +26,9 @@ def main() -> None:
     suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
     names = sys.argv[2].split(",") if len(sys.argv) > 2 and sys.argv[2] else None
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
+    out_dir = sys.argv[4] if len(sys.argv) > 4 else os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r10"
+    )
 
     from fugue_spark.benchmarks import QUERIES
     from fugue_spark.session import get_spark, tune_for_input
@@ -35,9 +40,6 @@ def main() -> None:
     tune_for_input(spark, sf_dir)
     if names is None:
         names = [n for n, s in QUERIES.items() if s.bench]
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r10"
-    )
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         spec = QUERIES.get(name)

@@ -117,7 +117,7 @@ def main() -> None:
         banded = D._band_keys(doc, bands, r)
         cands = D._bucket_pairs(banded, 1000)
         n_cand = cands.count()
-        pairs = D._verified_pair_counts(cands, ex, ex, prefilter_max_pairs=4_000_000)
+        pairs = D._verified_pair_counts(cands, ex, ex, docs)
         out = {
             (row.id_a, row.id_b)
             for row in D._jaccard_from_counts(

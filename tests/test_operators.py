@@ -368,11 +368,14 @@ def test_save_modes(spark, tmp_path):
 def test_partitioned_save_clusters_only_above_size_threshold(
     spark, tmp_path, monkeypatch
 ):
-    # a parquet-BACKED frame: scans carry a real size estimate (RDD-backed
-    # frames report unknown and fail safe into the clustered path)
+    # a parquet-BACKED frame: scans carry a real size estimate; an
+    # RDD-backed copy of it reports unknown and fails safe into the
+    # clustered path
     base = os.path.join(str(tmp_path), "base.parquet")
     make_df(spark, [[i, i % 3] for i in range(60)], "a:long,b:int").write.parquet(base)
     df = fa.load(spark, base)
+    unknown = spark.createDataFrame(df.rdd, df.schema)
+    expected = [(i, i % 3) for i in range(60)]
 
     calls = []
     cls = type(df)  # the concrete (classic) DataFrame class, not the ABC
@@ -384,19 +387,18 @@ def test_partitioned_save_clusters_only_above_size_threshold(
 
     monkeypatch.setattr(cls, "repartition", spying)
 
-    # tiny estimate, default threshold: the clustering shuffle is skipped
+    def saved(name):
+        return sorted(rows(fa.load(spark, os.path.join(str(tmp_path), name))))
+
+    # tiny estimate: the clustering shuffle is skipped
     fa.save(df, os.path.join(str(tmp_path), "direct.parquet"), partition_by=["b"])
     assert calls == []
-    assert sorted(
-        rows(fa.load(spark, os.path.join(str(tmp_path), "direct.parquet")))
-    ) == [(i, i % 3) for i in range(60)]
+    assert saved("direct.parquet") == expected
 
-    # threshold forced to 0 = the cluster-scale posture: salted repartition
-    fa.save(
-        df, os.path.join(str(tmp_path), "forced.parquet"), partition_by=["b"],
-        cluster_threshold_bytes=0,
-    )
+    # unknown estimate = the cluster-scale posture: salted repartition
+    fa.save(unknown, os.path.join(str(tmp_path), "unknown.parquet"), partition_by=["b"])
     assert len(calls) == 1
+    assert saved("unknown.parquet") == expected
 
     # an EXPLICIT files_per_partition is a layout request and always clusters
     fa.save(
@@ -951,6 +953,17 @@ def test_tune_for_input_small_and_large(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
         spark.conf.set("spark.sql.shuffle.partitions", baseline)
+
+
+def test_plan_fits_reads_estimate_unknown_is_large(spark):
+    from fugue_spark.session import plan_fits
+
+    df = spark.range(1000)
+    est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    assert plan_fits(df, est)
+    assert not plan_fits(df, est - 1)
+    # an RDD-backed plan has no statistics: unknown counts as large
+    assert not plan_fits(spark.createDataFrame(df.rdd, df.schema), 1 << 62)
 
 
 def test_select_duplicate_output_names_rejected(spark):

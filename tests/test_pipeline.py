@@ -387,34 +387,22 @@ def test_minhash_bucket_cap(spark):
 
 def test_verify_prefilter_exactness_and_bound(spark, docs):
     """The verify-side candidate-id prefilter (r10) must be a pure plan
-    optimization: identical pairs with the prefilter forced on, forced off,
-    and under the adaptive bound; and the bound itself must engage only on
-    large (or unknown-size) inputs."""
-    from fugue_spark.pipeline import dedup as D
+    optimization: a small input (estimate far below 64 MiB) skips it, an
+    input of unknown size (an RDD-backed plan) takes it, and both yield
+    identical pairs."""
 
-    base = minhash_lsh_pairs(docs, threshold=0.5, num_hashes=64, bands=16)
-    want = {(r.id_a, r.id_b, r.jaccard_e4) for r in base.collect()}
+    def run(frame):
+        out = minhash_lsh_pairs(frame, threshold=0.5, num_hashes=64, bands=16)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        return {(r.id_a, r.id_b, r.jaccard_e4) for r in out.collect()}, plan
+
+    want, small_plan = run(docs)  # sf0.001
     assert len(want) > 0
-
-    # force the prefilter ON regardless of input size, via the helper the
-    # operator routes through
-    orig = D._verify_prefilter_bound
-    try:
-        D._verify_prefilter_bound = lambda df: D._VERIFY_PREFILTER_MAX_PAIRS
-        forced_on = minhash_lsh_pairs(docs, threshold=0.5, num_hashes=64, bands=16)
-        assert {(r.id_a, r.id_b, r.jaccard_e4) for r in forced_on.collect()} == want
-        D._verify_prefilter_bound = lambda df: None
-        forced_off = minhash_lsh_pairs(docs, threshold=0.5, num_hashes=64, bands=16)
-        assert {(r.id_a, r.id_b, r.jaccard_e4) for r in forced_off.collect()} == want
-    finally:
-        D._verify_prefilter_bound = orig
-
-    # adaptive bound: tiny inputs skip (None); unknown estimates (an
-    # RDD-backed plan reports Long.MaxValue) engage — fail-safe at scale
-    assert D._verify_prefilter_bound(docs) is None  # sf0.001 ≪ 64 MiB
-    spark_s = docs.sparkSession
-    unknown = spark_s.createDataFrame(docs.rdd, docs.schema)  # RDD-backed plan
-    assert D._verify_prefilter_bound(unknown) == D._VERIFY_PREFILTER_MAX_PAIRS
+    # the prefilter is the only broadcast-hinted join in the plan
+    assert "strategy=broadcast" not in small_plan
+    got, unknown_plan = run(spark.createDataFrame(docs.rdd, docs.schema))
+    assert "strategy=broadcast" in unknown_plan
+    assert got == want
 
 
 def test_simhash_batch_deterministic_and_vectorized(spark):
@@ -543,26 +531,21 @@ def test_assign_pack_bins_global_hierarchical(spark):
         expect.append(run // 16)
         run += t
     assert out.pack_bin.tolist() == expect
-    # at this size the adaptive path legitimately uses the plain global
-    # window (the input fits one partition's sort budget); force the
-    # hierarchical plan to assert its shape — multi-shard: the window runs
-    # per __shard__ partition (the range exchange itself sits behind the
-    # pinned checkpoint), never over a single global partition
-    key = "fugue.spark.global_order.single_partition_bytes"
-    spark.conf.set(key, "0")
-    try:
-        plan = assign_pack_bins(df, budget=16, token_col="tok", order_by="i")
-        explained = plan._jdf.queryExecution().executedPlan().toString()
-        assert "hashpartitioning(__shard__" in explained
-        assert "SinglePartition" not in explained
-        hier = plan.toPandas().sort_values("i").reset_index(drop=True)
-        assert hier.pack_bin.tolist() == expect
-    finally:
-        spark.conf.unset(key)
-    # and the adaptive default on a small input IS the single window
+    # at this size the adaptive path uses the plain single global window
     plan = assign_pack_bins(df, budget=16, token_col="tok", order_by="i")
     explained = plan._jdf.queryExecution().executedPlan().toString()
     assert "__shard__" not in explained
+    # an RDD-backed frame has no size estimate, so it takes the hierarchical
+    # plan — multi-shard: the window runs per __shard__ partition (the range
+    # exchange itself sits behind the pinned checkpoint), never over a
+    # single global partition
+    unknown = spark.createDataFrame(df.rdd, df.schema)
+    plan = assign_pack_bins(unknown, budget=16, token_col="tok", order_by="i")
+    explained = plan._jdf.queryExecution().executedPlan().toString()
+    assert "hashpartitioning(__shard__" in explained
+    assert "SinglePartition" not in explained
+    hier = plan.toPandas().sort_values("i").reset_index(drop=True)
+    assert hier.pack_bin.tolist() == expect
 
 
 def test_dedup_near_score_survivor(spark):
@@ -1726,39 +1709,43 @@ def test_temperature_mix_reserved_names(spark):
 
 def test_select_until_budget_topk_and_fallback_agree(spark):
     """The bounded top-K plan (budget // min_size + 1 candidates, no global
-    shuffle) and the hierarchical two-pass must select the identical set;
-    the adaptive single-window path (small input estimate) likewise."""
+    shuffle), the adaptive single-window path (small input estimate) and
+    the hierarchical two-pass (unknown estimate) must each select the
+    pandas reference set."""
     import pandas as pd
 
     from fugue_spark.pipeline import select_until_budget
 
     rng_rows = [(i, (i * 37) % 90 + 10, (i * 17) % 1000000) for i in range(3000)]
     pdf = pd.DataFrame(rng_rows, columns=["doc_id", "n_tok", "ord"])
-    df = spark.createDataFrame(pdf)
 
-    def run():
-        out = select_until_budget(df, 5000, "n_tok", "ord")
-        return sorted(r.doc_id for r in out.collect())
+    def ref(p):
+        p = p.sort_values("ord")
+        return sorted(p[p.n_tok.cumsum() <= 5000].doc_id.tolist())
 
-    base = run()
-    assert len(base) > 0
-    # force the hierarchical fallback (top-K cap 0, single-window bytes 0)
-    spark.conf.set("fugue.spark.budget_select.topk_rows", "0")
-    spark.conf.set("fugue.spark.global_order.single_partition_bytes", "0")
-    try:
-        assert run() == base
-    finally:
-        spark.conf.unset("fugue.spark.budget_select.topk_rows")
-        spark.conf.unset("fugue.spark.global_order.single_partition_bytes")
-    # non-positive sizes must refuse the top-K bound (falls back, still right)
+    def run(frame):
+        out = select_until_budget(frame, 5000, "n_tok", "ord")
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        return sorted(r.doc_id for r in out.collect()), plan
+
+    # positive sizes bound the kept rows: the top-K plan
+    got, plan = run(spark.createDataFrame(pdf))
+    assert "TakeOrderedAndProject" in plan
+    assert len(got) > 0
+    assert got == ref(pdf)
+    # a non-positive size refuses the top-K bound; the small input then
+    # takes the single global window...
     pdf2 = pdf.copy()
     pdf2.loc[0, "n_tok"] = 0
     df2 = spark.createDataFrame(pdf2)
-    out2 = select_until_budget(df2, 5000, "n_tok", "ord")
-    # pandas reference
-    ref = pdf2.sort_values("ord")
-    ref = ref[ref.n_tok.cumsum() <= 5000]
-    assert sorted(r.doc_id for r in out2.collect()) == sorted(ref.doc_id.tolist())
+    got, plan = run(df2)
+    assert "TakeOrderedAndProject" not in plan
+    assert "__shard__" not in plan
+    assert got == ref(pdf2)
+    # ...and an RDD-backed frame (unknown estimate) the hierarchical two-pass
+    got, plan = run(spark.createDataFrame(df2.rdd, df2.schema))
+    assert "__shard__" in plan
+    assert got == ref(pdf2)
 
 
 def test_select_until_budget_topk_plan_has_no_exchange(spark):
