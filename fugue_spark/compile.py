@@ -96,11 +96,63 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-__all__ = ["TraceError", "try_compile_aggregation", "try_compile_cotransform"]
+__all__ = [
+    "TraceError",
+    "compile_or_fallback",
+    "try_compile_aggregation",
+    "try_compile_cotransform",
+]
 
 
 class TraceError(ValueError):
     """The function is not expressible as a Catalyst aggregation."""
+
+
+def compile_or_fallback(
+    mode: "bool | str | None",
+    attempt: "Callable[[bool | str], DataFrame]",
+    fallback: str,
+) -> "DataFrame | None":
+    """The compile-or-fall-back ladder shared by ``transform`` and
+    ``cotransform``.
+
+    ``mode`` is the caller's ``compile=`` argument: None means auto unless
+    the env kill-switch ``FUGUE_SPARK_AUTO_COMPILE=0`` is set (read per
+    call so tests and operators can flip it at runtime). ``attempt(mode)``
+    returns the compiled plan or raises. Returns None when the caller must
+    run its ``fallback`` Python engine instead: compile is off, or the
+    function is untraceable (a TraceError, re-raised under ``"strict"``).
+    Any other error is a compiler defect, not an untraceable function: it
+    is raised when the user asked for compilation (``True``/``"strict"``);
+    under auto it warns — a silent fallback would hide tracer regressions —
+    and falls back, since the Python engine must always be able to run
+    the call.
+    """
+    import os
+
+    if mode is None:
+        off = os.environ.get("FUGUE_SPARK_AUTO_COMPILE", "1").lower()
+        mode = False if off in ("0", "false", "no") else "auto"
+    if not mode:
+        return None
+    try:
+        return attempt(mode)
+    except TraceError:
+        if mode == "strict":
+            raise
+    except Exception as exc:
+        if mode == "strict" or mode is True:
+            raise
+        import warnings
+
+        warnings.warn(
+            "fugue_spark auto-compile failed unexpectedly "
+            f"({type(exc).__name__}: {exc}); falling back to the "
+            f"{fallback} execution path",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+    return None
 
 
 _DTYPES = {

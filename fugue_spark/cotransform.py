@@ -6,10 +6,12 @@ The reference implements zip by pickling each group into blobs and unioning
 Fugue must stay backend-agnostic. The Spark-native execution here is a
 tagged union: every input is projected onto the superset schema (payload
 columns prefixed per input, NULL elsewhere), unioned, hash-exchanged ONCE
-on the keys, and each key group is split back into per-input pandas frames
-inside mapInPandas. Versus cogroup().applyInPandas this saves a JVM↔Python
-round trip per group — an order of magnitude on small groups — and it
-generalizes to N inputs with the same single shuffle.
+on the keys, and inside mapInArrow each key group is split back into
+per-input frames by the grouped map engine that ``transform`` with
+``partition.by`` also runs (``transform._map_groups``). Versus
+cogroup().applyInPandas this saves a JVM↔Python round trip per group — an
+order of magnitude on small groups — and it generalizes to N inputs with
+the same single shuffle.
 
 ``how`` ∈ inner|left_outer|right_outer|full_outer|cross controls which key
 groups are emitted (reference zip semantics, execution_engine.py:1007-1029);
@@ -21,49 +23,34 @@ from __future__ import annotations
 import inspect
 from typing import Any, Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from fugue_spark.partition import PartitionSpec
+from fugue_spark.partition import PartitionSpec, _nan_safe_key_exprs
 from fugue_spark.schema import parse_schema
-from fugue_spark.transform import (
-    PartitionCursor,
-    _ArrowResultBatcher,
-    _arrow_group_bounds,
-    _group_bounds,
-    _group_frame_maker,
-    _nan_safe_key_exprs,
-    _table_to_pandas,
-)
+from fugue_spark.transform import PartitionCursor, _map_groups
 
 __all__ = ["cotransform"]
 
 _HOWS = ("inner", "left_outer", "right_outer", "full_outer", "cross")
 
 
-_NO_KV: "list | None" = None  # sentinel: function takes no cursor, skip kv work
-
-
-def _union_cotransform(
-    dfs, keys, run, out_schema, wants_kv=True, side_forms=None, presort=(), how="full_outer"
-):
+def _union_cotransform(dfs, keys, run, out_schema, wants_cursor, side_forms, presort, how):
     """Zip N dataframes as a tagged union: every input is projected onto the
     superset schema (its payload columns prefixed, others NULL), unioned,
-    and hash-exchanged ONCE on the keys; inside mapInArrow each key group
-    splits by tag back into per-input frames. One shuffle, one Arrow stream
-    per partition — beats cogroup().applyInPandas by an order of magnitude
-    when groups are small (no JVM↔Python round trip per group).
+    and hash-exchanged ONCE on the keys; the grouped map engine
+    (transform._map_groups) then splits each key group by tag back into
+    per-input frames. One shuffle, one Arrow stream per partition — beats
+    cogroup().applyInPandas by an order of magnitude when groups are small
+    (no JVM↔Python round trip per group).
 
     ``side_forms[i]`` ∈ {'pd','pa'}: a ``pa.Table``-annotated side skips the
     pandas conversion entirely — its groups are zero-copy ``Table.slice``
-    views of the partition's Arrow stream (the same win as transform's
-    arrow fast path, q20 vs q11). ``presort`` is applied JVM-side inside
-    the single partition sort (per-side column resolution via a CASE over
-    the tag), so no python-side sort runs per group."""
+    views of the partition's Arrow stream (q21 vs q12). ``presort`` is
+    applied JVM-side inside the engine's single partition sort (per-side
+    column resolution via a CASE over the tag), so no python-side sort runs
+    per group."""
     cross = len(keys) == 0
-    side_forms = side_forms or ["pd"] * len(dfs)
     payloads = [[c for c in d.columns if c not in keys] for d in dfs]
     if cross:
         # whole-frame zip: a constant surrogate key makes every row one
@@ -98,18 +85,20 @@ def _union_cotransform(
     )
     # NaN-safe key exprs: float NULL and NaN must co-partition and sort
     # adjacent — pandas treats them as one key (see _nan_safe_key_exprs)
-    key_exprs = _nan_safe_key_exprs(combined, keys)
     combined = (
-        combined.repartition(1) if cross else combined.repartition(num, *key_exprs)
+        combined.repartition(1)
+        if cross
+        else combined.repartition(num, *_nan_safe_key_exprs(combined, keys))
     )
-    # JVM-side sort: every (key, tag) run arrives contiguous in the Arrow
-    # stream, so the python side slices groups by run-length with no sort.
-    # Presort rides the same sort: each side's column c lives at
-    # __in{i}__{c}, so a CASE over the tag resolves "sort by c" per side —
-    # within a (key, tag) run the CASE is one side's column, sorting that
-    # side's rows by its own values (NULL constant for sides lacking c).
-    # nulls-last on data columns = the reference's pandas na_position
-    # contract; this removes the per-group pandas sort_values entirely.
+    # Presort rides the engine's partition sort: each side's column c lives
+    # at __in{i}__{c}, so a CASE over the tag resolves "sort by c" per side
+    # — within a key group the CASE is one side's column for that side's
+    # rows, sorting them by their own values (NULL constant for sides
+    # lacking c). nulls-last on data columns = the reference's pandas
+    # na_position contract. __tag__ is deliberately NOT a sort key: each
+    # side is tag-filtered before use, so within a key group a side's rows
+    # are adjacent in its own filtered frame regardless of tag
+    # interleaving — one fewer comparison column in the partition sort.
     n_inputs = len(dfs)
     in_columns = [list(d.columns) for d in dfs]
     keyset = set(keys)
@@ -131,134 +120,32 @@ def _union_cotransform(
         presort_exprs.append(
             branches.asc_nulls_last() if asc else branches.desc_nulls_last()
         )
-    # NOTE: __tag__ is deliberately NOT a sort key — each side is tag-
-    # filtered before use, so within a key group a side's rows are
-    # contiguous in its own filtered frame regardless of tag interleaving,
-    # and the per-side exclusive prefix sums index any (a, b) boundary.
-    # One fewer comparison column in the partition sort.
-    combined = combined.sortWithinPartitions(
-        *[e.asc_nulls_first() for e in key_exprs], *presort_exprs
-    )
-    out_cols = [f.name for f in out_schema.fields]
-    side_src = [
-        [(c if c in keyset else f"__in{i}__{c}") for c in in_columns[i]]
+    sides = [
+        (
+            [(c if c in keyset else f"__in{i}__{c}") for c in in_columns[i]],
+            in_columns[i],
+            side_forms[i],
+        )
         for i in range(n_inputs)
     ]
-    side_fields = [
-        [d.schema[c] for c in in_columns[i]] for i, d in enumerate(dfs)
-    ]
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_out_schema = to_arrow_schema(out_schema)
-    tz = combined.sparkSession.conf.get("spark.sql.session.timeZone", "UTC")
-    key_fields = [combined.schema[k] for k in keys]
-
-    def udf(it):
-        import itertools as _it
-
-        import numpy as np
-        import pyarrow as pa
-
-        it = iter(it)
-        first = next(it, None)
-        if first is None:
-            return
-        tbl = pa.Table.from_batches(list(_it.chain([first], it)))
-        npart = tbl.num_rows
-        if npart == 0:
-            return
-        # Split by tag ONCE per partition, Arrow-side (C++ filter, then one
-        # to_pandas per SIDE — the union frame itself is never converted).
-        # The JVM sort is on the keys (+ presort), so after the tag filter
-        # a side's rows inside a key group are contiguous in its own frame;
-        # the exclusive prefix-sum of the tag mask maps ANY (a, b) group
-        # boundary of the union to that side's slice — O(1) per group.
-        # The Arrow filter also makes the dtype story exact: a side's column
-        # leaves the union with its original Arrow type, so to_pandas
-        # restores the input dtype with no astype pass (NULL padding from
-        # other sides is gone before conversion).
-        tags = tbl.column("__tag__").to_numpy()
-        sides: list[Any] = []
-        makers: list[Any] = []
-        empties: list[Any] = []
-        prefix: list[Any] = []  # side-local exclusive prefix count at tbl pos
-        for i in range(n_inputs):
-            mask = tags == i
-            # select BEFORE filter: pa.Table.select is zero-copy, so the
-            # C++ filter kernel only touches this side's columns instead of
-            # also copying the other sides' NULL padding
-            stbl = tbl.select(side_src[i]).filter(pa.array(mask))
-            stbl = stbl.rename_columns(in_columns[i])
-            ex = np.zeros(npart + 1, dtype=np.int64)
-            np.cumsum(mask, out=ex[1:])
-            prefix.append(ex)
-            if side_forms[i] == "pa":
-                # arrow-annotated side: groups are zero-copy Table.slice
-                # views — no pandas construction at all (q21 vs q12)
-                sides.append(stbl)
-                makers.append(lambda a, b, _t=stbl: _t.slice(a, b - a))
-                empties.append(stbl.slice(0, 0))
-            else:
-                f = _table_to_pandas(stbl, side_fields[i], tz)
-                sides.append(f)
-                makers.append(_group_frame_maker(f))
-                empties.append(f.iloc[0:0])
-        batcher = _ArrowResultBatcher(out_cols, arrow_out_schema, "cotransform")
-        if cross:
-            out = batcher.add(run(list(sides), []))
-            if out is not None:
-                yield from out
-        else:
-            # null-free integer keys: bounds + key arrays straight from
-            # Arrow, skipping the key-column pandas materialization
-            fast = _arrow_group_bounds(tbl, keys)
-            if fast is not None:
-                bounds, karr_np = fast
-                karrs = karr_np if wants_kv else []
-            else:
-                kpdf = _table_to_pandas(tbl.select(keys), key_fields, tz)
-                _, bounds = _group_bounds(kpdf, keys, contiguous=True)
-                karrs = [kpdf[k].to_numpy() for k in keys] if wants_kv else []
-            # which sides must be non-empty for the group to be emitted —
-            # checked on the prefix sums BEFORE any frame is built, so
-            # skipped groups cost two array loads, not N frame constructions
-            if how == "inner":
-                required = range(n_inputs)
-            elif how == "left_outer":
-                required = (0,)
-            elif how == "right_outer":
-                required = (n_inputs - 1,)
-            else:
-                required = ()
-            for a, b in zip(bounds[:-1], bounds[1:]):
-                skip = False
-                for i in required:
-                    ex = prefix[i]
-                    if ex[a] == ex[b]:
-                        skip = True
-                        break
-                if skip:
-                    continue
-                frames = []
-                for i in range(n_inputs):
-                    ex = prefix[i]
-                    sa, sb = ex[a], ex[b]
-                    frames.append(makers[i](sa, sb) if sb > sa else empties[i])
-                if wants_kv:
-                    kv = [
-                        None if isinstance(v, float) and pd.isna(v) else v
-                        for v in (arr[a] for arr in karrs)
-                    ]
-                else:
-                    kv = _NO_KV
-                out = batcher.add(run(frames, kv))
-                if out is not None:
-                    yield from out
-        out = batcher.flush()
-        if out is not None:
-            yield from out
-
-    return combined.mapInArrow(udf, schema=out_schema)
+    # which sides must be non-empty for a key group to be emitted
+    required = {
+        "inner": range(n_inputs),
+        "left_outer": (0,),
+        "right_outer": (n_inputs - 1,),
+    }.get(how, ())
+    return _map_groups(
+        combined,
+        keys,
+        presort_exprs,
+        sides,
+        run,
+        out_schema,
+        # the cross zip's surrogate key is not reported on the cursor
+        keys if wants_cursor and not cross else [],
+        required=required,
+        name="cotransform",
+    )
 
 
 def _infer_keys(dfs: list[DataFrame], spec: PartitionSpec) -> list[str]:
@@ -333,7 +220,6 @@ def cotransform(
                 "@cotransformer, or '# schema:' hint)"
             )
     out_schema = parse_schema(schema)
-    out_cols = [f.name for f in out_schema.fields]
     kwargs = dict(params or {})
 
     sig_params = list(inspect.signature(using).parameters.values())
@@ -375,63 +261,35 @@ def cotransform(
             )
         side_forms.append("pa" if form == _IN_ARROW else "pd")
 
-    if compile is None:
-        from fugue_spark.transform import _default_compile_mode
+    from fugue_spark.compile import compile_or_fallback, try_compile_cotransform
 
-        compile = _default_compile_mode()
-    if compile:
-        from fugue_spark.compile import TraceError, try_compile_cotransform
+    compiled = compile_or_fallback(
+        compile,
+        lambda mode: try_compile_cotransform(
+            dfs,
+            using,
+            keys,
+            spec.presort,
+            out_schema,
+            kwargs,
+            wants_cursor,
+            how,
+            purity_check=(mode == "auto"),
+        ),
+        "zip",
+    )
+    if compiled is not None:
+        return compiled
 
-        try:
-            return try_compile_cotransform(
-                dfs,
-                using,
-                keys,
-                spec.presort,
-                out_schema,
-                kwargs,
-                wants_cursor,
-                how,
-                purity_check=(compile == "auto"),
-            )
-        except TraceError:
-            if compile == "strict":
-                raise
-            # fall through to the zip engine unchanged
-        except Exception as exc:
-            # non-TraceError = compiler defect: surface it for explicit
-            # compile=True/strict; for "auto" warn and use the zip engine
-            if compile == "strict" or compile is True:
-                raise
-            import warnings
-
-            warnings.warn(
-                "fugue_spark auto-compile failed unexpectedly "
-                f"({type(exc).__name__}: {exc}); falling back to the "
-                "zip execution path",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-
-    dummy_cursor = PartitionCursor(keys, [None] * len(keys), 0)
-
-    def run(frames: "list[Any]", kv: "list[Any] | None") -> Any:
+    def run(frames: "list[Any]", cursor: PartitionCursor) -> Any:
         # returns the RAW user result (dict / DataFrame / iterable) — the
-        # _ResultBatcher conforms and batches it; None skips the group.
-        # how-based group skipping happens in the udf loop on the prefix
+        # _ArrowResultBatcher conforms and batches it; None skips the group.
+        # how-based group skipping happens in the engine on the prefix
         # sums, BEFORE frames are built — no len() checks needed here.
         if wants_cursor:
-            cursor = dummy_cursor if kv is None else PartitionCursor(keys, kv, 0)
             return using(cursor, *frames, **kwargs)
         return using(*frames, **kwargs)
 
     return _union_cotransform(
-        dfs,
-        keys,
-        run,
-        out_schema,
-        wants_kv=wants_cursor,
-        side_forms=side_forms,
-        presort=spec.presort,
-        how=how,
+        dfs, keys, run, out_schema, wants_cursor, side_forms, spec.presort, how
     )

@@ -687,7 +687,7 @@ def assign_pack_bins(
 
     Without ``by`` the GLOBAL order is computed hierarchically instead of
     as one single-partition window sort (the 100 TB killer): the data is
-    range-partitioned on ``order_by`` so each shard holds a contiguous
+    range-partitioned on ``order_by`` so each shard holds an unbroken
     slice of the global order, per-shard token totals (one tiny agg row
     per shard) become exclusive shard offsets on the driver, and each
     shard then runs its own window prefix-sum plus its offset — all
@@ -720,7 +720,7 @@ def _exclusive_prefix(
     deterministic order. With ``by`` this is one keyed window; without it
     the GLOBAL order is computed hierarchically instead of as one
     single-partition window sort (the 100 TB killer): range-partition on
-    ``order_by`` so each shard holds a contiguous slice of the global
+    ``order_by`` so each shard holds an unbroken slice of the global
     order, per-shard totals (one tiny agg row per shard) become exclusive
     shard offsets on the driver, and each shard runs its own window
     prefix-sum plus its offset — parallel sort + scan, one long of serial
@@ -753,7 +753,7 @@ def _exclusive_prefix(
         return df, F.coalesce(F.sum(F.col(size_col)).over(w), F.lit(0)), cols
 
     shards = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    # contiguous global ranges; shard id pinned by the checkpoint so the
+    # unbroken global ranges; shard id pinned by the checkpoint so the
     # totals pass and the window pass see identical shard boundaries
     rdf = (
         df.repartitionByRange(shards, F.col(order_by))

@@ -386,7 +386,7 @@ def p16_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p19_sequence_packing_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GLOBAL-order sequence packing via the hierarchical two-pass path:
-    range-partition on the order key (each shard = a contiguous slice of
+    range-partition on the order key (each shard = an unbroken slice of
     the global order) → per-shard token totals → driver exclusive shard
     offsets → per-shard window + offset. Every shard sorts and scans in
     parallel; no single-partition sort anywhere — the value-checked proof

@@ -395,8 +395,10 @@ def q10_sql_passthrough_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q11_transform_per_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B6: the flagship map engine — per-orderkey pandas function with
-    prepartition + presort, executed as groupBy().applyInPandas (one
-    shuffle on the key, Arrow exchange, no driver involvement)."""
+    prepartition + presort, run by the grouped map engine: one shuffle on
+    the key, one JVM sort that also applies the presort, then mapInArrow
+    with per-group pandas frames (no driver involvement). ``compile=False``
+    keeps it on the Python engine; q22 is the same workload compiled."""
     from fugue_spark.transform import transform
 
     # project BEFORE the transform: the map engine must shuffle every column
@@ -428,6 +430,7 @@ def q11_transform_per_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_order,
         schema="l_orderkey:long,revenue:double,n_lines:long,top_line:int",
         partition={"by": ["l_orderkey"], "presort": "l_quantity DESC, l_linenumber ASC"},
+        compile=False,
     )
 
 
@@ -445,8 +448,10 @@ def q11_transform_per_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q12_cotransform_order_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B7: zip/comap — orders cogrouped with lineitem by orderkey via
-    cogroup().applyInPandas; both sides shuffle once on the key."""
+    """B7: zip/comap — orders zipped with lineitem by orderkey as one
+    tagged union, shuffled once on the key and split back per side by the
+    grouped map engine. ``compile=False`` keeps it on the Python engine;
+    q23 is the same workload compiled."""
     from fugue_spark.cotransform import cotransform
 
     # project BEFORE the zip: the tagged union shuffles the superset schema,
@@ -481,12 +486,16 @@ def q12_cotransform_order_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     # value hash is row-order-insensitive (r1 evidence: q11 hash-green with
     # unordered output), the red gates were a dtype artifact.
     return cotransform(
-        [orders, li], gap, schema="orderkey:long,n_lines:long,price_gap_e4:long", how="inner"
+        [orders, li],
+        gap,
+        schema="orderkey:long,n_lines:long,price_gap_e4:long",
+        how="inner",
+        compile=False,
     )
 
 
 def _q13_per_order(pdf):
-    # dict output → the engine's _ResultBatcher cheap path (one DataFrame
+    # dict output → the engine's _ArrowResultBatcher cheap path (one DataFrame
     # per 1024 groups instead of one per group — ~0.5 ms/frame saved)
     return {
         "l_orderkey": int(pdf.l_orderkey.iloc[0]),
@@ -730,6 +739,7 @@ def q20_transform_arrow_per_order(spark: SparkSession, sf_dir: str) -> DataFrame
         per_order,
         schema="l_orderkey:long,revenue:double,n_lines:long",
         partition={"by": ["l_orderkey"]},
+        compile=False,
     )
 
 
@@ -785,7 +795,11 @@ def q21_cotransform_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
 
     return cotransform(
-        [orders, li], gap, schema="orderkey:long,n_lines:long,price_gap_e4:long", how="inner"
+        [orders, li],
+        gap,
+        schema="orderkey:long,n_lines:long,price_gap_e4:long",
+        how="inner",
+        compile=False,
     )
 
 

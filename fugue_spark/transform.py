@@ -8,16 +8,23 @@ kept: a bare function declares its input/output shape via type annotations
 (fugue/dataframe/function_wrapper.py:322-553 registers the same forms) and
 its output schema via ``schema=`` or a ``# schema:`` comment hint.
 
-Execution maps onto the pandas-UDF family — the Arrow-vectorized fast path:
+Execution maps onto the Arrow-vectorized pandas-UDF family:
 
-* grouped (``partition.by``)      → ``df.groupBy(keys).applyInPandas``
+* grouped (``partition.by``)      → the algo's exchange on the keys, one JVM
+                                    ``sortWithinPartitions`` (keys, then
+                                    presort) and ``df.mapInArrow``: the
+                                    grouped map engine ``_map_groups``, which
+                                    ``cotransform`` shares, finds each group
+                                    as one run of rows
 * ungrouped / coarse              → ``df.mapInPandas`` (streaming iterator,
                                     so ``Iterable[pd.DataFrame]`` functions
                                     never materialize a whole partition)
-* arrow-annotated functions       → same paths, converted at the boundary
+* arrow-annotated functions       → zero-copy ``Table.slice`` per group when
+                                    grouped; ``mapInArrow`` when streaming
 
-Presort runs inside the UDF with pandas (na_position='last' to match the
-take/presort convention). ``on_init`` fires once per physical partition;
+Grouped presort runs in the JVM sort, nulls last, with Spark's ordering
+(NaN above every number); ungrouped presort runs in pandas
+(na_position='last'). ``on_init`` fires once per physical partition;
 ``ignore_errors`` turns listed exceptions into empty output for that
 logical partition (reference: processors.py:330-338).
 """
@@ -144,19 +151,6 @@ _SCHEMA_HINT_RE = re.compile(r"^\s*#\s*schema:\s*(.+)$", re.MULTILINE)
 _SAFE_NAME_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
 
-def _default_compile_mode() -> "str | bool":
-    """Resolve the ``compile=None`` default: auto-compile unless the env
-    kill-switch ``FUGUE_SPARK_AUTO_COMPILE=0`` is set (read per call so
-    tests and operators can flip it at runtime)."""
-    import os
-
-    return (
-        False
-        if os.environ.get("FUGUE_SPARK_AUTO_COMPILE", "1").lower() in ("0", "false", "no")
-        else "auto"
-    )
-
-
 def _schema_from_comment(fn: Callable) -> "str | None":
     """The reference's comment hint: a ``# schema: ...`` line directly above
     the function definition (or inside it)."""
@@ -274,15 +268,20 @@ def _classify(ann: Any, default: str) -> str:
     raise ValueError(f"unsupported transform annotation {ann!r}")
 
 
-def _to_input(pdf: pd.DataFrame, form: str) -> Any:
+def _to_input(pdf: "pd.DataFrame | pa.Table", form: str) -> Any:
+    """Hand one logical partition to the function in its annotated form;
+    the arrow forms also take a ``pa.Table`` (the grouped engine's zero-copy
+    group slices) as is."""
     if form == _IN_PANDAS:
         return pdf
     if form == _IN_ITER_PANDAS:
         return iter([pdf])
     if form == _IN_ARROW:
+        if isinstance(pdf, pa.Table):
+            return pdf
         return pa.Table.from_pandas(pdf, preserve_index=False)
     if form == _IN_ITER_ARROW:
-        return iter([pa.Table.from_pandas(pdf, preserve_index=False)])
+        return iter([_to_input(pdf, _IN_ARROW)])
     if form == _IN_LISTS:
         return pdf.values.tolist()
     if form == _IN_ITER_LISTS:
@@ -688,106 +687,28 @@ def _arrow_group_bounds(tbl: pa.Table, keys: list[str]):
     return bounds, arrs
 
 
-def _group_bounds(pdf: pd.DataFrame, keys: list[str], contiguous: bool):
-    """Run-length group boundaries over key columns.
-
-    Groups are contiguous after the engine's repartition+sortWithinPartitions,
-    so one vectorized factorize per key + a diff finds every group in O(n) —
-    no pandas groupby object, no per-group index construction, no copies
-    (each group is an ``iloc`` block slice of the partition frame).
-    Returns (pdf, bounds) — pdf is re-ordered first iff not contiguous.
+def _group_bounds(pdf: pd.DataFrame, keys: list[str]):
+    """Run-length group boundaries over key columns whose groups are
+    unbroken runs (the grouped engine's JVM sort makes them so): one
+    vectorized factorize per key + a diff finds every group in O(n) — no
+    pandas groupby object, no per-group index construction, no copies.
     """
-    import numpy as np
-
     # integer/bool keys need no factorize — the raw values ARE valid codes
-    # for both the run-length diff and lexsort (floats need factorize for
-    # the NaN-is-a-key contract, objects/strings for comparability)
+    # for the run-length diff (floats need factorize for the NaN-is-a-key
+    # contract, objects/strings for comparability)
     def _codes(col: pd.Series):
         if col.dtype.kind in "iub":
             return col.to_numpy()
         return pd.factorize(col, use_na_sentinel=False)[0]
 
-    codes = [_codes(pdf[k]) for k in keys]
-    if not contiguous:
-        order = np.lexsort(codes[::-1])  # stable; groups become contiguous
-        pdf = pdf.iloc[order].reset_index(drop=True)
-        codes = [c[order] for c in codes]
+    if not len(pdf):
+        return np.array([0])
     diff = None
-    for c in codes:
+    for k in keys:
+        c = _codes(pdf[k])
         d = c[1:] != c[:-1]
         diff = d if diff is None else (diff | d)
-    bounds = np.flatnonzero(np.r_[True, diff, True]) if len(pdf) else np.array([0])
-    return pdf, bounds
-
-
-class _ResultBatcher:
-    """Accumulate per-group transformer results and flush as few, large
-    pandas frames. dict results (the cheap output form) are collected as
-    plain dicts and materialized into ONE DataFrame per flush — building a
-    1-row DataFrame per group costs ~0.5 ms and dominates small-group
-    workloads otherwise.
-
-    Flushing is bounded by BUFFERED ROWS as well as result count, so user
-    functions returning large per-group frames don't multiply peak executor
-    memory by the chunk factor. Output row order within a flush groups
-    dict-rows before frame-rows; the engine's output order is unspecified
-    (Spark partition concatenation order already is)."""
-
-    def __init__(
-        self,
-        out_cols: list[str],
-        name: str,
-        chunk: int = 1024,
-        row_chunk: int = 65536,
-        nested_cols: "set[str] | None" = None,
-    ):
-        self.out_cols = out_cols
-        self.name = name
-        self.chunk = chunk
-        self.row_chunk = row_chunk
-        self.nested_cols = nested_cols
-        self.dicts: list[dict] = []
-        self.frames: list[pd.DataFrame] = []
-        self.n = 0
-        self.rows = 0
-
-    def add(self, res: Any) -> "pd.DataFrame | None":
-        if res is None:
-            return None
-        if isinstance(res, dict):
-            # dict-of-arrays (schema-aware): one output row per array
-            # element, scalar values broadcast — the multi-row sibling of
-            # the scalar-dict cheap path; array cells aimed at
-            # array-typed columns stay single-row
-            res = _expand_dict_result(res, self.nested_cols)
-        if isinstance(res, dict):
-            self.dicts.append(res)
-            self.rows += 1
-        else:
-            pdf = _conform(_result_to_pandas(res, self.out_cols), self.out_cols, self.name)
-            if len(pdf) == 0:
-                return None
-            self.frames.append(pdf)
-            self.rows += len(pdf)
-        self.n += 1
-        if self.n >= self.chunk or self.rows >= self.row_chunk:
-            return self.flush()
-        return None
-
-    def flush(self) -> "pd.DataFrame | None":
-        if self.n == 0:
-            return None
-        parts = []
-        if self.dicts:
-            parts.append(_conform(pd.DataFrame(self.dicts), self.out_cols, self.name))
-            self.dicts = []
-        parts.extend(self.frames)
-        self.frames = []
-        self.n = 0
-        self.rows = 0
-        if not parts:
-            return None
-        return parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
+    return np.flatnonzero(np.r_[True, diff, True])
 
 
 class _ArrowResultBatcher:
@@ -912,6 +833,145 @@ class _ArrowResultBatcher:
         return out.to_batches()
 
 
+def _partition_no() -> int:
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    return ctx.partitionId() if ctx is not None else 0
+
+
+def _map_groups(
+    df: DataFrame,
+    keys: list[str],
+    presort: list,
+    sides: "list[tuple[list[str], list[str], str]]",
+    run: "Callable[[list[Any], PartitionCursor], Any]",
+    out_schema: T.StructType,
+    cursor_keys: list[str],
+    exec_schema: "T.StructType | None" = None,
+    required: "Iterable[int]" = (),
+    name: str = "transform",
+) -> DataFrame:
+    """The grouped map engine: ``transform`` with ``partition.by`` is its
+    one-input caller, ``cotransform`` its N-input caller.
+
+    ``df`` arrives exchanged so that every key group sits in one
+    partition. One JVM ``sortWithinPartitions`` — NaN-safe ``keys``
+    ascending, nulls first, then the ``presort`` Column expressions — makes
+    every group one unbroken run of the partition's Arrow stream, so inside
+    ``mapInArrow`` groups are found by run-length (no pandas groupby, no
+    per-group sort) and ``run(frames, cursor)`` is called once per group.
+    One Arrow stream per PARTITION instead of a JVM↔Python round trip per
+    GROUP beats ``groupBy().applyInPandas`` by 10-50× on small groups.
+
+    ``sides[i] = (columns, names, form)``: the columns of ``df`` that make
+    up input i, the names the function sees, and its form — ``'pa'`` gets
+    zero-copy ``Table.slice`` views, ``'pd'`` one pandas conversion per
+    partition, block-sliced per group (see _group_frame_maker). With more
+    than one side every row carries a ``__tag__`` naming its side: each
+    side is tag-filtered once per partition, and the exclusive prefix sum
+    of its tag mask, read at the group bounds, maps every group to the
+    side's slice; one vectorized pass over those positions skips, before
+    any frame is built, the groups where a side in ``required`` has no
+    rows. With one side a group's slice is its bounds.
+
+    ``cursor_keys`` are the names the cursor reports for ``keys``; empty
+    when the function reads no key values (or the key is a surrogate), in
+    which case one shared key-less cursor per partition saves the per-group
+    extraction. ``run`` returns the raw user result (None skips the group);
+    the _ArrowResultBatcher conforms and batches it. ``exec_schema`` is the
+    plan-side output schema when its names differ from ``out_schema``'s.
+    """
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    df = df.sortWithinPartitions(
+        *[e.asc_nulls_first() for e in _nan_safe_key_exprs(df, keys)], *presort
+    )
+    exec_schema = exec_schema or out_schema
+    out_cols = out_schema.names
+    arrow_out_schema = to_arrow_schema(out_schema)  # user-visible names
+    safe_names = exec_schema.names if exec_schema.names != out_cols else None
+    tz = df.sparkSession.conf.get("spark.sql.session.timeZone", "UTC")
+    key_fields = [df.schema[k] for k in keys]
+    side_fields = [[df.schema[c] for c in cols] for cols, _, _ in sides]
+    tagged = len(sides) > 1
+
+    def udf(it: "Iterable[pa.RecordBatch]") -> "Iterable[pa.RecordBatch]":
+        it = iter(it)
+        first = next(it, None)
+        if first is None:
+            return
+        tbl = pa.Table.from_batches(list(itertools.chain([first], it)))
+        if tbl.num_rows == 0:
+            return
+        # null-free integer keys: bounds + key arrays straight from Arrow,
+        # skipping the key-column pandas materialization
+        fast = _arrow_group_bounds(tbl, keys)
+        if fast is not None:
+            bounds, karrs = fast
+        else:
+            kpdf = _table_to_pandas(tbl.select(keys), key_fields, tz)
+            bounds = _group_bounds(kpdf, keys)
+            karrs = [kpdf[k].to_numpy() for k in keys]
+        tags = tbl.column("__tag__").to_numpy() if tagged else None
+        makers: list[Any] = []
+        empties: list[Any] = []
+        pos: list[list[int]] = []  # per side: its row position at each bound
+        keep = np.ones(len(bounds) - 1, dtype=bool)  # groups to emit
+        for i, ((cols, names, form), fields) in enumerate(zip(sides, side_fields)):
+            # select is zero-copy, so the C++ filter kernel only touches
+            # this side's columns, not the other sides' NULL padding; the
+            # filter also drops that padding before pandas conversion, so a
+            # side leaves with its input's Arrow types (no astype pass)
+            stbl = tbl if cols == tbl.column_names else tbl.select(cols)
+            if tagged:
+                mask = tags == i
+                stbl = stbl.filter(pa.array(mask))
+                p = np.concatenate(([0], np.cumsum(mask)))[bounds]
+                if i in required:
+                    keep &= p[1:] > p[:-1]
+                pos.append(p.tolist())
+            stbl = stbl.rename_columns(names)
+            if form == "pa":
+                makers.append(lambda a, b, _t=stbl: _t.slice(a, b - a))
+                empties.append(stbl.slice(0, 0))
+            else:
+                f = _table_to_pandas(stbl, fields, tz)
+                makers.append(_group_frame_maker(f))
+                empties.append(f.iloc[0:0])
+        starts = bounds.tolist()
+        pno = _partition_no()
+        shared_cursor = PartitionCursor([], [], pno)
+        batcher = _ArrowResultBatcher(
+            out_cols, arrow_out_schema, name, safe_names=safe_names
+        )
+        for g in np.flatnonzero(keep).tolist():
+            a = starts[g]
+            if tagged:
+                frames = [
+                    make(p[g], p[g + 1]) if p[g + 1] > p[g] else empty
+                    for make, empty, p in zip(makers, empties, pos)
+                ]
+            else:
+                frames = [makers[0](a, starts[g + 1])]
+            if cursor_keys:
+                kv = [
+                    None if isinstance(v, float) and pd.isna(v) else v
+                    for v in (arr[a] for arr in karrs)
+                ]
+                cursor = PartitionCursor(cursor_keys, kv, pno)
+            else:
+                cursor = shared_cursor
+            out = batcher.add(run(frames, cursor))
+            if out is not None:
+                yield from out
+        out = batcher.flush()
+        if out is not None:
+            yield from out
+
+    return df.mapInArrow(udf, schema=exec_schema)
+
+
 def transform(
     df: DataFrame,
     using: Any,
@@ -984,6 +1044,7 @@ def transform(
             return inst.transform(pdf)
 
         init_fn = inst.on_init
+        wants_cursor = True  # the instance reads inst.cursor
     else:
         sig = inspect.signature(fn)
         sig_params = list(sig.parameters.values())
@@ -1058,73 +1119,38 @@ def transform(
         except err_types:
             return pd.DataFrame(columns=out_cols)
 
-    def _partition_no() -> int:
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        return ctx.partitionId() if ctx is not None else 0
-
     safe_keys = [name_to_safe[k] for k in keys]
 
-    if compile is None:
-        compile = _default_compile_mode()
-    if compile:
-        from fugue_spark.compile import TraceError, try_compile_aggregation
+    from fugue_spark.compile import TraceError, compile_or_fallback, try_compile_aggregation
 
-        try:
-            if is_class:
-                raise TraceError("class transformers are not traceable")
-            if err_types or init_fn is not None or discard_output or "callback" in kwargs:
-                raise TraceError(
-                    "compile is incompatible with ignore_errors/on_init/callback"
-                )
-            return try_compile_aggregation(
-                df,
-                fn,
-                keys,
-                presort,
-                out_schema,
-                kwargs,
-                wants_cursor,
-                name_to_safe,
-                in_schema=input_schema,
-                allow_ungrouped_agg=(compile != "auto"),
-                purity_check=(compile == "auto"),
-            )
-        except TraceError:
-            if compile == "strict":
-                raise
-            # fall through to the pandas/arrow execution paths unchanged
-        except Exception as exc:
-            # a non-TraceError here is a compiler defect, not an
-            # untraceable function: surface it when the user explicitly
-            # asked for compilation; for "auto" warn (a silent fallback
-            # would hide tracer regressions) and run the pandas path,
-            # which must always be able to run the call
-            if compile == "strict" or compile is True:
-                raise
-            import warnings
+    def compiled(mode: "bool | str") -> DataFrame:
+        if is_class:
+            raise TraceError("class transformers are not traceable")
+        if err_types or init_fn is not None or discard_output or "callback" in kwargs:
+            raise TraceError("compile is incompatible with ignore_errors/on_init/callback")
+        return try_compile_aggregation(
+            df,
+            fn,
+            keys,
+            presort,
+            out_schema,
+            kwargs,
+            wants_cursor,
+            name_to_safe,
+            in_schema=input_schema,
+            allow_ungrouped_agg=(mode != "auto"),
+            purity_check=(mode == "auto"),
+        )
 
-            warnings.warn(
-                "fugue_spark auto-compile failed unexpectedly "
-                f"({type(exc).__name__}: {exc}); falling back to the "
-                "pandas execution path",
-                RuntimeWarning,
-                stacklevel=2,
-            )
+    compiled_df = compile_or_fallback(compile, compiled, "pandas")
+    if compiled_df is not None:
+        return compiled_df
 
     if keys:
-        contiguous = False
-        if spec.algo not in ("default", "hash"):
-            df = apply_partition_spec(df, PartitionSpec(by=safe_keys, num=spec.num, algo=spec.algo))
-        else:
-            # co-locate each key group via one hash exchange; groups are then
-            # processed with an in-process pandas groupby inside mapInPandas.
-            # This beats groupBy().applyInPandas by 10-50× when groups are
-            # small: one Arrow stream per PARTITION instead of a JVM↔Python
-            # round trip per GROUP. The count is pinned explicitly: AQE
-            # would otherwise coalesce by BYTE size, collapsing a
-            # python-cost-heavy stage onto one core.
+        if spec.algo in ("default", "hash"):
+            # one hash exchange on the NaN-safe keys. The count is pinned
+            # explicitly: AQE would otherwise coalesce by BYTE size,
+            # collapsing a python-cost-heavy stage onto one core.
             num = spec.resolve_num(df)
             if num <= 0:
                 # python stages are CPU-bound: parallelism is core-bound, not
@@ -1134,118 +1160,40 @@ def transform(
                     int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")),
                     df.sparkSession.sparkContext.defaultParallelism,
                 )
-            key_exprs = _nan_safe_key_exprs(df, safe_keys)
-            df = df.repartition(num, *key_exprs)
-            # one partition-level sort makes every group a contiguous run
-            # (the python side then finds groups by run-length, no pandas
-            # groupby) and applies presort inside each run for free;
-            # nulls-last on data columns = the pandas na_position="last"
-            # contract of the reference
-            from pyspark.sql import functions as F
+            df = df.repartition(num, *_nan_safe_key_exprs(df, safe_keys))
+        else:
+            df = apply_partition_spec(
+                df, PartitionSpec(by=safe_keys, num=spec.num, algo=spec.algo)
+            )
+        from pyspark.sql import functions as F
 
-            sort_cols = [e.asc_nulls_first() for e in key_exprs] + [
-                (
-                    F.col(name_to_safe[n]).asc_nulls_last()
-                    if asc
-                    else F.col(name_to_safe[n]).desc_nulls_last()
-                )
-                for n, asc in presort
-            ]
-            df = df.sortWithinPartitions(*sort_cols)
-            presort = []  # already applied
-            contiguous = True
-
-        def run_raw(pdf: pd.DataFrame, cursor: PartitionCursor) -> Any:
-            pdf = _sort_pandas(pdf, presort)
+        def run(frames: "list[Any]", cursor: PartitionCursor) -> Any:
+            maybe_init()
             try:
-                res = call(pdf, cursor)
-                if discard_output:
-                    return None
-                return res
+                res = call(frames[0], cursor)
             except err_types:
                 return None
+            return None if discard_output else res
 
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        arrow_out_schema = to_arrow_schema(out_schema)  # user-visible names
-        batcher_safe = safe_out if rename_out else None
-        tz = df.sparkSession.conf.get("spark.sql.session.timeZone", "UTC")
-        in_fields = list(df.schema.fields)  # safe names, orig order/types
-        # arrow-annotated functions on the contiguous path skip pandas
-        # entirely: each group is a zero-copy Table.slice
-        arrow_fast = (
-            not is_class
-            and in_form in (_IN_ARROW, _IN_ITER_ARROW)
-            and contiguous
-            and not presort
+        res = _map_groups(
+            df,
+            safe_keys,
+            # nulls-last on data columns = the pandas na_position="last"
+            # contract of the reference
+            [
+                F.col(name_to_safe[n]).asc_nulls_last()
+                if asc
+                else F.col(name_to_safe[n]).desc_nulls_last()
+                for n, asc in presort
+            ],
+            [(safe_in, orig_in, "pa" if in_form in (_IN_ARROW, _IN_ITER_ARROW) else "pd")],
+            run,
+            out_schema,
+            # class transformers read inst.cursor; bare functions only need
+            # the per-group key values if they declared a cursor parameter
+            keys if wants_cursor else [],
+            exec_schema=exec_schema,
         )
-
-        # class transformers read inst.cursor; bare functions only need the
-        # per-group kv extraction if they declared a cursor parameter —
-        # skipping it (and the PartitionCursor allocation) saves ~5µs/group
-        needs_cursor = is_class or (not is_class and wants_cursor)
-
-        def grouped_arrow_udf(it: "Iterable[pa.RecordBatch]") -> "Iterable[pa.RecordBatch]":
-            it = iter(it)
-            first = next(it, None)
-            if first is None:
-                return
-            tbl = pa.Table.from_batches(list(itertools.chain([first], it)))
-            if tbl.num_rows == 0:
-                return
-            maybe_init()
-            pno = _partition_no()
-            batcher = _ArrowResultBatcher(
-                out_cols, arrow_out_schema, "transform", safe_names=batcher_safe
-            )
-            shared_cursor = PartitionCursor(keys, [None] * len(keys), pno)
-
-            def cursor_at(a: int, key_arrays: list) -> PartitionCursor:
-                if not needs_cursor:
-                    return shared_cursor
-                kv = [
-                    None if isinstance(v, float) and pd.isna(v) else v
-                    for v in (arr[a] for arr in key_arrays)
-                ]
-                return PartitionCursor(keys, kv, pno)
-
-            if arrow_fast:
-                if rename_in:
-                    tbl = tbl.rename_columns(orig_in)
-                fast = _arrow_group_bounds(tbl, keys)
-                if fast is not None:  # null-free int keys: no pandas at all
-                    bounds, key_arrays = fast
-                else:
-                    kpdf = tbl.select(keys).to_pandas()
-                    _, bounds = _group_bounds(kpdf, keys, contiguous=True)
-                    key_arrays = [kpdf[k].values for k in keys]
-                for a, b in zip(bounds[:-1], bounds[1:]):
-                    cursor = cursor_at(a, key_arrays)
-                    sub = tbl.slice(a, b - a)
-                    data = sub if in_form == _IN_ARROW else iter([sub])
-                    try:
-                        res = fn(cursor, data, **kwargs) if wants_cursor else fn(data, **kwargs)
-                        out = batcher.add(None if discard_output else res)
-                    except err_types:
-                        out = None
-                    if out is not None:
-                        yield from out
-            else:
-                pdf = _restore_in(_table_to_pandas(tbl, in_fields, tz))
-                pdf, bounds = _group_bounds(pdf, keys, contiguous)
-                make_group = _group_frame_maker(pdf)
-                key_arrays = [pdf[k].values for k in keys] if needs_cursor else []
-                for a, b in zip(bounds[:-1], bounds[1:]):
-                    out = batcher.add(
-                        run_raw(make_group(a, b), cursor_at(a, key_arrays))
-                    )
-                    if out is not None:
-                        yield from out
-            out = batcher.flush()
-            if out is not None:
-                yield from out
-
-        res = df.mapInArrow(grouped_arrow_udf, schema=exec_schema)
         return res.toDF(*out_cols) if rename_out else res
 
     # ungrouped: apply per physical partition (coarse) via mapInPandas

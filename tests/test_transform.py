@@ -6,6 +6,8 @@ from __future__ import annotations
 from collections.abc import Iterable
 from typing import Any, Iterator
 
+import math
+
 import pandas as pd
 import pyarrow as pa
 import pytest
@@ -408,7 +410,7 @@ def test_group_frame_maker_lazy_cache_semantics():
             "i": pd.array([10, 20, 30, 40, 50, 60], dtype="int32"),
         }
     )
-    _, bounds = _group_bounds(pdf, ["k"], contiguous=True)
+    bounds = _group_bounds(pdf, ["k"])
     make = _group_frame_maker(pdf)
     pairs = list(zip(bounds[:-1], bounds[1:]))
 
@@ -587,3 +589,94 @@ def test_dict_of_arrays_mixed_with_array_cell(spark):
         2: ([1.0, 2.0, 3.0], [2.0]),
         3: ([1.0, 2.0, 3.0], [3.0]),
     }
+
+
+def test_cursor_keys_same_for_every_input_form(spark):
+    """The grouped engine reports cursor key values identically whether the
+    function takes pandas or Arrow input and whether it runs under
+    transform or cotransform: timestamp keys as datetime64[ns], a float
+    key's NaN and NULL as one None, strings as str. The partition number
+    comes from the task, so a multi-partition zip reports several."""
+    import datetime as dt
+
+    def key_repr(cursor) -> str:
+        return "|".join(
+            f"{type(v).__name__}:{getattr(v, 'dtype', '')}:{v!r}"
+            for v in cursor.key_values
+        )
+
+    data = [
+        [dt.datetime(2020, 1, 1 + i % 2), [1.5, math.nan, None][i % 3], f"s{i // 6}", i]
+        for i in range(12)
+    ]
+    df = make_df(spark, data, "t:datetime,f:double,s:str,v:long")
+    other = make_df(spark, [r[:3] + [r[3] * 10] for r in data], "t:datetime,f:double,s:str,w:long")
+    part = {"by": ["t", "f", "s"]}
+    schema = "kr:str,n:long"
+    kw = dict(schema=schema, partition=part, compile=False)
+
+    def t_pd(cursor, pdf: pd.DataFrame) -> dict:
+        return {"kr": key_repr(cursor), "n": len(pdf)}
+
+    def t_pa(cursor, tbl: pa.Table) -> dict:
+        return {"kr": key_repr(cursor), "n": tbl.num_rows}
+
+    def c_pd(cursor, a: pd.DataFrame, b: pd.DataFrame) -> dict:
+        return {"kr": key_repr(cursor), "n": len(a)}
+
+    def c_pa(cursor, a: pa.Table, b: pa.Table) -> dict:
+        return {"kr": key_repr(cursor), "n": a.num_rows}
+
+    results = {
+        "transform pd": fa.transform(df, t_pd, **kw),
+        "transform pa": fa.transform(df, t_pa, **kw),
+        "cotransform pd": fa.cotransform([df, other], c_pd, **kw),
+        "cotransform pa": fa.cotransform([df, other], c_pa, **kw),
+    }
+    got = {name: rows(res) for name, res in results.items()}
+    ref = got["transform pd"]
+    # 2 timestamps x 2 strings x {1.5, NaN ≡ NULL}; each NaN/NULL group
+    # holds one NaN row and one NULL row
+    assert sorted(n for _, n in ref) == [1, 1, 1, 1, 2, 2, 2, 2], ref
+    for name, g in got.items():
+        assert g == ref, (name, g, ref)
+    krs = [kr for kr, _ in ref]
+    assert all(kr.startswith("datetime64:datetime64[ns]:") for kr in krs), krs
+    assert sum("|NoneType::None|" in kr for kr in krs) == 4, krs
+    assert all(kr.endswith(("str::'s0'", "str::'s1'")) for kr in krs), krs
+
+    # partition_no is the task's partition id (4 shuffle partitions here)
+    a = make_df(spark, [[k, k] for k in range(32)], "k:long,x:long")
+    b = make_df(spark, [[k, -k] for k in range(32)], "k:long,y:long")
+
+    def pno(cursor, left: pd.DataFrame, right: pd.DataFrame) -> dict:
+        return {"k": int(cursor["k"]), "p": cursor.partition_no}
+
+    out = rows(fa.cotransform([a, b], pno, schema="k:long,p:int", compile=False))
+    assert [k for k, _ in out] == sorted(range(32), key=str)
+    assert len({p for _, p in out}) > 1, out
+
+
+def test_presort_order_does_not_depend_on_algo(spark):
+    """Every partition algo sorts key groups in the JVM, so presort puts
+    NaN above every number and NULL last under asc and desc alike."""
+    df = make_df(
+        spark,
+        [[1, 0, 1.0], [1, 1, math.nan], [1, 2, None], [1, 3, 3.0], [1, 4, 2.0]],
+        "k:long,i:long,x:double",
+    )
+
+    def order(pdf: pd.DataFrame) -> dict:
+        return {"order": ",".join(str(i) for i in pdf.i)}
+
+    expected = {"x asc": "0,4,3,1,2", "x desc": "1,3,4,0,2"}
+    for algo in ("default", "hash", "even", "rand"):
+        for presort, want in expected.items():
+            res = fa.transform(
+                df,
+                order,
+                schema="order:str",
+                partition={"by": ["k"], "presort": presort, "algo": algo, "num": 2},
+                compile=False,
+            )
+            assert rows(res) == [(want,)], (algo, presort, rows(res))
