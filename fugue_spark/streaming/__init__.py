@@ -9,8 +9,9 @@ or sinks). Here the flag maps onto real Spark streaming:
 * ``with_event_time``    — watermarking.
 * ``windowed_agg`` / ``session_agg`` — tumbling/sliding and session
   windows over event time.
-* ``transform_stream``   — the map engine for streams: mapInPandas works
-  unchanged on streaming frames (same annotation dispatch).
+* ``transform_stream``   — the map engine for streams: the ungrouped
+  ``transform`` path (one ``mapInArrow``) works unchanged on streaming
+  frames (same annotation dispatch).
 * ``stateful_transform`` — ``applyInPandasWithState`` wrapper for custom
   per-key state machines.
 * ``run_to_memory`` / ``write_stream`` — sinks; ``run_to_memory`` drives
@@ -187,7 +188,7 @@ def session_agg(
 
 
 def transform_stream(df: DataFrame, using: Callable, schema: Any, params: "dict | None" = None) -> DataFrame:
-    """Map engine over a stream: the ungrouped transform path (mapInPandas)
+    """Map engine over a stream: the ungrouped transform path (mapInArrow)
     applies unchanged — the function sees Arrow batches as they arrive."""
     from fugue_spark.transform import transform
 

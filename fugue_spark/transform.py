@@ -8,25 +8,29 @@ kept: a bare function declares its input/output shape via type annotations
 (fugue/dataframe/function_wrapper.py:322-553 registers the same forms) and
 its output schema via ``schema=`` or a ``# schema:`` comment hint.
 
-Execution maps onto the Arrow-vectorized pandas-UDF family:
+Execution is one ``df.mapInArrow`` per call, in one of two shapes:
 
-* grouped (``partition.by``)      → the algo's exchange on the keys, one JVM
-                                    ``sortWithinPartitions`` (keys, then
-                                    presort) and ``df.mapInArrow``: the
-                                    grouped map engine ``_map_groups``, which
-                                    ``cotransform`` shares, finds each group
-                                    as one run of rows
-* ungrouped / coarse              → ``df.mapInPandas`` (streaming iterator,
-                                    so ``Iterable[pd.DataFrame]`` functions
-                                    never materialize a whole partition)
-* arrow-annotated functions       → zero-copy ``Table.slice`` per group when
-                                    grouped; ``mapInArrow`` when streaming
+* whole logical partitions        → the map engine ``_map_groups``, which
+                                    ``cotransform`` shares: the algo's
+                                    exchange (on the keys when grouped), one
+                                    JVM ``sortWithinPartitions`` (keys, then
+                                    presort) and ``mapInArrow``, which finds
+                                    each group as one run of rows. Ungrouped
+                                    calls are the keyless case: each physical
+                                    partition is one group
+* ungrouped ``Iterable[pd.DataFrame]`` / ``Iterable[pa.Table]``
+                                  → ``_map_stream``: the function consumes
+                                    the partition's Arrow batches lazily and
+                                    its output is batched as it is yielded,
+                                    so a whole partition is never in memory
 
-Grouped presort runs in the JVM sort, nulls last, with Spark's ordering
-(NaN above every number); ungrouped presort runs in pandas
-(na_position='last'). ``on_init`` fires once per physical partition;
-``ignore_errors`` turns listed exceptions into empty output for that
-logical partition (reference: processors.py:330-338).
+Both shapes hand pandas-annotated functions one Arrow→pandas conversion
+(``_table_to_pandas``), arrow-annotated ones Arrow tables as is, and send
+every result through one conformer (``_ArrowResultBatcher``). Presort runs
+in the JVM sort, nulls last, with Spark's ordering (NaN above every
+number). ``on_init`` fires once per physical partition; ``ignore_errors``
+turns listed exceptions into empty output for that logical partition
+(reference: processors.py:330-338).
 """
 
 from __future__ import annotations
@@ -270,7 +274,7 @@ def _classify(ann: Any, default: str) -> str:
 
 def _to_input(pdf: "pd.DataFrame | pa.Table", form: str) -> Any:
     """Hand one logical partition to the function in its annotated form;
-    the arrow forms also take a ``pa.Table`` (the grouped engine's zero-copy
+    the arrow forms also take a ``pa.Table`` (the map engine's zero-copy
     group slices) as is."""
     if form == _IN_PANDAS:
         return pdf
@@ -297,33 +301,21 @@ def _to_input(pdf: "pd.DataFrame | pa.Table", form: str) -> Any:
     raise AssertionError(form)
 
 
-def _nested_out_cols(out_schema: "T.StructType") -> "set[str]":
-    """Output columns whose declared type is itself array/map/struct: a
-    list-valued dict entry for one of these is a single CELL, not a
-    multi-row expansion."""
-    return {
-        f.name
-        for f in out_schema.fields
-        if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType))
-    }
-
-
-def _expand_dict_result(res: dict, nested_cols: "set[str] | None") -> "dict | pd.DataFrame":
+def _expand_dict_result(res: dict, nested_cols: "set[str]") -> "dict | pd.DataFrame":
     """dict results are ONE row — unless a value is array-like AND its
     declared output column is scalar-typed, which is the dict-of-arrays
     multi-row form (one row per element, scalar values broadcast; the
     pandas twin of the compiled window shape). Values aimed at
-    array/struct/map columns never trigger expansion; in a multi-row
-    result they are CELLS, repeated onto every row."""
-    skip = nested_cols if nested_cols is not None else set()
+    array/struct/map columns (``nested_cols``) never trigger expansion; in
+    a multi-row result they are CELLS, repeated onto every row."""
     listy = (list, tuple, np.ndarray, pd.Series)
-    arrays = [k for k, v in res.items() if isinstance(v, listy) and k not in skip]
+    arrays = [k for k, v in res.items() if isinstance(v, listy) and k not in nested_cols]
     if not arrays:
         return res
     n = len(res[arrays[0]])
     out = {}
     for k, v in res.items():
-        if k in skip and isinstance(v, listy):
+        if k in nested_cols and isinstance(v, listy):
             # nested-typed column in a multi-row result: a sequence OF
             # sequences matching the row count is per-row cells; anything
             # else (a flat array) is ONE cell repeated onto every row
@@ -336,20 +328,12 @@ def _expand_dict_result(res: dict, nested_cols: "set[str] | None") -> "dict | pd
     return pd.DataFrame(out)
 
 
-def _result_to_pandas(
-    res: Any, out_cols: list[str], nested_cols: "set[str] | None" = None
-) -> pd.DataFrame:
-    if res is None:
-        return pd.DataFrame(columns=out_cols)
+def _result_to_pandas(res: Any, out_cols: list[str]) -> pd.DataFrame:
+    """A frame or an iterable result (frames, tables, row lists or row
+    dicts) as one pandas frame; dict and Arrow results never get here (the
+    _ArrowResultBatcher takes them first)."""
     if isinstance(res, pd.DataFrame):
         return res
-    if isinstance(res, pa.Table):
-        return res.to_pandas()
-    if isinstance(res, dict):
-        res = _expand_dict_result(res, nested_cols)
-        if isinstance(res, pd.DataFrame):
-            return res
-        return pd.DataFrame([res], columns=out_cols)
     if isinstance(res, Iterable):
         items = list(res)
         if not items:
@@ -358,8 +342,6 @@ def _result_to_pandas(
             return pd.concat(items, ignore_index=True)
         if isinstance(items[0], pa.Table):
             return pa.concat_tables(items).to_pandas()
-        if isinstance(items[0], dict):
-            return pd.DataFrame(items, columns=out_cols)
         return pd.DataFrame(items, columns=out_cols)
     raise ValueError(f"unsupported transform output {type(res)}")
 
@@ -458,19 +440,6 @@ def _check_validations(rules: "dict | None", df: DataFrame, spec: PartitionSpec)
                 raise ValueError(f"input schema must be {want_schema}, got {got}")
         else:
             raise ValueError(f"unknown validation rule {rule!r}")
-
-
-def _sort_pandas(pdf: pd.DataFrame, presort: list[tuple[str, bool]]) -> pd.DataFrame:
-    if not presort:
-        return pdf
-    return pdf.sort_values(
-        [n for n, _ in presort],
-        ascending=[a for _, a in presort],
-        na_position="last",
-        kind="mergesort",
-    )
-
-
 
 
 def _needs_pandas_conv(dt: T.DataType) -> bool:
@@ -662,14 +631,23 @@ def _group_frame_maker(pdf: pd.DataFrame):
         return lambda a, b: pdf.iloc[a:b]
 
 
+def _run_bounds(codes: "list[np.ndarray]", n: int) -> np.ndarray:
+    """Row positions where a run of equal code tuples starts, then ``n``.
+    With no codes the ``n`` rows are one run: ``[0, n]``."""
+    if n == 0:
+        return np.array([0])
+    diff = np.zeros(n - 1, dtype=bool)
+    for c in codes:
+        diff |= c[1:] != c[:-1]
+    return np.flatnonzero(np.r_[True, diff, True])
+
+
 def _arrow_group_bounds(tbl: pa.Table, keys: list[str]):
     """Run-length group bounds + per-key numpy arrays straight from the
     Arrow table — no pandas materialization of the key columns. Valid when
     every key is integer/bool with zero NULLs (the overwhelmingly common
     case for join/group keys); returns None otherwise so the caller falls
     back to the pandas path (which owns the NaN-is-a-key contract)."""
-    import numpy as np
-
     arrs = []
     for k in keys:
         c = tbl.column(k)
@@ -677,19 +655,12 @@ def _arrow_group_bounds(tbl: pa.Table, keys: list[str]):
         if c.null_count != 0 or not (pa.types.is_integer(t) or pa.types.is_boolean(t)):
             return None
         arrs.append(c.to_numpy(zero_copy_only=False))
-    if tbl.num_rows == 0:
-        return np.array([0]), arrs
-    diff = None
-    for a in arrs:
-        d = a[1:] != a[:-1]
-        diff = d if diff is None else (diff | d)
-    bounds = np.flatnonzero(np.r_[True, diff, True])
-    return bounds, arrs
+    return _run_bounds(arrs, tbl.num_rows), arrs
 
 
 def _group_bounds(pdf: pd.DataFrame, keys: list[str]):
     """Run-length group boundaries over key columns whose groups are
-    unbroken runs (the grouped engine's JVM sort makes them so): one
+    unbroken runs (the map engine's JVM sort makes them so): one
     vectorized factorize per key + a diff finds every group in O(n) — no
     pandas groupby object, no per-group index construction, no copies.
     """
@@ -701,14 +672,7 @@ def _group_bounds(pdf: pd.DataFrame, keys: list[str]):
             return col.to_numpy()
         return pd.factorize(col, use_na_sentinel=False)[0]
 
-    if not len(pdf):
-        return np.array([0])
-    diff = None
-    for k in keys:
-        c = _codes(pdf[k])
-        d = c[1:] != c[:-1]
-        diff = d if diff is None else (diff | d)
-    return np.flatnonzero(np.r_[True, diff, True])
+    return _run_bounds([_codes(pdf[k]) for k in keys], len(pdf))
 
 
 class _ArrowResultBatcher:
@@ -724,20 +688,22 @@ class _ArrowResultBatcher:
     functions returning large per-group frames don't multiply peak
     executor memory). Output row order within a flush groups dict-rows
     before other results; the engine's output order is unspecified.
+
+    ``arrow_schema`` carries the user-visible names, ``exec_names`` the
+    plan-side names the flushed batches get.
     """
 
     def __init__(
         self,
-        out_cols: list[str],
         arrow_schema: "pa.Schema",
+        exec_names: list[str],
         name: str,
-        safe_names: "list[str] | None" = None,
         chunk: int = 1024,
         row_chunk: int = 65536,
     ):
-        self.out_cols = out_cols
-        self.schema = arrow_schema  # fields carry the USER-visible names
-        self.safe_names = safe_names  # exec-plan names, if they differ
+        self.out_cols = arrow_schema.names
+        self.schema = arrow_schema
+        self.safe_names = exec_names if exec_names != self.out_cols else None
         self.name = name
         self.chunk = chunk
         self.row_chunk = row_chunk
@@ -832,6 +798,17 @@ class _ArrowResultBatcher:
             out = out.rename_columns(self.safe_names)
         return out.to_batches()
 
+    def drain(self, results: Iterable[Any]) -> "Iterable[pa.RecordBatch]":
+        """Add every result in turn, yielding batches as flushes fill, then
+        the remainder."""
+        for res in results:
+            out = self.add(res)
+            if out is not None:
+                yield from out
+        out = self.flush()
+        if out is not None:
+            yield from out
+
 
 def _partition_no() -> int:
     from pyspark import TaskContext
@@ -852,7 +829,7 @@ def _map_groups(
     required: "Iterable[int]" = (),
     name: str = "transform",
 ) -> DataFrame:
-    """The grouped map engine: ``transform`` with ``partition.by`` is its
+    """The map engine for whole logical partitions: ``transform`` is its
     one-input caller, ``cotransform`` its N-input caller.
 
     ``df`` arrives exchanged so that every key group sits in one
@@ -862,7 +839,9 @@ def _map_groups(
     ``mapInArrow`` groups are found by run-length (no pandas groupby, no
     per-group sort) and ``run(frames, cursor)`` is called once per group.
     One Arrow stream per PARTITION instead of a JVM↔Python round trip per
-    GROUP beats ``groupBy().applyInPandas`` by 10-50× on small groups.
+    GROUP beats ``groupBy().applyInPandas`` by 10-50× on small groups. With
+    no ``keys`` each non-empty physical partition is one group, and with no
+    presort either there is no sort (streaming frames reject one).
 
     ``sides[i] = (columns, names, form)``: the columns of ``df`` that make
     up input i, the names the function sees, and its form — ``'pa'`` gets
@@ -884,13 +863,12 @@ def _map_groups(
     """
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    df = df.sortWithinPartitions(
-        *[e.asc_nulls_first() for e in _nan_safe_key_exprs(df, keys)], *presort
-    )
+    if keys or presort:
+        df = df.sortWithinPartitions(
+            *[e.asc_nulls_first() for e in _nan_safe_key_exprs(df, keys)], *presort
+        )
     exec_schema = exec_schema or out_schema
-    out_cols = out_schema.names
-    arrow_out_schema = to_arrow_schema(out_schema)  # user-visible names
-    safe_names = exec_schema.names if exec_schema.names != out_cols else None
+    arrow_out_schema = to_arrow_schema(out_schema)
     tz = df.sparkSession.conf.get("spark.sql.session.timeZone", "UTC")
     key_fields = [df.schema[k] for k in keys]
     side_fields = [[df.schema[c] for c in cols] for cols, _, _ in sides]
@@ -942,32 +920,85 @@ def _map_groups(
         starts = bounds.tolist()
         pno = _partition_no()
         shared_cursor = PartitionCursor([], [], pno)
-        batcher = _ArrowResultBatcher(
-            out_cols, arrow_out_schema, name, safe_names=safe_names
+
+        def results() -> Iterable[Any]:
+            for g in np.flatnonzero(keep).tolist():
+                a = starts[g]
+                if tagged:
+                    frames = [
+                        make(p[g], p[g + 1]) if p[g + 1] > p[g] else empty
+                        for make, empty, p in zip(makers, empties, pos)
+                    ]
+                else:
+                    frames = [makers[0](a, starts[g + 1])]
+                if cursor_keys:
+                    kv = [
+                        None if isinstance(v, float) and pd.isna(v) else v
+                        for v in (arr[a] for arr in karrs)
+                    ]
+                    cursor = PartitionCursor(cursor_keys, kv, pno)
+                else:
+                    cursor = shared_cursor
+                yield run(frames, cursor)
+
+        batcher = _ArrowResultBatcher(arrow_out_schema, exec_schema.names, name)
+        yield from batcher.drain(results())
+
+    return df.mapInArrow(udf, schema=exec_schema)
+
+
+def _stream_items(res: Any) -> Iterable[Any]:
+    """A streaming function's result as items for the _ArrowResultBatcher:
+    each yielded frame or table on its own, as it comes; a single frame,
+    table or dict as is; an iterable of rows (lists or dicts) as one
+    result."""
+    if res is None or isinstance(res, (pd.DataFrame, pa.Table, dict)):
+        yield res
+        return
+    it = iter(res)
+    first = next(it, None)
+    if first is None or isinstance(first, (pd.DataFrame, pa.Table, pa.RecordBatch)):
+        yield first
+        yield from it
+    else:
+        yield itertools.chain([first], it)
+
+
+def _map_stream(
+    df: DataFrame,
+    names: list[str],
+    form: str,
+    run: "Callable[[Iterable[Any], PartitionCursor], Any]",
+    out_schema: T.StructType,
+    exec_schema: T.StructType,
+) -> DataFrame:
+    """The streaming map for ungrouped ``Iterable[pd.DataFrame]`` /
+    ``Iterable[pa.Table]`` functions: ``run(batches, cursor)`` gets each
+    non-empty physical partition's Arrow batches lazily, under the
+    user-visible ``names``, as ``pa.Table`` (``form`` ``'pa'``) or pandas
+    (``'pd'``, the _map_groups conversion). Each item the function yields
+    goes to the _ArrowResultBatcher as it comes, so worker memory is bounded
+    by the batch size and the batcher's flush bound, not the partition."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_out_schema = to_arrow_schema(out_schema)
+    tz = df.sparkSession.conf.get("spark.sql.session.timeZone", "UTC")
+    fields = df.schema.fields
+
+    def udf(it: "Iterable[pa.RecordBatch]") -> "Iterable[pa.RecordBatch]":
+        it = iter(it)
+        first = next(it, None)
+        if first is None:
+            return
+        batches: Iterable[Any] = (
+            pa.Table.from_batches([b]).rename_columns(names)
+            for b in itertools.chain([first], it)
         )
-        for g in np.flatnonzero(keep).tolist():
-            a = starts[g]
-            if tagged:
-                frames = [
-                    make(p[g], p[g + 1]) if p[g + 1] > p[g] else empty
-                    for make, empty, p in zip(makers, empties, pos)
-                ]
-            else:
-                frames = [makers[0](a, starts[g + 1])]
-            if cursor_keys:
-                kv = [
-                    None if isinstance(v, float) and pd.isna(v) else v
-                    for v in (arr[a] for arr in karrs)
-                ]
-                cursor = PartitionCursor(cursor_keys, kv, pno)
-            else:
-                cursor = shared_cursor
-            out = batcher.add(run(frames, cursor))
-            if out is not None:
-                yield from out
-        out = batcher.flush()
-        if out is not None:
-            yield from out
+        if form == "pd":
+            batches = (_table_to_pandas(t, fields, tz) for t in batches)
+        res = run(batches, PartitionCursor([], [], _partition_no()))
+        batcher = _ArrowResultBatcher(arrow_out_schema, exec_schema.names, "transform")
+        yield from batcher.drain(_stream_items(res))
 
     return df.mapInArrow(udf, schema=exec_schema)
 
@@ -1039,9 +1070,9 @@ def transform(
         if "callback" in kwargs:
             inst.callback = kwargs.pop("callback")
 
-        def call(pdf: pd.DataFrame, cursor: PartitionCursor) -> pd.DataFrame:
+        def call(data: pd.DataFrame, cursor: PartitionCursor) -> pd.DataFrame:
             inst.cursor = cursor
-            return inst.transform(pdf)
+            return inst.transform(data)
 
         init_fn = inst.on_init
         wants_cursor = True  # the instance reads inst.cursor
@@ -1058,8 +1089,7 @@ def transform(
             hints = {}
         in_form = _classify(hints.get(data_param.name, data_param.annotation), _IN_PANDAS)
 
-        def call(pdf: pd.DataFrame, cursor: PartitionCursor) -> Any:
-            data = _to_input(pdf, in_form)
+        def call(data: Any, cursor: PartitionCursor) -> Any:
             if wants_cursor:
                 return fn(cursor, data, **kwargs)
             return fn(data, **kwargs)
@@ -1072,7 +1102,7 @@ def transform(
 
     # pyspark's pandas-UDF entry points cannot resolve exotic field names
     # (e.g. a literal '.'); run the exchange under safe aliases and restore
-    # the user-visible names at both pandas boundaries.
+    # the user-visible names inside the udf.
     orig_in = list(df.columns)
     safe_in = [
         c if _SAFE_NAME_RE.fullmatch(c) else f"__fugue_in_{i}__"
@@ -1095,29 +1125,12 @@ def transform(
         else out_schema
     )
 
-    def _restore_in(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pdf.set_axis(orig_in, axis=1) if rename_in else pdf
-
-    def _to_safe_out(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pdf.set_axis(safe_out, axis=1) if rename_out else pdf
-
     init_state: list[bool] = []  # once per python worker (≈ physical partition)
 
     def maybe_init() -> None:
         if init_fn is not None and not init_state:
             init_state.append(True)
             init_fn(input_schema)
-
-    def run_one(pdf: pd.DataFrame, cursor: PartitionCursor) -> pd.DataFrame:
-        pdf = _sort_pandas(pdf, presort)
-        try:
-            res = call(pdf, cursor)
-            out = _result_to_pandas(res, out_cols, _nested_out_cols(out_schema))
-            if discard_output:
-                return pd.DataFrame(columns=out_cols)
-            return _conform(out, out_cols, "transform")
-        except err_types:
-            return pd.DataFrame(columns=out_cols)
 
     safe_keys = [name_to_safe[k] for k in keys]
 
@@ -1146,31 +1159,51 @@ def transform(
     if compiled_df is not None:
         return compiled_df
 
-    if keys:
-        if spec.algo in ("default", "hash"):
-            # one hash exchange on the NaN-safe keys. The count is pinned
-            # explicitly: AQE would otherwise coalesce by BYTE size,
-            # collapsing a python-cost-heavy stage onto one core.
-            num = spec.resolve_num(df)
-            if num <= 0:
-                # python stages are CPU-bound: parallelism is core-bound, not
-                # byte-bound, so a byte-sized shuffle conf (tune_for_input on
-                # a small input) must not throttle the python workers
-                num = max(
-                    int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")),
-                    df.sparkSession.sparkContext.defaultParallelism,
-                )
-            df = df.repartition(num, *_nan_safe_key_exprs(df, safe_keys))
-        else:
-            df = apply_partition_spec(
-                df, PartitionSpec(by=safe_keys, num=spec.num, algo=spec.algo)
+    if keys and spec.algo in ("default", "hash"):
+        # one hash exchange on the NaN-safe keys. The count is pinned
+        # explicitly: AQE would otherwise coalesce by BYTE size,
+        # collapsing a python-cost-heavy stage onto one core.
+        num = spec.resolve_num(df)
+        if num <= 0:
+            # python stages are CPU-bound: parallelism is core-bound, not
+            # byte-bound, so a byte-sized shuffle conf (tune_for_input on
+            # a small input) must not throttle the python workers
+            num = max(
+                int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")),
+                df.sparkSession.sparkContext.defaultParallelism,
             )
+        df = df.repartition(num, *_nan_safe_key_exprs(df, safe_keys))
+    else:
+        # presort is the engine's sort, not the exchange's
+        df = apply_partition_spec(
+            df, PartitionSpec(by=safe_keys, num=spec.num, algo=spec.algo)
+        )
+
+    if (
+        not keys
+        and in_form in (_IN_ITER_PANDAS, _IN_ITER_ARROW)
+        and not (presort or err_types or discard_output)
+    ):
+
+        def run_stream(batches: Iterable[Any], cursor: PartitionCursor) -> Any:
+            maybe_init()
+            return call(batches, cursor)
+
+        res = _map_stream(
+            df,
+            orig_in,
+            "pa" if in_form == _IN_ITER_ARROW else "pd",
+            run_stream,
+            out_schema,
+            exec_schema,
+        )
+    else:
         from pyspark.sql import functions as F
 
         def run(frames: "list[Any]", cursor: PartitionCursor) -> Any:
             maybe_init()
             try:
-                res = call(frames[0], cursor)
+                res = call(_to_input(frames[0], in_form), cursor)
             except err_types:
                 return None
             return None if discard_output else res
@@ -1194,62 +1227,6 @@ def transform(
             keys if wants_cursor else [],
             exec_schema=exec_schema,
         )
-        return res.toDF(*out_cols) if rename_out else res
-
-    # ungrouped: apply per physical partition (coarse) via mapInPandas
-    df = apply_partition_spec(df, spec)
-    streaming = (
-        not is_class
-        and in_form in (_IN_ITER_PANDAS, _IN_ITER_ARROW)
-        and not presort
-        and not err_types
-        and not discard_output
-    )
-
-    if streaming and in_form == _IN_ITER_ARROW and not rename_in and not rename_out:
-        # true arrow path: no pandas materialization at either boundary
-        # (also sidesteps pandas timestamp munging — the reference needed
-        # special handling there, execution_engine.py:300-305)
-        def arrow_udf(it: "Iterable[pa.RecordBatch]") -> "Iterable[pa.RecordBatch]":
-            it = iter(it)
-            first = next(it, None)
-            if first is None:
-                return
-            maybe_init()
-            cursor = PartitionCursor([], [], _partition_no())
-            tables = (
-                pa.Table.from_batches([b]) for b in itertools.chain([first], it)
-            )
-            res = fn(cursor, tables, **kwargs) if wants_cursor else fn(tables, **kwargs)
-            if isinstance(res, pa.Table):
-                res = [res]
-            for t in res:
-                t = t.select(out_cols) if set(out_cols) <= set(t.column_names) else t
-                yield from t.to_batches()
-
-        return df.mapInArrow(arrow_udf, schema=out_schema)
-
-    def map_udf(it: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        it = iter(it)
-        first = next(it, None)
-        if first is None:
-            return  # skip empty physical partitions (reference behavior)
-        chain = (_restore_in(b) for b in itertools.chain([first], it))
-        maybe_init()
-        cursor = PartitionCursor([], [], _partition_no())
-        if streaming:
-            # feed batches straight through — bounded memory
-            batches: Any = chain
-            if in_form == _IN_ITER_ARROW:
-                batches = (pa.Table.from_pandas(b, preserve_index=False) for b in chain)
-            res = fn(cursor, batches, **kwargs) if wants_cursor else fn(batches, **kwargs)
-            out = _result_to_pandas(res, out_cols, _nested_out_cols(out_schema))
-            yield _to_safe_out(_conform(out, out_cols, "transform"))
-        else:
-            pdf = pd.concat(list(chain), ignore_index=True)
-            yield _to_safe_out(run_one(pdf, cursor))
-
-    res = df.mapInPandas(map_udf, schema=exec_schema)
     return res.toDF(*out_cols) if rename_out else res
 
 

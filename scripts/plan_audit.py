@@ -10,9 +10,11 @@ Run: python scripts/plan_audit.py   (writes PLANS.md at the repo root)
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF = "/root/testdata/sf0.001"
 
@@ -71,7 +73,7 @@ def main() -> None:
         except Exception as ex:  # noqa: BLE001
             rows.append((name, "?", "?", "?", "?", f"error: {str(ex)[:60]}"))
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write(
             "# PLANS — physical-plan scale audit of every gate query\n\n"
             "Generated by `scripts/plan_audit.py` (plan_summary over each\n"

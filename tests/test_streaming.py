@@ -79,6 +79,33 @@ def test_transform_stream(spark):
     assert n == load_table(spark, SF, "events").count()
 
 
+def test_transform_stream_python_map_engine(spark, monkeypatch):
+    """With auto-compile off, both map shapes run on a stream: a whole
+    micro-batch partition (no sort, which streams reject) and the lazy
+    batch stream."""
+    from collections.abc import Iterable
+
+    from fugue_spark.benchmarks import load_table
+    from fugue_spark.plans import physical_plan
+
+    monkeypatch.setenv("FUGUE_SPARK_AUTO_COMPILE", "0")
+    stream = fs.load_stream(spark, EVENTS, ts_nanos_col="ts")
+
+    def enrich(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pdf.assign(v2=pdf.value * 2)[["event_id", "v2"]]
+
+    def enrich_batches(pdfs: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
+        for pdf in pdfs:
+            yield enrich(pdf)
+
+    want = load_table(spark, SF, "events").count()
+    for i, fn in enumerate((enrich, enrich_batches)):
+        out = fs.transform_stream(stream, fn, schema="event_id:long,v2:double")
+        assert "MapInArrow" in physical_plan(out, "simple")
+        res = fs.run_to_memory(out, f"tx_python_{i}", output_mode="append")
+        assert res.count() == want
+
+
 def test_stateful_transform_counts(spark):
     stream = fs.load_stream(spark, EVENTS, ts_nanos_col="ts")
 

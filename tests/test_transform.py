@@ -348,17 +348,17 @@ def test_transform_iterable_arrow_native_path(spark):
         for t in tables:
             yield t.filter(pa.compute.greater(t["a"], 25))
 
-    res = fa.transform(df, arrow_stream, schema="*")
-    got = rows(res)
-    assert len(got) == 24
-    assert all(r[0] > 25 for r in got)
-    # plan should be ArrowEvalPython/mapInArrow, not pandas
-    import io, contextlib
+    from fugue_spark.plans import physical_plan
 
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        res.explain("simple")
-    assert "Arrow" in buf.getvalue() or "MapInArrow" in buf.getvalue()
+    # the exotic name runs under a safe alias and stays on the Arrow path
+    for frame in (df, df.toDF("a", "a.b")):
+        res = fa.transform(frame, arrow_stream, schema="*")
+        assert res.columns == frame.columns
+        got = rows(res)
+        assert len(got) == 24
+        assert all(r[0] > 25 for r in got)
+        plan = physical_plan(res, "simple")
+        assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
 
 
 def test_grouped_transform_plan_shape(spark):
@@ -657,9 +657,32 @@ def test_cursor_keys_same_for_every_input_form(spark):
     assert len({p for _, p in out}) > 1, out
 
 
+def test_group_bounds_without_keys_cover_every_row():
+    """With no keys the whole frame is one group."""
+    from fugue_spark.transform import _arrow_group_bounds, _group_bounds
+
+    bounds, arrs = _arrow_group_bounds(pa.table({"a": [1, 2, 3]}), [])
+    assert bounds.tolist() == [0, 3] and arrs == []
+    assert _group_bounds(pd.DataFrame({"a": [1, 2, 3]}), []).tolist() == [0, 3]
+    assert _group_bounds(pd.DataFrame({"a": []}), []).tolist() == [0]
+
+
+def test_stream_output_is_pulled_one_item_at_a_time():
+    """A streaming function's yielded frames reach the batcher one by one,
+    never as the whole output at once."""
+    from fugue_spark.transform import _stream_items
+
+    def gen():
+        yield pd.DataFrame({"a": [1]})
+        raise AssertionError("pulled past the first item")
+
+    assert next(_stream_items(gen())).a.tolist() == [1]
+
+
 def test_presort_order_does_not_depend_on_algo(spark):
-    """Every partition algo sorts key groups in the JVM, so presort puts
-    NaN above every number and NULL last under asc and desc alike."""
+    """Every partition algo, and the ungrouped call, sorts in the JVM, so
+    presort puts NaN above every number and NULL last under asc and desc
+    alike."""
     df = make_df(
         spark,
         [[1, 0, 1.0], [1, 1, math.nan], [1, 2, None], [1, 3, 3.0], [1, 4, 2.0]],
@@ -670,13 +693,14 @@ def test_presort_order_does_not_depend_on_algo(spark):
         return {"order": ",".join(str(i) for i in pdf.i)}
 
     expected = {"x asc": "0,4,3,1,2", "x desc": "1,3,4,0,2"}
-    for algo in ("default", "hash", "even", "rand"):
+    specs = [{"by": ["k"], "algo": algo, "num": 2} for algo in ("default", "hash", "even", "rand")]
+    for spec in specs + [{"num": 1}]:
         for presort, want in expected.items():
             res = fa.transform(
                 df,
                 order,
                 schema="order:str",
-                partition={"by": ["k"], "presort": presort, "algo": algo, "num": 2},
+                partition={**spec, "presort": presort},
                 compile=False,
             )
-            assert rows(res) == [(want,)], (algo, presort, rows(res))
+            assert rows(res) == [(want,)], (spec, presort, rows(res))
