@@ -35,6 +35,7 @@ turns listed exceptions into empty output for that logical partition
 
 from __future__ import annotations
 
+import collections
 import inspect
 import itertools
 import re
@@ -328,24 +329,6 @@ def _expand_dict_result(res: dict, nested_cols: "set[str]") -> "dict | pd.DataFr
     return pd.DataFrame(out)
 
 
-def _result_to_pandas(res: Any, out_cols: list[str]) -> pd.DataFrame:
-    """A frame or an iterable result (frames, tables, row lists or row
-    dicts) as one pandas frame; dict and Arrow results never get here (the
-    _ArrowResultBatcher takes them first)."""
-    if isinstance(res, pd.DataFrame):
-        return res
-    if isinstance(res, Iterable):
-        items = list(res)
-        if not items:
-            return pd.DataFrame(columns=out_cols)
-        if isinstance(items[0], pd.DataFrame):
-            return pd.concat(items, ignore_index=True)
-        if isinstance(items[0], pa.Table):
-            return pa.concat_tables(items).to_pandas()
-        return pd.DataFrame(items, columns=out_cols)
-    raise ValueError(f"unsupported transform output {type(res)}")
-
-
 def _conform(pdf: pd.DataFrame, out_cols: list[str], name: str) -> pd.DataFrame:
     if list(pdf.columns) == out_cols:
         return pdf
@@ -442,27 +425,30 @@ def _check_validations(rules: "dict | None", df: DataFrame, spec: PartitionSpec)
             raise ValueError(f"unknown validation rule {rule!r}")
 
 
-def _needs_pandas_conv(dt: T.DataType) -> bool:
-    """Fields whose ``pyarrow.Table.to_pandas`` output differs from pyspark's
-    mapInPandas conversion semantics (tz localization, map→dict, struct
-    field handling) and need the pyspark converter applied."""
-    return isinstance(dt, (T.TimestampType, T.StructType, T.MapType)) or (
-        isinstance(dt, T.ArrayType) and _needs_pandas_conv(dt.elementType)
-    )
+def _nests(dt: T.DataType, leaf: tuple) -> bool:
+    """Whether ``dt`` is, or holds at any depth, one of the ``leaf`` types."""
+    if isinstance(dt, leaf):
+        return True
+    if isinstance(dt, T.ArrayType):
+        return _nests(dt.elementType, leaf)
+    if isinstance(dt, T.MapType):
+        return _nests(dt.keyType, leaf) or _nests(dt.valueType, leaf)
+    return isinstance(dt, T.StructType) and any(_nests(f.dataType, leaf) for f in dt)
 
 
 def _table_to_pandas(tbl: pa.Table, fields: list, tz: str) -> pd.DataFrame:
     """One whole-partition Arrow→pandas conversion with pyspark's
     mapInPandas semantics (serializers.py arrow_to_pandas): date_as_object,
-    nanosecond coercion, and — only for the fields that need it — the
-    pyspark per-column converter (maps become dicts, tz-aware timestamps
-    localize). Converting once per partition instead of once per Arrow
-    batch removes the per-batch conversion + pd.concat the pandas
-    serializer pays, and yields a consolidated frame (fast block slicing).
+    nanosecond coercion, and — only for the fields whose ``to_pandas``
+    output differs, those holding a timestamp, struct or map — the pyspark
+    per-column converter (maps become dicts, tz-aware timestamps localize).
+    Converting once per partition instead of once per Arrow batch removes
+    the per-batch conversion + pd.concat the pandas serializer pays, and
+    yields a consolidated frame (fast block slicing).
     """
     pdf = tbl.to_pandas(date_as_object=True, coerce_temporal_nanoseconds=True)
     for i, f in enumerate(fields):
-        if _needs_pandas_conv(f.dataType):
+        if _nests(f.dataType, (T.TimestampType, T.StructType, T.MapType)):
             from pyspark.sql.pandas.types import _create_converter_to_pandas
 
             conv = _create_converter_to_pandas(
@@ -684,25 +670,44 @@ class _ArrowResultBatcher:
     pa.Table results are conformed and cast Arrow-side; pandas/iterable
     results take one ``from_pandas`` per flush.
 
+    pandas results carry naive timestamps as wall-clock time in the session
+    zone ``tz``, which pyarrow would read as UTC: outside a UTC session
+    they get pyspark's pandas converter first, as in pyspark's serializer.
+    Dict rows with timestamps go through pandas (``from_pylist`` reads
+    ``pd.NaT`` as 0001-01-01).
+
     Flushing is bounded by buffered rows as well as result count (user
     functions returning large per-group frames don't multiply peak
     executor memory). Output row order within a flush groups dict-rows
     before other results; the engine's output order is unspecified.
 
-    ``arrow_schema`` carries the user-visible names, ``exec_names`` the
+    ``out_schema`` carries the user-visible names, ``exec_names`` the
     plan-side names the flushed batches get.
     """
 
     def __init__(
         self,
-        arrow_schema: "pa.Schema",
+        out_schema: T.StructType,
         exec_names: list[str],
         name: str,
+        tz: str,
         chunk: int = 1024,
         row_chunk: int = 65536,
     ):
+        from pyspark.sql.pandas.types import _create_converter_from_pandas, to_arrow_schema
+
+        arrow_schema = to_arrow_schema(out_schema)
         self.out_cols = arrow_schema.names
         self.schema = arrow_schema
+        ts = [_nests(f.dataType, (T.TimestampType, T.TimestampNTZType)) for f in out_schema]
+        self.dicts_via_pandas = any(ts)
+        # in a UTC session naive and UTC readings agree: nothing to convert
+        conv = _create_converter_from_pandas
+        self.ts_convs = [
+            (i, conv(f.dataType, timezone=tz, error_on_duplicated_field_names=False))
+            for i, f in enumerate(out_schema)
+            if ts[i] and tz != "UTC"
+        ]
         self.safe_names = exec_names if exec_names != self.out_cols else None
         self.name = name
         self.chunk = chunk
@@ -755,35 +760,45 @@ class _ArrowResultBatcher:
         if isinstance(res, dict):
             self.dicts.append(res)
             self.rows += 1
-        elif isinstance(res, pa.Table):
+        elif isinstance(res, (pa.Table, pa.RecordBatch)):
             if res.num_rows == 0:
                 return None
-            self.tables.append(self._conform_arrow(res))
-            self.rows += res.num_rows
-        elif isinstance(res, pa.RecordBatch):
-            if res.num_rows == 0:
-                return None
-            self.tables.append(self._conform_arrow(pa.Table.from_batches([res])))
+            self.tables.append(self._conform_arrow(pa.table(res)))
             self.rows += res.num_rows
         else:
-            pdf = _conform(_result_to_pandas(res, self.out_cols), self.out_cols, self.name)
+            # one frame, or an iterable of rows (lists or dicts); iterables
+            # of frames were split up by _stream_items
+            if not isinstance(res, (pd.DataFrame, Iterable)):
+                raise ValueError(f"unsupported transform output {type(res)}")
+            if not isinstance(res, pd.DataFrame):
+                res = pd.DataFrame(list(res), columns=self.out_cols)
+            pdf = _conform(res, self.out_cols, self.name)
             if len(pdf) == 0:
                 return None
-            self.tables.append(
-                pa.Table.from_pandas(pdf, schema=self.schema, preserve_index=False)
-            )
+            self.tables.append(self._from_pandas(pdf))
             self.rows += len(pdf)
         self.n += 1
         if self.n >= self.chunk or self.rows >= self.row_chunk:
             return self.flush()
         return None
 
+    def _from_pandas(self, pdf: pd.DataFrame) -> pa.Table:
+        if self.ts_convs:
+            pdf = pdf.copy(deep=False)
+            for i, conv in self.ts_convs:
+                pdf.isetitem(i, conv(pdf.iloc[:, i]))
+        return pa.Table.from_pandas(pdf, schema=self.schema, preserve_index=False)
+
     def flush(self) -> "list[pa.RecordBatch] | None":
         if self.n == 0:
             return None
         parts = []
         if self.dicts:
-            parts.append(pa.Table.from_pylist(self.dicts, schema=self.schema))
+            parts.append(
+                self._from_pandas(pd.DataFrame(self.dicts, columns=self.out_cols))
+                if self.dicts_via_pandas
+                else pa.Table.from_pylist(self.dicts, schema=self.schema)
+            )
             self.dicts = []
         parts.extend(self.tables)
         self.tables = []
@@ -808,6 +823,26 @@ class _ArrowResultBatcher:
         out = self.flush()
         if out is not None:
             yield from out
+
+
+_FRAMES = (pd.DataFrame, pa.Table, pa.RecordBatch)
+
+
+def _stream_items(res: Any) -> Iterable[Any]:
+    """A function's result as items for the _ArrowResultBatcher, the one
+    rule both engines split results by: each yielded frame, table or batch
+    on its own, as it comes; a single one, or a dict, as is; an iterable of
+    rows (lists or dicts) as one result."""
+    if res is None or isinstance(res, (dict, *_FRAMES)):
+        yield res
+        return
+    it = iter(res)
+    first = next(it, None)
+    if first is None or isinstance(first, _FRAMES):
+        yield first
+        yield from it
+    else:
+        yield itertools.chain([first], it)
 
 
 def _partition_no() -> int:
@@ -858,17 +893,15 @@ def _map_groups(
     when the function reads no key values (or the key is a surrogate), in
     which case one shared key-less cursor per partition saves the per-group
     extraction. ``run`` returns the raw user result (None skips the group);
-    the _ArrowResultBatcher conforms and batches it. ``exec_schema`` is the
-    plan-side output schema when its names differ from ``out_schema``'s.
+    _stream_items pulls it apart and the _ArrowResultBatcher conforms and
+    batches it. ``exec_schema`` is the plan-side output schema when its
+    names differ from ``out_schema``'s.
     """
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     if keys or presort:
         df = df.sortWithinPartitions(
             *[e.asc_nulls_first() for e in _nan_safe_key_exprs(df, keys)], *presort
         )
     exec_schema = exec_schema or out_schema
-    arrow_out_schema = to_arrow_schema(out_schema)
     tz = df.sparkSession.conf.get("spark.sql.session.timeZone", "UTC")
     key_fields = [df.schema[k] for k in keys]
     side_fields = [[df.schema[c] for c in cols] for cols, _, _ in sides]
@@ -939,29 +972,12 @@ def _map_groups(
                     cursor = PartitionCursor(cursor_keys, kv, pno)
                 else:
                     cursor = shared_cursor
-                yield run(frames, cursor)
+                yield from _stream_items(run(frames, cursor))
 
-        batcher = _ArrowResultBatcher(arrow_out_schema, exec_schema.names, name)
+        batcher = _ArrowResultBatcher(out_schema, exec_schema.names, name, tz)
         yield from batcher.drain(results())
 
     return df.mapInArrow(udf, schema=exec_schema)
-
-
-def _stream_items(res: Any) -> Iterable[Any]:
-    """A streaming function's result as items for the _ArrowResultBatcher:
-    each yielded frame or table on its own, as it comes; a single frame,
-    table or dict as is; an iterable of rows (lists or dicts) as one
-    result."""
-    if res is None or isinstance(res, (pd.DataFrame, pa.Table, dict)):
-        yield res
-        return
-    it = iter(res)
-    first = next(it, None)
-    if first is None or isinstance(first, (pd.DataFrame, pa.Table, pa.RecordBatch)):
-        yield first
-        yield from it
-    else:
-        yield itertools.chain([first], it)
 
 
 def _map_stream(
@@ -979,9 +995,6 @@ def _map_stream(
     (``'pd'``, the _map_groups conversion). Each item the function yields
     goes to the _ArrowResultBatcher as it comes, so worker memory is bounded
     by the batch size and the batcher's flush bound, not the partition."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_out_schema = to_arrow_schema(out_schema)
     tz = df.sparkSession.conf.get("spark.sql.session.timeZone", "UTC")
     fields = df.schema.fields
 
@@ -997,7 +1010,7 @@ def _map_stream(
         if form == "pd":
             batches = (_table_to_pandas(t, fields, tz) for t in batches)
         res = run(batches, PartitionCursor([], [], _partition_no()))
-        batcher = _ArrowResultBatcher(arrow_out_schema, exec_schema.names, "transform")
+        batcher = _ArrowResultBatcher(out_schema, exec_schema.names, "transform", tz)
         yield from batcher.drain(_stream_items(res))
 
     return df.mapInArrow(udf, schema=exec_schema)
@@ -1204,6 +1217,13 @@ def transform(
             maybe_init()
             try:
                 res = call(_to_input(frames[0], in_form), cursor)
+                if isinstance(res, Iterable) and not isinstance(res, (dict, *_FRAMES)):
+                    # a generator's body runs only as it is iterated: run it
+                    # here, where its errors are ignored and its output dropped
+                    if discard_output:
+                        collections.deque(res, 0)
+                    elif err_types:
+                        res = list(res)
             except err_types:
                 return None
             return None if discard_output else res

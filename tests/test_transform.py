@@ -158,6 +158,82 @@ def test_out_transform_side_effect(spark, tmp_path):
     assert len(glob.glob(os.path.join(out, "part_*.csv"))) == 3
 
 
+def test_out_transform_runs_generator_functions(spark, tmp_path):
+    """A generator function's body only runs as its output is iterated;
+    out_transform must still run it, grouped and ungrouped."""
+    import os
+
+    df = make_df(spark, [[1], [2], [3]], "a:int")
+    for name, partition in [("grouped", {"by": ["a"]}), ("ungrouped", {"num": 1})]:
+        out = str(tmp_path / name)
+        os.makedirs(out)
+
+        def writer(pdf: pd.DataFrame) -> Iterable[pd.DataFrame]:
+            for a in pdf.a:
+                open(os.path.join(out, f"row_{a}"), "w").close()
+                yield pdf
+
+        fa.out_transform(df, writer, partition=partition)
+        assert sorted(os.listdir(out)) == ["row_1", "row_2", "row_3"], name
+
+
+def test_ignore_errors_covers_generator_output(spark):
+    """An error a generator raises after its first yield empties that
+    logical partition's output, as an error before it does."""
+    df = make_df(spark, [["a", 1], ["b", 2]], "k:str,v:int")
+
+    def gen(pdf: pd.DataFrame) -> Iterable[pd.DataFrame]:
+        yield pdf
+        if (pdf.k == "a").any():
+            raise ValueError("boom")
+
+    for partition, want in [({"by": ["k"]}, [("b", 2)]), ({"num": 1}, [])]:
+        res = fa.transform(df, gen, schema="*", partition=partition, ignore_errors=[ValueError])
+        assert rows(res) == want, partition
+
+
+def test_timestamps_pass_through_in_session_time_zone(spark):
+    """Functions see naive wall-clock timestamps in the session time zone;
+    returning them unchanged must give back the same instants (and NULLs),
+    in every output form and zone."""
+    import datetime
+
+    from pyspark.sql import types as T
+
+    t = datetime.datetime(2024, 3, 1, 12, 30)
+    df = spark.createDataFrame(
+        [[1, t, t], [2, None, None]],
+        T.StructType(
+            [
+                T.StructField("k", T.LongType()),
+                T.StructField("t", T.TimestampType()),
+                T.StructField("u", T.TimestampNTZType()),
+            ]
+        ),
+    )
+
+    def same(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pdf
+
+    def same_iter(dfs: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
+        yield from dfs
+
+    def as_dict(pdf: pd.DataFrame) -> dict:
+        return {"k": pdf.k.iloc[0], "t": pdf.t.iloc[0], "u": pdf.u.iloc[0]}
+
+    cases = [(same, {"by": ["k"]}), (same, None), (same_iter, None), (as_dict, {"by": ["k"]})]
+    old = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for tz in ("UTC", "America/Los_Angeles"):
+            spark.conf.set("spark.sql.session.timeZone", tz)
+            want = rows(df)
+            for fn, partition in cases:
+                res = fa.transform(df, fn, schema="*", partition=partition, compile=False)
+                assert rows(res) == want, (tz, fn.__name__, partition)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+
+
 def test_transform_empty_partition_skip(spark):
     df = make_df(spark, [[1]], "a:int").repartition(8)
     calls = []
