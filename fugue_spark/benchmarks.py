@@ -53,13 +53,29 @@ TABLES = (
 # held a tight 1.90-2.26s and BEAT the best cached sample. Skipping the
 # cache is also the honest 100 TB posture: nobody persists 100 TB of
 # input before querying it.
+#
+# On a running JVM the cache build is nearly all of a bench set-up's CPU,
+# so each cache is built in one pass with no work the queries do not use.
+# Build CPU-s of sf0.1 lineitem (600k rows, local[4], 4-core box, median
+# [min-max] of 6 builds on a warm JVM) for each step:
+# * several partitions: rows are spread by a content hash (xxhash64 of
+#   every hashable column). A round-robin repartition sorts every row
+#   first so that a retried task gets the same rows (SPARK-23207); a
+#   content hash is retry-deterministic without the sort.
+#   Round-robin 2.05 [1.94-2.37] -> hash 1.61 [1.44-1.94].
+# * one partition: coalesce(1), so the build has no exchange at all.
+# * uncompressed column batches: hash 1.61 -> 1.07 [0.94-1.32]. Compression
+#   saves a few MiB (lineitem 21.0 -> 17.9 MiB, orders 3.4 -> 2.9,
+#   documents 0.8 -> 0.8: text does not compress), and the query plans
+#   above the cache are the same for both layouts.
 _TABLE_CACHE: dict[tuple[str, str], DataFrame] = {}
+_COMPRESSED = "spark.sql.inMemoryColumnarStorage.compressed"
 
 
 def warm_cache(spark: SparkSession, sf_dir: str, tables: "tuple[str, ...]" = TABLES) -> None:
     from pyspark import StorageLevel
 
-    from fugue_spark.session import _SMALL_PARTITION_BYTES
+    from fugue_spark.session import _SMALL_PARTITION_BYTES, _path_bytes
 
     n = spark.sparkContext.defaultParallelism
     # parquet BYTES track compute for scan/join/agg tables, but badly
@@ -67,10 +83,14 @@ def warm_cache(spark: SparkSession, sf_dir: str, tables: "tuple[str, ...]" = TAB
     # vector math — row-proportional with heavy per-row constants), so
     # those always fan out to all cores AND stay cached at every scale
     # (they are small — the compute, not the scan, is the workload).
+    # Measured on sf1 documents (50k rows, 3.5 MB; local[4], 4-core box,
+    # warm median of 3 fresh processes x 3 passes): p5 2.94 s cached vs
+    # 4.55 s native, p6 2.83 vs 4.68 — the native scan of a file this
+    # small is one split whatever its row groups.
     compute_dense = {"documents", "embeddings", "events"}
     for t in tables:
         path = os.path.join(sf_dir, f"{t}.parquet")
-        if not os.path.exists(path) or (sf_dir, t) in _TABLE_CACHE:
+        if not os.path.exists(path) or _cached(spark, sf_dir, t) is not None:
             continue
         if t not in compute_dense and _splittable_row_groups(path) > 1:
             continue  # native scan parallelizes; see module note above
@@ -79,24 +99,52 @@ def warm_cache(spark: SparkSession, sf_dir: str, tables: "tuple[str, ...]" = TAB
         # pay 32 task dispatches for microseconds of work (measured: the
         # dominant sf0.1 constant). Same granule tune_for_input uses for
         # shuffle partitions; large tables still fan out to all cores.
-        size = os.path.getsize(path) if os.path.isfile(path) else 0
-        if size == 0 and os.path.isdir(path):
-            size = sum(
-                os.path.getsize(os.path.join(path, f))
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            )
         if t in compute_dense:
             parts = n
         else:
-            parts = max(1, min(n, size // _SMALL_PARTITION_BYTES + 1))
-        df = (
-            load_table(spark, sf_dir, t)
-            .repartition(parts)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        df.count()
+            parts = max(1, min(n, _path_bytes(path) // _SMALL_PARTITION_BYTES + 1))
+        df = _spread(load_table(spark, sf_dir, t), parts)
+        prev = spark.conf.get(_COMPRESSED)
+        spark.conf.set(_COMPRESSED, "false")
+        try:
+            df = df.persist(StorageLevel.MEMORY_AND_DISK)
+            df.count()
+        except BaseException:
+            df.unpersist()
+            raise
+        finally:
+            spark.conf.set(_COMPRESSED, prev)
         _TABLE_CACHE[(sf_dir, t)] = df
+
+
+def _spread(df: DataFrame, parts: int) -> DataFrame:
+    """``df`` in ``parts`` partitions without a sort; see the module note."""
+    if parts == 1:
+        return df.coalesce(1)
+    from pyspark.sql import functions as F
+
+    from fugue_spark.sources import hashable
+
+    cols = [df[f.name] for f in df.schema.fields if hashable(f.dataType)]
+    if not cols:
+        return df.repartition(parts)
+    return df.repartition(parts, F.xxhash64(*cols))
+
+
+def _cached(spark: SparkSession, sf_dir: str, name: str) -> "DataFrame | None":
+    """The cached frame of ``name`` if it belongs to ``spark``. An entry
+    made in another session is dropped: once that session stops, reading
+    it fails."""
+    df = _TABLE_CACHE.get((sf_dir, name))
+    if df is None or df.sparkSession is spark:
+        return df
+    if df.sparkSession._jsparkSession.equals(spark._jsparkSession):
+        return df
+    try:
+        _TABLE_CACHE.pop((sf_dir, name)).unpersist()
+    except Exception:  # noqa: BLE001 - the old session may be stopped
+        pass
+    return None
 
 
 def _splittable_row_groups(path: str) -> int:
@@ -131,7 +179,7 @@ def release_cache(sf_dir: "str | None" = None) -> None:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    cached = _TABLE_CACHE.get((sf_dir, name))
+    cached = _cached(spark, sf_dir, name)
     if cached is not None:
         return cached
     if name == "events":

@@ -78,7 +78,11 @@ def plan_fits(df: DataFrame, max_bytes: int) -> bool:
     return est <= max_bytes
 
 
-def _dir_bytes(path: str) -> int:
+def _path_bytes(path: str) -> int:
+    """Bytes on disk under ``path``: a file's size, a directory's walk
+    total, 0 for a missing path."""
+    if os.path.isfile(path):
+        return os.path.getsize(path)
     total = 0
     for root, _dirs, files in os.walk(path):
         for f in files:
@@ -124,7 +128,7 @@ def tune_for_input(spark: SparkSession, input_dir: str) -> dict:
         spark.conf.set(base_key, str(baseline))
     else:
         baseline = int(spark.conf.get(base_key))
-    size = _dir_bytes(input_dir) if os.path.isdir(input_dir) else 0
+    size = _path_bytes(input_dir) if os.path.isdir(input_dir) else 0
     if 0 < size < SMALL_INPUT_BYTES:
         parts = max(4, min(baseline, size // _SMALL_PARTITION_BYTES))
         spark.conf.set("spark.sql.adaptive.enabled", "false")

@@ -19,6 +19,7 @@ import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from fugue_spark.schema import parse_schema
 from fugue_spark.session import plan_fits
@@ -31,6 +32,18 @@ _FORMATS = ("parquet", "csv", "json", "orc", "avro")
 # parquet/HDFS block size. save_df pays the clustering shuffle only when the
 # frame may not fit files_per_partition files of this size.
 _TARGET_FILE_BYTES = 128 << 20
+
+
+def hashable(dt: T.DataType) -> bool:
+    """True when ``xxhash64`` accepts a column of type ``dt``: it rejects
+    MapType anywhere in the type tree."""
+    if isinstance(dt, T.MapType):
+        return False
+    if isinstance(dt, T.ArrayType):
+        return hashable(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return all(hashable(f.dataType) for f in dt.fields)
+    return True
 
 
 def infer_format(path: str) -> str:
@@ -110,17 +123,6 @@ def save_df(
         # value AND value×salt write parallelism. No rand() — reruns
         # produce identical layouts.
         from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        def hashable(dt: "T.DataType") -> bool:
-            # xxhash64 rejects MapType anywhere in the tree
-            if isinstance(dt, T.MapType):
-                return False
-            if isinstance(dt, T.ArrayType):
-                return hashable(dt.elementType)
-            if isinstance(dt, T.StructType):
-                return all(hashable(f.dataType) for f in dt.fields)
-            return True
 
         explicit_layout = "files_per_partition" in params
         k = int(params.pop("files_per_partition", 8))

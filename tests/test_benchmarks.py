@@ -1,0 +1,143 @@
+"""The bench input cache (``benchmarks.warm_cache``): layout, content,
+conf hygiene and session ownership."""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+import textwrap
+
+import pytest
+from conftest import SF_CORRECTNESS as SF
+from conftest import SF_SMOKE
+
+from fugue_spark import benchmarks as B
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.fixture(scope="module")
+def cached(spark):
+    """Every table of SF cached, plus an uncached read of each to compare
+    with; the cache is released afterwards so other tests read parquet."""
+    refs = {t: B.load_table(spark, SF, t) for t in B.TABLES}
+    B.warm_cache(spark, SF)
+    yield {t: B._TABLE_CACHE[(SF, t)] for t in B.TABLES}, refs
+    B.release_cache(SF)
+
+
+def test_cache_is_built_without_round_robin(cached):
+    frames, _ = cached
+    # every sf0.01 file is one row group, so every table is cached
+    assert set(frames) == set(B.TABLES)
+    for t, df in frames.items():
+        assert "RoundRobinPartitioning" not in _plan(df), t
+
+
+def test_compute_dense_table_is_hash_spread(cached, spark):
+    df = cached[0]["documents"]
+    assert "hashpartitioning(xxhash64(" in _plan(df)
+    assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+def test_one_partition_table_has_no_exchange(cached):
+    for t in ("region", "nation", "customer"):
+        df = cached[0][t]
+        assert df.rdd.getNumPartitions() == 1, t
+        assert "Exchange" not in _plan(df), t
+
+
+def test_cache_is_shared_by_wrappers_of_one_session(cached, spark):
+    # pyspark may hand out a second Python wrapper of the same JVM session
+    # (``SparkSession.getActiveSession``); its reads still hit the cache
+    from pyspark.sql import SparkSession
+
+    wrapper = SparkSession(spark.sparkContext, spark._jsparkSession)
+    assert wrapper is not spark
+    assert B.load_table(wrapper, SF, "region") is cached[0]["region"]
+
+
+def test_cached_rows_equal_parquet(cached):
+    frames, refs = cached
+    for t, df in frames.items():
+        ref = refs[t]
+        assert df.count() == ref.count(), t
+        assert df.exceptAll(ref).count() == 0, t
+        assert ref.exceptAll(df).count() == 0, t
+
+
+def test_spread_falls_back_to_round_robin_without_hashable_column(spark):
+    df = spark.createDataFrame([({"a": 1}, 1)], "m map<string,int>, k int")
+    mixed = _plan(B._spread(df, 2))
+    assert "hashpartitioning(xxhash64(k" in mixed and "RoundRobin" not in mixed
+    assert "RoundRobinPartitioning(2)" in _plan(B._spread(df.select("m"), 2))
+    assert B._spread(df, 1).rdd.getNumPartitions() == 1
+
+
+def test_compression_conf_is_restored(spark, monkeypatch):
+    key = "spark.sql.inMemoryColumnarStorage.compressed"
+    sf = SF_SMOKE
+    prev = spark.conf.get(key)
+    try:
+        B.warm_cache(spark, sf, ("region",))
+        assert (sf, "region") in B._TABLE_CACHE
+        assert spark.conf.get(key) == prev
+    finally:
+        B.release_cache(sf)
+
+    def fail(self):
+        raise RuntimeError("count failed")
+
+    monkeypatch.setattr(type(spark.range(1)), "count", fail)
+    with pytest.raises(RuntimeError, match="count failed"):
+        B.warm_cache(spark, sf, ("nation",))
+    assert spark.conf.get(key) == prev
+    assert (sf, "nation") not in B._TABLE_CACHE
+
+
+def test_cache_of_a_stopped_session_is_rebuilt():
+    # needs its own JVM: stopping the shared test session would break
+    # every later test
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from fugue_spark.benchmarks import load_table, warm_cache
+        from fugue_spark.session import get_spark
+
+        def start():
+            return get_spark(
+                app_name="stale_cache", master="local[1]", shuffle_partitions=1,
+                spark__ui__enabled="false", spark__driver__memory="512m",
+            )
+
+        spark = start()
+        warm_cache(spark, {SF!r}, ("region",))
+        spark.stop()
+        spark = start()
+        assert load_table(spark, {SF!r}, "region").count() == 5
+        warm_cache(spark, {SF!r}, ("region",))
+        assert load_table(spark, {SF!r}, "region").count() == 5
+        spark.stop()
+        """
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True, timeout=300
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+
+
+def test_path_bytes_sizes_files_and_directories(tmp_path):
+    from fugue_spark.session import _path_bytes
+
+    (tmp_path / "sub").mkdir()
+    (tmp_path / "a.parquet").write_bytes(b"x" * 10)
+    (tmp_path / "sub" / "b.parquet").write_bytes(b"y" * 5)
+    assert _path_bytes(str(tmp_path / "a.parquet")) == 10
+    assert _path_bytes(str(tmp_path)) == 15
+    assert _path_bytes(str(tmp_path / "missing")) == 0
