@@ -164,7 +164,7 @@ def bloom_flag(
     # monotonically_increasing_id is non-deterministic per evaluation, and
     # the tag is referenced on BOTH sides of the probe join — pin it with a
     # lazy localCheckpoint so the two branches see the same ids (same fix
-    # as near_duplicates_lsh's bucket keys)
+    # as the multi-branch indexes of dedup.py and similarity.py)
     tagged = (
         df.withColumn(id_tag, F.monotonically_increasing_id())
         .withColumn("__probes__", probes)

@@ -1,17 +1,26 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search and dedup over embedding columns (array<float>).
 
-Two tiers, per the scale ladder:
+Every operator is one skeleton — sketch → candidate join → exact re-rank
+→ rank tail — and the family differs only in the sketch:
 
-* brute-force cosine top-k — exact; the dot product stays JVM-side via
-  ``F.zip_with`` + ``F.aggregate`` (no Python). Query side is broadcast,
-  so the only pass is one scan of the corpus per batch of queries.
-  O(|Q|·|C|) — the correctness baseline and fine whenever |Q| is small.
-* LSH-bucketed (random hyperplanes) — sign-bit sketch → bucket equi-join
-  → exact cosine re-rank within buckets. Sub-linear candidate generation;
-  recall < 1 by construction (report tracks it against brute force).
+* brute force (``cosine_topk_bruteforce``, ``near_duplicates_by_embedding``)
+  — no sketch: a broadcast or self cross join. Exact, O(|Q|·|C|), guarded;
+  the correctness baseline the approximate rungs are recall-tested against.
+* random-hyperplane LSH (``cosine_topk_lsh``, ``near_duplicates_lsh``) —
+  ``_lsh_keys`` packs n_tables sign sketches into long keys; candidates come
+  from an equi-join on the key (self-pairs through ``dedup._bucket_pairs``,
+  the text-LSH family's pairing path). Recall < 1 by construction.
+* IVF (``cosine_topk_ivf``) — a spherical k-means coarse quantizer trained
+  on a bounded driver sample; the key is the cell, and each query probes
+  its n_probe nearest cells.
+* SemDeDup (``semantic_dedup``) — coarse-quantizer clusters are the key;
+  the verify is a greedy prefix filter within each cluster.
+* PQ (``pq_train`` / ``pq_encode`` / ``pq_topk``) — product-quantization
+  codes scored by asymmetric distance instead of an exact re-rank.
 
-An IVF variant (k-means coarse quantizer) is the next rung; its Spark
-shape is the same bucket-join as LSH with learned centroids.
+Exact scores are the JVM ``_cosine_e6`` family (double folds floored to an
+int ×10⁶, bit-equal to the SQL oracles), and every top-k ends in one rank
+tail (``_rank_tail``).
 """
 
 from __future__ import annotations
@@ -20,6 +29,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from fugue_spark.pipeline.dedup import _bucket_pairs, _materialize_index
 
 __all__ = [
     "cosine_topk_bruteforce",
@@ -38,6 +49,13 @@ __all__ = [
 # caller explicitly opts in — a quadratic cross join must never silently
 # ship at production scale.
 _QUADRATIC_GUARD_ROWS = 100_000
+# Brute-force top-k broadcasts its query side and scores it against every
+# corpus row; above this many queries the query side is no longer small and
+# the cross join is effectively all-pairs.
+_BRUTEFORCE_GUARD_QUERIES = 10_000
+# Table t of the LSH sketch draws its hyperplanes from seed _PLANE_SEED + t,
+# so corpus and query sides (and every run) bucket identically.
+_PLANE_SEED = 1000
 
 
 def _dot(a, b) -> F.Column:
@@ -75,6 +93,83 @@ def _cosine_e6_prenormed(a, b, na, nb) -> F.Column:
     return F.floor(_dot(a, b) / (na * nb) * 1000000).cast("long")
 
 
+def _side(
+    df: DataFrame, id_col: str, vec_col: str, ids: str, vecs: str, norms: str, *carry
+) -> DataFrame:
+    """One side of a pair join: (ids, vecs, *carry, norms). The norm is
+    folded here, once per row below the join, instead of once per pair —
+    the values feeding the division are bit-identical."""
+    return df.select(
+        F.col(id_col).alias(ids), F.col(vec_col).alias(vecs), *carry
+    ).withColumn(norms, _norm(F.col(vecs)))
+
+
+def _rank_tail(scored: DataFrame, k: int, score: str, descending: bool = True) -> DataFrame:
+    """The top-k tail of every search: rank each query's candidates by
+    ``score`` (best first), ties to the lower neighbor_id — one shuffle
+    keyed on query_id — and keep rank ≤ k."""
+    order = F.col(score).desc() if descending else F.col(score).asc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", score, "rank")
+    )
+
+
+def _cosine_topk(cands: DataFrame, k: int) -> DataFrame:
+    """Exact re-rank of (query_id, qv, qn, neighbor_id, cv, cn) candidates
+    by cosine, then the rank tail. Output: query_id, neighbor_id,
+    cosine_e6, rank."""
+    scored = cands.withColumn(
+        "cosine_e6",
+        _cosine_e6_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")),
+    )
+    return _rank_tail(scored, k, "cosine_e6")
+
+
+def _matrix(vecs) -> np.ndarray:
+    """A batch of vectors as one float64 (n, d) matrix; (0, 0) when empty."""
+    m = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
+    return m if m.ndim == 2 else np.empty((0, 0))
+
+
+def _unit(m: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit length (the 1e-12 floor keeps a zero row zero)."""
+    return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+
+
+def _driver_sample(df: DataFrame, vec_col: str, sample_size: int) -> np.ndarray:
+    """The first ``sample_size`` vectors collected to the driver — the
+    bounded training set of every learned quantizer, independent of corpus
+    size; (0, 0) for an empty frame."""
+    return _matrix(r[0] for r in df.select(vec_col).limit(sample_size).collect())
+
+
+def _lsh_keys(vec: F.Column, n_planes: int, n_tables: int) -> F.Column:
+    """Random-hyperplane LSH sketch: ``array<long>`` of n_tables packed keys
+    ``tbl·2^p + bucket``, where bit i of a table's bucket is set iff the
+    vector's dot with that table's plane i is ≥ 0. One vectorized numpy
+    pass per Arrow batch; the planes take their width from the data, so
+    every vector is sketched whatever its dimension."""
+    pow2 = 2 ** np.arange(n_planes, dtype=np.int64)
+    offsets = np.arange(n_tables, dtype=np.int64) << n_planes
+
+    @F.pandas_udf("array<long>")
+    def keys(vecs: pd.Series) -> pd.Series:
+        m = _matrix(vecs)
+        planes = np.stack(
+            [
+                np.random.default_rng(_PLANE_SEED + t).standard_normal((n_planes, m.shape[1]))
+                for t in range(n_tables)
+            ]
+        )  # (T, p, d)
+        bits = np.einsum("nd,tpd->ntp", m, planes) >= 0  # (N, T, p)
+        return pd.Series(list((bits @ pow2 + offsets).astype("int64")), dtype=object)
+
+    return keys(vec)
+
+
 def cosine_topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
@@ -88,53 +183,26 @@ def cosine_topk_bruteforce(
 
     queries is broadcast (small by assumption); ranking is a row_number
     window per query — one shuffle keyed on query_id. O(|Q|·|C|): refuses
-    a large query side (corpus-sized |Q| makes it all-pairs) unless
+    a large query side (more than _BRUTEFORCE_GUARD_QUERIES rows) unless
     ``allow_quadratic=True``; use cosine_topk_lsh / cosine_topk_ivf there.
     ``n_queries`` is a caller hint that skips the guard's count job when
     |Q| is already known; otherwise the probe stops scanning at the guard
     bound + 1 rows (limit-bounded, not a full count of the query side).
     Output: query_id, neighbor_id, cosine_e6, rank.
     """
-    _GUARD = 10_000
     if not allow_quadratic:
-        nq = n_queries if n_queries is not None else queries.limit(_GUARD + 1).count()
-        if nq > _GUARD:
+        guard = _BRUTEFORCE_GUARD_QUERIES
+        nq = n_queries if n_queries is not None else queries.limit(guard + 1).count()
+        if nq > guard:
             raise ValueError(
-                f"brute-force top-k with >{_GUARD} query vectors is effectively "
+                f"brute-force top-k with >{guard} query vectors is effectively "
                 "all-pairs; use cosine_topk_lsh/cosine_topk_ivf or pass "
                 "allow_quadratic=True"
             )
-    # norms are factored out BELOW the join: computed once per corpus row
-    # (and once per query) instead of once per (query, corpus) pair — the
-    # values feeding the division are bit-identical, but the |Q|× redundant
-    # array folds disappear from the scored stage
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    ).withColumn("qn", _norm(F.col("qv")))
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    ).withColumn("cn", _norm(F.col("cv")))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine_e6",
-            _cosine_e6_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_e6").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_e6", "rank")
-    )
-
-
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_planes, dim)).tolist()
+    q = _side(queries, id_col, vec_col, "query_id", "qv", "qn")
+    c = _side(corpus, id_col, vec_col, "neighbor_id", "cv", "cn")
+    cands = c.crossJoin(F.broadcast(q)).filter(F.col("query_id") != F.col("neighbor_id"))
+    return _cosine_topk(cands, k)
 
 
 def cosine_topk_lsh(
@@ -143,63 +211,28 @@ def cosine_topk_lsh(
     k: int = 10,
     n_planes: int = 12,
     n_tables: int = 4,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: random-hyperplane sign sketches bucket the corpus
     (n_tables independent tables to boost recall); exact cosine re-ranks
-    bucket-mates. Candidate generation is an equi-join on (table, bucket) —
-    the 100 TB path: no cross join anywhere.
+    bucket-mates. Candidate generation is an equi-join on the packed
+    bucket key (:func:`_lsh_keys`) — no cross join anywhere.
     """
 
-    def sketch(vec) -> F.Column:
-        tables = []
-        for t in range(n_tables):
-            planes = _hyperplanes(dim, n_planes, seed=1000 + t)
-            bits = [
-                F.when(_dot(vec, F.array(*[F.lit(float(p)) for p in plane])) >= 0, F.lit(1)).otherwise(F.lit(0))
-                * (2**i)
-                for i, plane in enumerate(planes)
-            ]
-            bucket = bits[0]
-            for b in bits[1:]:
-                bucket = bucket + b
-            tables.append(F.struct(F.lit(t).alias("tbl"), bucket.alias("bucket")))
-        return F.array(*tables)
+    def bucketed(df: DataFrame, ids: str, vecs: str, norms: str) -> DataFrame:
+        keys = F.explode(_lsh_keys(F.col(vecs), n_planes, n_tables)).alias("bk")
+        return _side(df, id_col, vec_col, ids, vecs, norms).select(ids, vecs, norms, keys)
 
-    # same norm factoring as the brute-force path: one fold per row, below
-    # the bucket join, instead of one per candidate pair
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    ).withColumn("cn", _norm(F.col("cv")))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    ).withColumn("qn", _norm(F.col("qv")))
-    cb = c.select(
-        "neighbor_id", "cv", "cn", F.explode(sketch(F.col("cv"))).alias("s")
-    ).select("neighbor_id", "cv", "cn", "s.tbl", "s.bucket")
-    qb = q.select(
-        "query_id", "qv", "qn", F.explode(sketch(F.col("qv"))).alias("s")
-    ).select("query_id", "qv", "qn", "s.tbl", "s.bucket")
+    cb = bucketed(corpus, "neighbor_id", "cv", "cn")
+    qb = bucketed(queries, "query_id", "qv", "qn")
     cands = (
-        cb.join(F.broadcast(qb), on=["tbl", "bucket"])
+        cb.join(F.broadcast(qb), on="bk")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "qv", "qn", "neighbor_id", "cv", "cn")
         .distinct()
     )
-    scored = cands.withColumn(
-        "cosine_e6",
-        _cosine_e6_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_e6").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_e6", "rank")
-    )
+    return _cosine_topk(cands, k)
 
 
 def near_duplicates_by_embedding(
@@ -245,18 +278,16 @@ def near_duplicates_lsh(
     n_tables: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed_base: int = 1000,
 ) -> DataFrame:
     """Near-dup pairs via random-hyperplane LSH candidates + exact verify.
 
-    The scale path: no cross join anywhere. Per vector, n_tables sign
-    sketches of n_planes bits each are computed in ONE vectorized Arrow
-    batch pass (numpy matmul against a fixed, seeded plane matrix); each
-    sketch becomes a packed bucket key ``tbl * 2^p + bucket``. Candidates
-    come from a self-equi-join on the key carrying only ids (narrow
-    shuffle); vectors are re-fetched by two hash joins before the exact
-    cosine verify — identical filter semantics to the all-pairs baseline,
-    so at 100% recall the two agree exactly.
+    The scale path: no cross join anywhere. Each vector's n_tables packed
+    bucket keys (:func:`_lsh_keys`) are materialized once; candidates come
+    from the bucket self-join of the text-LSH family
+    (``dedup._bucket_pairs``: ids only, a narrow shuffle); vectors are
+    re-fetched by two hash joins before the exact cosine verify — identical
+    filter semantics to the all-pairs baseline, so at 100% recall the two
+    agree exactly.
 
     Recall is 1 - (1 - q^p)^T with q = 1 - θ/π per plane: tune p down and
     T up for low thresholds. For the gate corpus at threshold 0.4,
@@ -264,47 +295,19 @@ def near_duplicates_lsh(
     At production thresholds (≥0.8) the defaults (12, 8) are strongly
     sublinear.
     """
-    pow2 = (2 ** np.arange(n_planes, dtype=np.int64)).astype(np.int64)
-    n_t, n_p, sbase = n_tables, n_planes, seed_base
-
-    @F.pandas_udf("array<long>")
-    def bucket_udf(vecs: pd.Series) -> pd.Series:
-        m = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
-        if len(m) == 0:
-            return pd.Series([], dtype=object)
-        d = m.shape[1]
-        mats = np.stack(
-            [np.random.default_rng(sbase + t).standard_normal((n_p, d)) for t in range(n_t)]
-        )  # (T, p, d)
-        proj = np.einsum("nd,tpd->ntp", m, mats) >= 0  # (N, T, p)
-        buckets = proj @ pow2  # (N, T)
-        keys = buckets + (np.arange(n_t, dtype=np.int64) * (1 << n_p))[None, :]
-        return pd.Series(list(keys.astype("int64")))
-
-    # materialize the bucket keys ONCE (lazy localCheckpoint): both sides
-    # of the candidate self-join reference them, and without the
-    # checkpoint Catalyst re-runs the python sketch UDF per branch —
-    # 2× the corpus projection work (same fix as simhash_pairs)
-    keys = df.select(
-        F.col(id_col).alias("_id"), F.explode(bucket_udf(F.col(vec_col))).alias("bk")
-    ).localCheckpoint(eager=False)
-    a = keys.select(F.col("_id").alias("id_a"), "bk")
-    b = keys.select(F.col("_id").alias("id_b"), "bk")
-    cand = (
-        a.join(b, on="bk")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+    # materialized: both sides of the bucket self-join read the keys, and
+    # without it Catalyst re-runs the python sketch once per branch
+    keys = _materialize_index(
+        df.select(
+            F.col(id_col).alias("id"),
+            F.explode(_lsh_keys(F.col(vec_col), n_planes, n_tables)).alias("bk"),
+        )
     )
-    # norms ride the per-id projections (one fold per row, not per pair)
-    va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")).withColumn(
-        "na", _norm(F.col("va"))
-    )
-    vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")).withColumn(
-        "nb", _norm(F.col("vb"))
-    )
+    va = _side(df, id_col, vec_col, "id_a", "va", "na")
+    vb = _side(df, id_col, vec_col, "id_b", "vb", "nb")
     return (
-        cand.join(va, on="id_a")
+        _bucket_pairs(keys, None, key="bk")
+        .join(va, on="id_a")
         .join(vb, on="id_b")
         .withColumn(
             "cosine_e6",
@@ -316,11 +319,12 @@ def near_duplicates_lsh(
 
 
 def _kmeans_centroids(mat: "np.ndarray", k: int, iters: int = 10, seed: int = 42) -> "np.ndarray":
-    """Small k-means on a driver-side sample (spherical: normalized rows)."""
+    """Small k-means on a driver-side sample (spherical: normalized rows).
+    An empty sample has no centroids."""
     rng = np.random.default_rng(seed)
-    mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+    mat = _unit(mat)
     cent = mat[rng.choice(len(mat), size=min(k, len(mat)), replace=False)]
-    for _ in range(iters):
+    for _ in range(iters if len(cent) else 0):
         sims = mat @ cent.T
         assign = sims.argmax(axis=1)
         for c in range(len(cent)):
@@ -349,62 +353,34 @@ def cosine_topk_ivf(
 
     Scale shape: centroids are trained on a bounded driver-side sample
     (sample_size rows — independent of corpus size) and shipped in the
-    assignment UDF's closure; corpus assignment is one map-only pass
+    cell UDF's closure; corpus assignment is one map-only pass
     (vectorized numpy per Arrow batch); the candidate join is an equi-join
     on cluster id probing n_probe cells, so each query scans
     ~n_probe/n_clusters of the corpus instead of all of it. Recall is
     tunable via n_probe (n_probe = n_clusters ⇒ exact).
     """
-    sample = np.array(
-        [
-            np.asarray(r[0], dtype=np.float64)
-            for r in corpus.select(vec_col).limit(sample_size).collect()
-        ]
-    )
-    cent = _kmeans_centroids(sample, n_clusters, seed=seed)
-
-    @F.pandas_udf("int")
-    def assign_udf(vecs: pd.Series) -> pd.Series:
-        m = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        return pd.Series((m @ cent.T).argmax(axis=1).astype(np.int32))
+    cent = _kmeans_centroids(_driver_sample(corpus, vec_col, sample_size), n_clusters, seed=seed)
+    if not len(cent):  # empty corpus: no cell to probe, no candidate
+        queries = queries.limit(0)
 
     @F.pandas_udf("array<int>")
-    def probe_udf(vecs: pd.Series) -> pd.Series:
-        m = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        order = np.argsort(-(m @ cent.T), axis=1)[:, :n_probe]
-        return pd.Series([row.astype("int32").tolist() for row in order])
+    def nearest_cells(vecs: pd.Series) -> pd.Series:
+        # stable sort of -cosine: element 0 is the argmax, ties to the
+        # lowest cell — a corpus row's cell is its first probe
+        order = np.argsort(-(_unit(_matrix(vecs)) @ cent.T), axis=1, kind="stable")
+        return pd.Series(list(order[:, :n_probe].astype("int32")), dtype=object)
 
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        assign_udf(F.col(vec_col)).alias("cell"),
-        _norm(F.col(vec_col)).alias("cn"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.explode(probe_udf(F.col(vec_col))).alias("cell"),
-        _norm(F.col(vec_col)).alias("qn"),
+    cell = nearest_cells(F.col(vec_col))[0].alias("cell")
+    c = _side(corpus, id_col, vec_col, "neighbor_id", "cv", "cn", cell)
+    q = _side(queries, id_col, vec_col, "query_id", "qv", "qn").select(
+        "query_id", "qv", "qn", F.explode(nearest_cells(F.col("qv"))).alias("cell")
     )
     cands = (
         c.join(F.broadcast(q), on="cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "qv", "qn", "neighbor_id", "cv", "cn")
     )
-    scored = cands.withColumn(
-        "cosine_e6",
-        _cosine_e6_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_e6").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_e6", "rank")
-    )
+    return _cosine_topk(cands, k)
 
 
 def semantic_dedup(
@@ -482,12 +458,7 @@ def semantic_dedup(
         )
         cent = [list(r[1]) for r in rows]
     else:
-        sample = np.array(
-            [
-                np.asarray(r[0], dtype=np.float64)
-                for r in df.select(vec_col).limit(sample_size).collect()
-            ]
-        )
+        sample = _driver_sample(df, vec_col, sample_size)
         cent = [list(map(float, c)) for c in _kmeans_centroids(sample, n_clusters, seed=seed)]
     if not cent:
         return df.withColumn("cluster", F.lit(0).cast("int")).limit(0)
@@ -517,7 +488,7 @@ def semantic_dedup(
 
         @F.pandas_udf("int")
         def assign_udf(vecs: pd.Series) -> pd.Series:
-            m = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
+            m = _matrix(vecs)
             if len(m) == 0:
                 return pd.Series([], dtype="int32")
             vn = np.maximum(np.linalg.norm(m, axis=1), 1e-300)
@@ -526,17 +497,15 @@ def semantic_dedup(
             return pd.Series(cos_e6.argmax(axis=1).astype("int32"))
 
         cluster_col = assign_udf(F.col(vec_col))
-    # lazy localCheckpoint: both sides of the pair probe and the final
-    # anti-join reference the assignment; without it Catalyst re-runs the
-    # k-fold scoring once per branch (same fix as near_duplicates_lsh).
-    assigned = df.withColumn("cluster", cluster_col).localCheckpoint(eager=False)
+    # materialized: both sides of the pair probe and the final anti-join
+    # reference the assignment; without it Catalyst re-runs the k-fold
+    # scoring once per branch (same fix as near_duplicates_lsh).
+    assigned = _materialize_index(df.withColumn("cluster", cluster_col))
     thr_e6 = int(threshold * 1000000)
     # norms factored out BELOW the pair join (one fold per row instead of
     # two per pair — measured 2.5x on the 200k-vector sf10 corpus; values
     # identical, see _cosine_e6_prenormed)
-    sides = assigned.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"), "cluster"
-    ).withColumn("_n", _norm(F.col("_v")))
+    sides = _side(assigned, id_col, vec_col, "_id", "_v", "_n", "cluster")
     a = sides.select(
         F.col("_id").alias("_id_a"), F.col("_v").alias("_va"), F.col("_n").alias("_na"), "cluster"
     )
@@ -636,12 +605,7 @@ def pq_train(
     cosine and PQ results are comparable to the rest of the ANN family.
     ``m`` subspaces × ``n_centroids`` centroids ⇒ codes of m bytes when
     n_centroids ≤ 256 (a 64-dim float32 vector compresses 256 B → 8 B)."""
-    sample = np.array(
-        [
-            np.asarray(r[0], dtype=np.float64)
-            for r in df.select(vec_col).limit(sample_size).collect()
-        ]
-    )
+    sample = _driver_sample(df, vec_col, sample_size)
     if sample.size == 0:
         raise ValueError("pq_train needs a non-empty corpus")
     dim = sample.shape[1]
@@ -649,7 +613,7 @@ def pq_train(
         raise ValueError(f"dim {dim} not divisible by m={m}")
     if n_centroids > 256:
         raise ValueError("n_centroids > 256 does not fit byte codes")
-    sample = sample / np.maximum(np.linalg.norm(sample, axis=1, keepdims=True), 1e-12)
+    sample = _unit(sample)
     sub = dim // m
     cents = np.stack(
         [
@@ -675,11 +639,11 @@ def pq_encode(
 
     @F.pandas_udf("binary")
     def encode_udf(vecs: pd.Series) -> pd.Series:
-        mat = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
+        mat = _matrix(vecs)
         if len(mat) == 0:
             return pd.Series([], dtype=object)
         if normalized:
-            mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+            mat = _unit(mat)
         codes = np.empty((len(mat), m), dtype=np.uint8)
         for j in range(m):
             x = mat[:, j * sub : (j + 1) * sub]
@@ -737,9 +701,9 @@ def pq_topk(
     cent = codebook.centroids
     m, sub = codebook.m, codebook.dim // codebook.m
     q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.array([np.asarray(r[1], dtype=np.float64) for r in q_rows])
+    q_mat = _matrix(r[1] for r in q_rows)
     if codebook.normalized:
-        q_mat = q_mat / np.maximum(np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12)
+        q_mat = _unit(q_mat)
     # LUTs: (|Q|, m, k) — squared L2 from each query subvector to each centroid
     luts = np.stack(
         [
@@ -773,11 +737,4 @@ def pq_topk(
     scored = codes.mapInPandas(score, schema=schema).filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist_e6").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dist_e6", "rank")
-    )
+    return _rank_tail(scored, k, "dist_e6", descending=False)

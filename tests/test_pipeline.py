@@ -132,13 +132,14 @@ def test_simhash_finds_neardups(spark, docs):
     assert len(exact) == 0 or len(exact & got) >= 0.5 * len(exact)
 
 
-def test_ann_lsh_recall_on_planted_neighbors(spark):
+@pytest.mark.parametrize("dim", [32, 64])
+def test_ann_lsh_recall_on_planted_neighbors(spark, dim):
     """LSH must recall TRUE near neighbors (cos≈0.99 planted copies);
     mid-similarity recall is low by design — that's the hash trade-off."""
     import numpy as np
 
     rng = np.random.default_rng(7)
-    base = rng.standard_normal((20, 64))
+    base = rng.standard_normal((20, dim))
     rows = []
     vid = 0
     for i in range(20):
@@ -147,7 +148,7 @@ def test_ann_lsh_recall_on_planted_neighbors(spark):
     base_n = len(rows)
     for i in range(20):
         for _ in range(3):
-            noisy = base[i] + 0.05 * rng.standard_normal(64)
+            noisy = base[i] + 0.05 * rng.standard_normal(dim)
             rows.append([vid, [float(x) for x in noisy]])
             vid += 1
     df = spark.createDataFrame(rows, parse_schema("vec_id:long,embedding:[float]"))
@@ -158,6 +159,85 @@ def test_ann_lsh_recall_on_planted_neighbors(spark):
     a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
     assert len(b) == 60  # 3 planted copies per query dominate
     assert len(a & b) >= 0.9 * len(b)
+
+
+def test_ann_lsh_buckets_any_dimension(spark):
+    """The sketch reads the dimension from the data: 32-dim vectors spread
+    over the buckets, so unrelated random vectors are mostly never
+    candidates and LSH returns fewer rows than brute force (a sketch whose
+    planes did not match the data would put every vector in one bucket and
+    return exactly the brute-force rows)."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    rows = [[i, [float(x) for x in v]] for i, v in enumerate(rng.standard_normal((300, 32)))]
+    df = spark.createDataFrame(rows, parse_schema("vec_id:long,embedding:[float]"))
+    queries = df.filter(F.col("vec_id") < 10)
+    assert cosine_topk_bruteforce(df, queries, k=3).count() == 30
+    assert cosine_topk_lsh(df, queries, k=3).count() < 30
+
+
+def test_lsh_keys_match_reference_sketch(spark):
+    """The vectorized sketch equals a row-at-a-time reference: key
+    ``t·2^p + bucket``, bit i set iff the left-fold double dot with plane i
+    of table t (seed 1000 + t) is ≥ 0."""
+    import numpy as np
+
+    from fugue_spark.pipeline.similarity import _lsh_keys
+
+    p, t_n, d = 6, 3, 16
+    vecs = np.random.default_rng(5).standard_normal((20, d)).astype(np.float32)
+    df = spark.createDataFrame(
+        [[i, [float(x) for x in v]] for i, v in enumerate(vecs)],
+        parse_schema("vec_id:long,embedding:[float]"),
+    )
+    got = {
+        r.vec_id: list(r.k)
+        for r in df.select("vec_id", _lsh_keys(F.col("embedding"), p, t_n).alias("k")).collect()
+    }
+    planes = [np.random.default_rng(1000 + t).standard_normal((p, d)) for t in range(t_n)]
+    want = {}
+    for i, v in enumerate(vecs):
+        keys = []
+        for t in range(t_n):
+            bucket = 0
+            for b, plane in enumerate(planes[t]):
+                dot = 0.0
+                for x, y in zip(v.tolist(), plane.tolist()):
+                    dot += x * y
+                bucket += (dot >= 0) << b
+            keys.append(t * 2**p + bucket)
+        want[i] = keys
+    assert got == want
+
+
+def test_embedding_family_empty_corpus(spark):
+    """An empty corpus yields empty results from every embedding operator
+    (the learned quantizers train on an empty sample); pq_train alone
+    refuses, with its named error."""
+    from fugue_spark.pipeline import (
+        cosine_topk_ivf,
+        near_duplicates_lsh,
+        pq_train,
+        semantic_dedup,
+    )
+
+    schema = parse_schema("vec_id:long,embedding:[float]")
+    empty = spark.createDataFrame([], schema)
+    one = spark.createDataFrame([[1, [1.0, 0.0]]], schema)
+    results = {
+        "bruteforce": cosine_topk_bruteforce(empty, empty, k=3),
+        "lsh": cosine_topk_lsh(empty, empty, k=3),
+        "ivf": cosine_topk_ivf(empty, empty, k=3),
+        "ivf_with_queries": cosine_topk_ivf(empty, one, k=3),
+        "near_duplicates_lsh": near_duplicates_lsh(empty),
+        "semantic_dedup_first_k": semantic_dedup(empty),
+        "semantic_dedup_kmeans": semantic_dedup(empty, centroids="kmeans"),
+    }
+    assert {name: df.count() for name, df in results.items()} == dict.fromkeys(results, 0)
+    assert results["ivf"].columns == ["query_id", "neighbor_id", "cosine_e6", "rank"]
+    with pytest.raises(ValueError, match="non-empty corpus"):
+        pq_train(empty)
 
 
 def test_media_features_deterministic(spark, docs):
@@ -432,6 +512,23 @@ def test_neardup_quadratic_guard(spark, emb):
         near_duplicates_by_embedding(big.limit(20), threshold=0.4, allow_quadratic=True)
     finally:
         sim._QUADRATIC_GUARD_ROWS = orig
+
+
+def test_bruteforce_query_guard(spark, emb):
+    """Brute-force top-k refuses a query side above the guard; a known
+    query count (``n_queries=``) or ``allow_quadratic=True`` bypasses it."""
+    from fugue_spark.pipeline import similarity as sim
+
+    queries = emb.limit(20)  # 20 queries > 10
+    orig = sim._BRUTEFORCE_GUARD_QUERIES
+    sim._BRUTEFORCE_GUARD_QUERIES = 10
+    try:
+        with pytest.raises(ValueError, match="all-pairs"):
+            cosine_topk_bruteforce(emb, queries, k=2)
+        assert cosine_topk_bruteforce(emb, queries, k=2, n_queries=5).count() == 40
+        assert cosine_topk_bruteforce(emb, queries, k=2, allow_quadratic=True).count() == 40
+    finally:
+        sim._BRUTEFORCE_GUARD_QUERIES = orig
 
 
 def test_near_dup_clusters_and_dedup_near(spark):
