@@ -19,6 +19,7 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -68,6 +69,13 @@ TABLES = (
 #   saves a few MiB (lineitem 21.0 -> 17.9 MiB, orders 3.4 -> 2.9,
 #   documents 0.8 -> 0.8: text does not compress), and the query plans
 #   above the cache are the same for both layouts.
+# * one job for all tables: every frame is persisted first, then one count
+#   over the union of one literal column per frame builds them all (a
+#   count per table was a job per table). With AQE on, each shuffled
+#   cache still adds a job for its exchange. sf0.01, every table cached,
+#   AQE off: 10 count jobs -> 1. Traced perfbench runs (one per side):
+#   benchmarks.warm_cache_s 0.34 -> 0.20 s relational-sf0.5 (3 dims, with
+#   the schema memo of sources.load_df), 0.77 -> 0.56 s small-sf0.1.
 _TABLE_CACHE: dict[tuple[str, str], DataFrame] = {}
 _COMPRESSED = "spark.sql.inMemoryColumnarStorage.compressed"
 
@@ -88,6 +96,8 @@ def warm_cache(spark: SparkSession, sf_dir: str, tables: "tuple[str, ...]" = TAB
     # 4.55 s native, p6 2.83 vs 4.68 — the native scan of a file this
     # small is one split whatever its row groups.
     compute_dense = {"documents", "embeddings", "events"}
+    names: list[str] = []
+    frames: list[DataFrame] = []
     for t in tables:
         path = os.path.join(sf_dir, f"{t}.parquet")
         if not os.path.exists(path) or _cached(spark, sf_dir, t) is not None:
@@ -103,17 +113,26 @@ def warm_cache(spark: SparkSession, sf_dir: str, tables: "tuple[str, ...]" = TAB
             parts = n
         else:
             parts = max(1, min(n, _path_bytes(path) // _SMALL_PARTITION_BYTES + 1))
-        df = _spread(load_table(spark, sf_dir, t), parts)
-        prev = spark.conf.get(_COMPRESSED)
-        spark.conf.set(_COMPRESSED, "false")
-        try:
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            df.count()
-        except BaseException:
+        names.append(t)
+        frames.append(_spread(load_table(spark, sf_dir, t), parts))
+    if not frames:
+        return
+    from pyspark.sql import functions as F
+
+    prev = spark.conf.get(_COMPRESSED)
+    spark.conf.set(_COMPRESSED, "false")
+    try:
+        for df in frames:
+            df.persist(StorageLevel.MEMORY_AND_DISK)
+        # one action builds every cache; see the module note
+        reduce(DataFrame.union, [df.select(F.lit(1)) for df in frames]).count()
+    except BaseException:
+        for df in frames:
             df.unpersist()
-            raise
-        finally:
-            spark.conf.set(_COMPRESSED, prev)
+        raise
+    finally:
+        spark.conf.set(_COMPRESSED, prev)
+    for t, df in zip(names, frames):
         _TABLE_CACHE[(sf_dir, t)] = df
 
 
@@ -186,7 +205,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # the driver may hand us a session without our defaults; nano
         # timestamps are an analysis error unless read as longs
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    from fugue_spark.sources import load_df
+
+    df = load_df(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         # events.ts is parquet TIMESTAMP(NANOS): read as nano-long (see
         # session defaults), truncate to micros, expose as timestamp_ntz —

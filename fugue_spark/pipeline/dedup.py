@@ -260,17 +260,21 @@ def ngram_jaccard_pairs(
     # counts + near-band array resolve) for an empty hot set costs ~2x the
     # whole query. A driver probe of an aggregate this small is the same
     # trade AQE makes: one stats job to pick a structurally better plan.
-    hot_rows = hot.limit(_HOT_PROBE_MAX + 1).collect()
-    if len(hot_rows) == 0:
+    # The probe is one job: an Arrow collect runs the limit as one shuffle
+    # to a single partition, where collect() runs Spark's incremental take,
+    # one job per widening partition scan (sf0.01 and sf0.1 documents, AQE
+    # off: p5 build jobs 4 -> 2). The values are used only when the whole
+    # hot set fits the bound, so which rows the limit keeps past the bound
+    # does not matter.
+    hot_g = hot.limit(_HOT_PROBE_MAX + 1).toArrow().column("g").to_pylist()
+    if len(hot_g) == 0:
         # nothing is hot: the capped index IS the full index — emit the
         # exact single-aggregation plan (sizes ride on the index rows)
         return _pair_jaccard(exr, thr)
-    if len(hot_rows) <= _HOT_PROBE_MAX:
+    if len(hot_g) <= _HOT_PROBE_MAX:
         # small hot set: inline it as a literal relation (no recompute of
         # the counts aggregation when the broadcast is built)
-        hot = df.sparkSession.createDataFrame(
-            [(r["g"],) for r in hot_rows], "g bigint"
-        )
+        hot = df.sparkSession.createDataFrame([(g,) for g in hot_g], "g bigint")
     # else: hot set larger than the probe bound — keep the lazy aggregation
     # as the broadcast side (unbounded collect on the driver is never OK)
 

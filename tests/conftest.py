@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 
@@ -27,3 +28,19 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def sf_correctness_dir() -> str:
     return SF_CORRECTNESS
+
+
+_JOB_GROUPS = itertools.count()
+
+
+def count_jobs(spark, fn):
+    """``(fn(), the number of Spark jobs fn ran)``, counted in a job group
+    of its own."""
+    sc = spark.sparkContext
+    group = f"count_jobs_{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -4,13 +4,14 @@ conf hygiene and session ownership."""
 from __future__ import annotations
 
 import os
+import shutil
 import subprocess
 import sys
 import textwrap
 
 import pytest
 from conftest import SF_CORRECTNESS as SF
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, count_jobs
 
 from fugue_spark import benchmarks as B
 
@@ -98,6 +99,68 @@ def test_compression_conf_is_restored(spark, monkeypatch):
         B.warm_cache(spark, sf, ("nation",))
     assert spark.conf.get(key) == prev
     assert (sf, "nation") not in B._TABLE_CACHE
+
+
+def _copy_tables(tmp_path, tables) -> str:
+    """A private copy of SF's ``tables``, so the cache built over it is
+    this test's own."""
+    d = str(tmp_path / "sf")
+    os.makedirs(d)
+    for t in tables:
+        shutil.copy(os.path.join(SF, f"{t}.parquet"), d)
+    return d
+
+
+def test_cache_is_built_in_one_job(spark, tmp_path):
+    d = _copy_tables(tmp_path, B.TABLES)
+    sc = spark.sparkContext
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    # off, as tune_for_input sets it for an input this small: under AQE
+    # every shuffled cache adds a job of its own for its exchange
+    spark.conf.set(key, "false")
+    try:
+        for t in B.TABLES:  # every file's schema is read
+            B.load_table(spark, d, t)
+        before = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+        _, n = count_jobs(spark, lambda: B.warm_cache(spark, d))
+        assert n == 1
+        built = [i for i in sc._jsc.sc().getRDDStorageInfo() if i.id() not in before]
+        parts = sorted(B._TABLE_CACHE[(d, t)].rdd.getNumPartitions() for t in B.TABLES)
+        assert sorted(i.numPartitions() for i in built) == parts
+        for info in built:
+            assert info.numCachedPartitions() == info.numPartitions()
+    finally:
+        B.release_cache(d)
+        spark.conf.set(key, prev)
+
+
+def test_failed_cache_build_unpersists_every_frame(spark, tmp_path, monkeypatch):
+    tables = ("region", "nation", "customer")
+    d = _copy_tables(tmp_path, tables)
+    key = "spark.sql.inMemoryColumnarStorage.compressed"
+    prev = spark.conf.get(key)
+    cls = type(spark.range(1))
+    persisted = []
+    persist = cls.persist
+
+    def record(self, *args, **kwargs):
+        persisted.append(self)
+        return persist(self, *args, **kwargs)
+
+    def fail(self):
+        raise RuntimeError("count failed")
+
+    monkeypatch.setattr(cls, "persist", record)
+    monkeypatch.setattr(cls, "count", fail)
+    with pytest.raises(RuntimeError, match="count failed"):
+        B.warm_cache(spark, d, tables)
+    assert len(persisted) == len(tables)
+    for df in persisted:
+        level = df.storageLevel
+        assert not (level.useMemory or level.useDisk)
+    assert spark.conf.get(key) == prev
+    assert not [k for k in B._TABLE_CACHE if k[0] == d]
 
 
 def test_cache_of_a_stopped_session_is_rebuilt():

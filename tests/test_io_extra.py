@@ -1,8 +1,10 @@
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
+from conftest import count_jobs
 
 import fugue_spark.api as fa
 from fugue_spark.schema import parse_schema
@@ -161,3 +163,95 @@ def test_compact_unknown_out_extension_falls_back_to_input_format(spark, tmp_pat
     stats = compact_dataset(spark, src, out, target_file_bytes=1 << 30)
     assert stats["out_files"] == 1
     assert spark.read.parquet(out).count() == 2000
+
+
+# --- parquet schema memo (load_df) ---
+
+
+def _plan_and_size(df):
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return re.sub(r"#\d+L?", "#", plan.toString()), plan.stats().sizeInBytes()
+
+
+def _save_file(spark, path, data, schema):
+    fa.save(spark.createDataFrame(data, parse_schema(schema)), path, force_single=True)
+
+
+def test_parquet_file_schema_is_inferred_once(spark, tmp_path):
+    p = str(tmp_path / "t.parquet")
+    _save_file(spark, p, [[1, "x"]], "a:long,b:str")
+    first, n_first = count_jobs(spark, lambda: fa.load(spark, p))
+    again, n_again = count_jobs(spark, lambda: fa.load(spark, p))
+    assert n_first == 1 and n_again == 0
+    assert again.schema == first.schema
+    assert _plan_and_size(again) == _plan_and_size(first)
+    assert rows(again) == [(1, "x")]
+
+
+def test_rewritten_parquet_file_is_reinferred(spark, tmp_path):
+    p = str(tmp_path / "t.parquet")
+    _save_file(spark, p, [[1, "x"]], "a:long,b:str")
+    assert fa.load(spark, p).columns == ["a", "b"]
+    _save_file(spark, p, [[2.5]], "c:double")
+    back, n = count_jobs(spark, lambda: fa.load(spark, p))
+    assert n == 1
+    assert back.schema == parse_schema("c:double")
+    assert rows(back) == [(2.5,)]
+
+
+def test_schema_conf_change_reinfers(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    # a parquet TIMESTAMP(NANOS) column is a long under nanosAsLong and an
+    # analysis error without it
+    p = str(tmp_path / "events.parquet")
+    ts = pa.array([1_000_000_001], pa.timestamp("ns"))
+    pq.write_table(pa.table({"ts": ts}), p)
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        fa.load(spark, p)
+        df, n = count_jobs(spark, lambda: fa.load(spark, p))
+        assert n == 0 and isinstance(df.schema["ts"].dataType, T.LongType)
+        spark.conf.set(key, "false")
+        with pytest.raises(Exception, match="NANOS"):
+            fa.load(spark, p)
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_directories_globs_lists_and_options_keep_spark_inference(spark, tmp_path):
+    d = str(tmp_path / "dir.parquet")
+    spark.range(3).write.parquet(d)
+    f1, f2 = str(tmp_path / "f1.parquet"), str(tmp_path / "f2.parquet")
+    _save_file(spark, f1, [[1]], "a:long")
+    _save_file(spark, f2, [[2]], "a:long")
+    reads = [
+        lambda: fa.load(spark, d),
+        lambda: fa.load(spark, str(tmp_path / "f*.parquet"), format_hint="parquet"),
+        lambda: fa.load(spark, [f1, f2]),
+        lambda: fa.load(spark, f1, mergeSchema="false"),
+    ]
+    for read in reads:
+        read()
+        _, n = count_jobs(spark, read)
+        assert n == 1
+
+
+def test_schema_memo_is_bounded(spark, tmp_path, monkeypatch):
+    import fugue_spark.sources as S
+
+    monkeypatch.setattr(S, "_SCHEMA_MEMO_MAX", 2)
+    monkeypatch.setattr(S, "_SCHEMA_MEMO", {})
+    paths = [str(tmp_path / f"m{i}.parquet") for i in range(3)]
+    for i, p in enumerate(paths):
+        _save_file(spark, p, [[i]], "a:long")
+        fa.load(spark, p)
+        assert len(S._SCHEMA_MEMO) == min(i + 1, 2)
+    # the oldest entry went first
+    assert count_jobs(spark, lambda: fa.load(spark, paths[2]))[1] == 0
+    assert count_jobs(spark, lambda: fa.load(spark, paths[1]))[1] == 0
+    assert count_jobs(spark, lambda: fa.load(spark, paths[0]))[1] == 1

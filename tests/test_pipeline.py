@@ -429,6 +429,48 @@ def test_hot_shingle_cap_bounds_candidates(spark):
     assert uncapped.count() == 30 * 29 // 2 + 1  # the quadratic blowup, on demand
 
 
+def test_hot_set_above_probe_bound_stays_lazy(spark, monkeypatch):
+    """A hot set larger than the probe bound is kept as the lazy broadcast
+    aggregation; the pairs are the same as with the set inlined."""
+    from fugue_spark.pipeline import dedup
+
+    rows = [[i, f"the common gram w{i}a w{i}b w{i}c w{i}d"] for i in range(30)]
+    rows.append([100, "alpha beta gamma delta epsilon zeta eta theta"])
+    rows.append([101, "alpha beta gamma delta epsilon zeta eta iota"])
+    df = spark.createDataFrame(rows, parse_schema("doc_id:long,text:str"))
+    plan = lambda d: d._jdf.queryExecution().optimizedPlan().toString()  # noqa: E731
+    inlined = ngram_jaccard_pairs(df, threshold=0.01, max_shingle_df=3)
+    assert "__df__" not in plan(inlined)
+    monkeypatch.setattr(dedup, "_HOT_PROBE_MAX", 0)
+    lazy = ngram_jaccard_pairs(df, threshold=0.01, max_shingle_df=3)
+    assert "__df__" in plan(lazy)  # the hot-set aggregation
+    expected = {tuple(r) for r in inlined.collect()}
+    assert {tuple(r) for r in lazy.collect()} == expected
+    assert {r[:2] for r in expected} == {(100, 101)}
+
+
+def test_p5_build_runs_one_hot_set_probe(spark, sf_correctness_dir):
+    """p5's build runs two jobs: the document-count broadcast of the hot-set
+    cap and one bounded probe of the hot set (a collect of the limit would
+    run one job per widening partition scan)."""
+    from conftest import count_jobs
+
+    from fugue_spark.benchmarks import QUERIES, load_table
+
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    # off, as tune_for_input sets it for an input this small
+    spark.conf.set(key, "false")
+    try:
+        load_table(spark, sf_correctness_dir, "documents")  # schema read
+        spark_fn = QUERIES["p5_ngram_jaccard_pairs"].spark_fn
+        df, n = count_jobs(spark, lambda: spark_fn(spark, sf_correctness_dir))
+        assert n == 2
+        assert df.count() == 25
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_minhash_bucket_cap(spark):
     """Band buckets above max_bucket_size are dropped before the self-join,
     and the cap is inclusive for minhash and simhash alike."""
