@@ -10,11 +10,13 @@ workloads >2× DuckDB however well tuned. A reduction expressed as Catalyst
 aggregates shuffles only partial agg states — at 100 TB that is the
 difference between a python-bounded stage and a codegen'd one.
 
-Opt-in (``transform(..., compile=True)`` / ``cotransform(...,
-compile=True)``): tracing assumes the function is side-effect-free and runs
-it with proxy inputs, so functions that branch on data values, call
-``int()``/``float()`` on results, or mutate state raise ``TraceError`` and
-(non-strict) fall back to the pandas path unchanged.
+On by default (auto mode; ``compile=False`` or
+``FUGUE_SPARK_AUTO_COMPILE=0`` turns it off, ``compile=True``/``"strict"``
+forces it): tracing assumes the function is side-effect-free and runs it
+once with proxy inputs, so functions that branch on data values or mutate
+state raise ``TraceError`` and (non-strict) fall back to the pandas path
+unchanged. Auto mode additionally refuses functions that fail
+:func:`assert_statically_pure`.
 
 Traceable surface (kept deliberately small and exact):
   * column access: ``pdf.col`` / ``pdf['col']``; ``.values`` / ``.to_numpy()``
@@ -24,7 +26,14 @@ Traceable surface (kept deliberately small and exact):
     ``np.ceil`` (ufunc protocol); ``np.where(cond, a, b)`` → CASE WHEN
     (NEP-18); ``.astype(dtype)``; ``.fillna(const)``
   * reductions: ``.sum() .min() .max() .mean() .count() .nunique()``,
-    ``len(pdf)`` (returned directly), ``pdf.shape[0]``, ``series.size``
+    ``pdf.shape[0]``, ``t.num_rows``, ``series.size``
+  * ``int(x)`` / ``float(x)`` / ``len(pdf)`` as DIRECT calls in the
+    function's own source: the call sites are rewritten to traced twins
+    (:func:`_rewrite_builtins`), so ``len(pdf)`` is the group's count(*)
+    and composes like any reduction (``pdf.x.sum() / len(pdf)``). ``len``
+    reached where the rewriter cannot see it (a helper function, a lambda,
+    a function without readable source, a shadowed ``len``) raises
+    ``TraceError`` — CPython forces ``__len__`` to return a real int
   * first-row access ``col.iloc[0]`` / ``col.values[0]`` — compiled to the
     group key (constant), or to ``min_by``/``max_by`` over the declared
     presort; without a presort a non-key first-row access fails the trace
@@ -867,51 +876,6 @@ class _KeyRef(_Vec):
         return self
 
 
-# ``len(pdf)`` must hand the user a real int (CPython coerces __len__'s
-# result to an exact int, discarding any subclass), so len is traced with a
-# sentinel VALUE (one per side per trace). The function is traced twice with
-# different sentinels and the outputs must be invariant. Sentinels are
-# digit-weighted (side s contributes 16^s in the low bits), so any
-# NON-NEGATIVE INTEGER COMBINATION of side lengths — len(a), len(a)+len(b),
-# 2*len(a) — decodes uniquely back to per-side multiplicities and compiles
-# to the matching combination of count(*) leaves; the second trace must
-# decode to the SAME multiset or the trace fails (len contamination).
-_LEN_BASE = (0x5EAC0DE1, 0x2AB5CDE3)
-_LEN_SIDE_W = 0x1000  # side s token = BASE + W * 16**s
-_LEN_MAX_SIDES = 4  # decoding is unique while sum of side digits < BASE/W
-
-
-def _len_token(trace: int, side: int) -> int:
-    return _LEN_BASE[trace] + _LEN_SIDE_W * (16 ** side)
-
-
-def _decode_len_sum(v: Any, trace: int, n_sides: int) -> "dict[int, int] | None":
-    """If ``v`` equals a non-negative integer combination of this trace's
-    len sentinels, return {side: multiplicity}; else None."""
-    if not isinstance(v, int) or isinstance(v, bool) or v <= 0:
-        return None
-    if n_sides > _LEN_MAX_SIDES:
-        return None
-    base = _LEN_BASE[trace]
-    for k in range(1, 9):  # total number of len() terms
-        r = v - k * base
-        if r < 0:
-            break
-        if r >= base or r % _LEN_SIDE_W:
-            continue
-        d = r // _LEN_SIDE_W
-        mult: dict[int, int] = {}
-        total = 0
-        for side in range(n_sides):
-            digit = (d >> (4 * side)) & 0xF
-            if digit:
-                mult[side] = digit
-                total += digit
-        if d < 16 ** n_sides and total == k and mult:
-            return mult
-    return None
-
-
 class _TraceFrame:
     """The per-side ``pdf`` stand-in handed to the user function."""
 
@@ -921,7 +885,6 @@ class _TraceFrame:
         keys: list[str],
         presort,
         name_to_safe,
-        len_token: int,
         ctx: _TraceCtx,
         side: int = 0,
     ):
@@ -930,7 +893,6 @@ class _TraceFrame:
         self.presort = list(presort)
         self._name_to_safe = dict(name_to_safe)
         self._fields = {f.name: f for f in schema.fields}
-        self._len_token = len_token
         self.ctx = ctx
         self.side = side
 
@@ -978,9 +940,13 @@ class _TraceFrame:
     def columns(self):
         return list(self._fields)
 
+    def _rows(self) -> _Scalar:
+        """The group's row count: a count(*) leaf on this side."""
+        return self.ctx.leaf(self.side, F.count(F.lit(1)))
+
     @property
     def shape(self):
-        return (self.ctx.leaf(self.side, F.count(F.lit(1))), len(self._fields))
+        return (self._rows(), len(self._fields))
 
     # pyarrow.Table surface, so arrow-annotated reducers trace too
     def column(self, name: str) -> _Vec:
@@ -988,10 +954,17 @@ class _TraceFrame:
 
     @property
     def num_rows(self):
-        return self._len_token
+        return self._rows()
 
     def __len__(self):
-        return self._len_token
+        # CPython forces __len__ to return a real int, so the count cannot
+        # come back through here; direct len(pdf) calls are rewritten to
+        # _trace_len before the trace and never reach this method
+        raise TraceError(
+            "len(pdf) is traceable only as a direct call in the function's "
+            "own source (not in a helper, a lambda or under a shadowed len) "
+            "— use pdf.shape[0]"
+        )
 
     def __bool__(self):
         raise TraceError("branching on the group frame is not traceable")
@@ -1250,7 +1223,7 @@ class _TraceCursor:
 
 
 def _trace_int(x: Any):
-    """Traced twin of ``builtins.int`` substituted by :func:`_rewrite_casts`:
+    """Traced twin of ``builtins.int`` substituted by :func:`_rewrite_builtins`:
     a Catalyst cast on proxies, the builtin on everything else. Python's
     ``int()`` must return an exact ``int`` (CPython coerces subclass returns
     from ``__int__``), so the only way to keep ``int(pdf.x.sum())`` symbolic
@@ -1290,17 +1263,31 @@ def _trace_float(x: Any):
     return float(x)
 
 
-class _CastCallRewriter(ast.NodeTransformer):
-    """Rewrite ``int(x)`` / ``float(x)`` call sites to the traced casts."""
+def _trace_len(x: Any):
+    """Traced twin of ``builtins.len``: the side's count(*) leaf for a group
+    frame (the same leaf as ``pdf.shape[0]``), the builtin on everything
+    else (``len`` of a filtered frame still refuses)."""
+    if isinstance(x, _TraceFrame):
+        return x._rows()
+    return len(x)
 
-    def __init__(self) -> None:
+
+_TRACED_BUILTINS = {"int": _trace_int, "float": _trace_float, "len": _trace_len}
+
+
+class _BuiltinCallRewriter(ast.NodeTransformer):
+    """Rewrite one-argument calls of the given builtins to their traced
+    twins."""
+
+    def __init__(self, names: "set[str]") -> None:
+        self.names = names
         self.changed = False
 
     def visit_Call(self, node: ast.Call) -> ast.Call:
         self.generic_visit(node)
         if (
             isinstance(node.func, ast.Name)
-            and node.func.id in ("int", "float")
+            and node.func.id in self.names
             and len(node.args) == 1
             and not node.keywords
             and not isinstance(node.args[0], ast.Starred)
@@ -1310,22 +1297,25 @@ class _CastCallRewriter(ast.NodeTransformer):
         return node
 
 
-def _rewrite_casts(fn: Callable) -> Callable:
-    """Return a trace-twin of ``fn`` whose ``int(...)``/``float(...)`` calls
-    route through :func:`_trace_int`/:func:`_trace_float`, so the common
-    pandas idiom ``int(series.sum())`` stays symbolic instead of forcing
-    evaluation. The twin is used ONLY for tracing — the pandas/arrow
-    fallback always executes the original function — so any failure here
-    (no source, lambda, shadowed names, decorators) just returns ``fn``
-    and narrows what compiles, never what runs."""
+def _rewrite_builtins(fn: Callable) -> Callable:
+    """Return a trace-twin of ``fn`` whose ``int(...)``/``float(...)``/
+    ``len(...)`` calls route through :func:`_trace_int`/:func:`_trace_float`/
+    :func:`_trace_len`, so the common pandas idioms ``int(series.sum())`` and
+    ``len(pdf)`` stay symbolic instead of forcing evaluation (CPython coerces
+    what ``__int__``/``__float__``/``__len__`` return to an exact number).
+    The twin is used ONLY for tracing — the pandas/arrow fallback always
+    executes the original function — so any failure here (no source,
+    lambda, decorators) just returns ``fn`` and narrows what compiles, never
+    what runs. A builtin the function shadows keeps its meaning."""
     try:
         if getattr(fn, "__name__", "<lambda>") == "<lambda>":
             return fn
         code = fn.__code__
         g = fn.__globals__
         local_names = set(code.co_varnames) | set(code.co_freevars) | set(code.co_cellvars)
-        if {"int", "float"} & (set(local_names) | {k for k in ("int", "float") if k in g}):
-            return fn  # user-shadowed int/float must keep its meaning
+        names = {n for n in _TRACED_BUILTINS if n not in local_names and n not in g}
+        if not names:
+            return fn
         src = textwrap.dedent(inspect.getsource(fn))
         tree = ast.parse(src)
         fdef = tree.body[0]
@@ -1336,7 +1326,7 @@ def _rewrite_casts(fn: Callable) -> Callable:
             or fdef.decorator_list
         ):
             return fn
-        rw = _CastCallRewriter()
+        rw = _BuiltinCallRewriter(names)
         rw.visit(tree)
         if not rw.changed:
             return fn
@@ -1348,8 +1338,7 @@ def _rewrite_casts(fn: Callable) -> Callable:
             ns.update(
                 {n: c.cell_contents for n, c in zip(code.co_freevars, fn.__closure__)}
             )
-        ns["__fugue_trace_int__"] = _trace_int
-        ns["__fugue_trace_float__"] = _trace_float
+        ns.update({f"__fugue_trace_{n}__": _TRACED_BUILTINS[n] for n in names})
         exec(compile(tree, f"<fugue-trace {code.co_filename}>", "exec"), ns)
         new = ns[fdef.name]
         new.__defaults__ = fn.__defaults__
@@ -1373,38 +1362,31 @@ def _trace(fn, frames, kwargs, wants_cursor) -> Any:
     return res
 
 
-def _require_dict(res: Any) -> dict:
+def _require_dict(res: Any, out_schema: T.StructType) -> dict:
     if not isinstance(res, dict):
         raise TraceError(
             f"compiled transforms must return a dict of scalars or a derived "
             f"frame, got {type(res).__name__}"
         )
+    out_cols = [f.name for f in out_schema.fields]
+    if set(res) != set(out_cols):
+        raise TraceError(f"traced output keys {sorted(res)} != schema {sorted(out_cols)}")
     return res
 
 
-def _check_invariant(res, res2, ctx, ctx2, out_cols, n_sides) -> None:
-    if set(res) != set(out_cols) or set(res2) != set(out_cols):
-        raise TraceError(f"traced output keys {sorted(res)} != schema {sorted(out_cols)}")
-    if len(ctx.leaves) != len(ctx2.leaves) or any(
-        s1 != s2 or str(c1) != str(c2)
-        for (s1, c1), (s2, c2) in zip(ctx.leaves, ctx2.leaves)
-    ):
-        raise TraceError(
-            "the traced aggregations depend on len(pdf) — use pdf.shape[0]"
-        )
+def _literal_out(name: str, v: Any, dt: T.DataType) -> Column:
+    """A constant output (no traced value reached it)."""
+    if v is None or isinstance(v, (int, float, str)):
+        return F.lit(v).cast(dt).alias(name)
+    raise TraceError(f"output {name!r} has untraceable type {type(v).__name__}")
 
 
-def _assemble_outputs(res, res2, ctx, out_schema, n_sides, key_resolver):
+def _assemble_outputs(res, out_schema, key_resolver):
     """→ list of per-field output Columns (over ``__aggN__`` refs and
-    resolved key columns), registering count(*) leaves for len tokens."""
+    resolved key columns)."""
     outs: list[Column] = []
     for f in out_schema.fields:
-        v, w = res[f.name], res2[f.name]
-        if isinstance(v, (_Scalar, _Vec)):
-            if type(w) is not type(v) or str(w.col) != str(v.col):
-                raise TraceError(
-                    f"output {f.name!r} depends on len(pdf) arithmetic — use pdf.shape[0]"
-                )
+        v = res[f.name]
         if isinstance(v, _KeyRef):
             outs.append(key_resolver(v.name).cast(f.dataType).alias(f.name))
         elif isinstance(v, _Scalar):
@@ -1414,32 +1396,8 @@ def _assemble_outputs(res, res2, ctx, out_schema, n_sides, key_resolver):
                 f"output {f.name!r} is a per-row expression — reduce it "
                 "(sum/min/max/mean/first) before returning"
             )
-        elif isinstance(v, bool) or v is None or isinstance(v, str):
-            if w != v:
-                raise TraceError(f"output {f.name!r} is not len()-invariant")
-            outs.append(F.lit(v).cast(f.dataType).alias(f.name))
-        elif isinstance(v, (int, float)):
-            dec = _decode_len_sum(v, 0, n_sides)
-            if dec is not None:
-                if _decode_len_sum(w, 1, n_sides) != dec:
-                    raise TraceError(
-                        f"output {f.name!r} mixes len(pdf) with other arithmetic "
-                        "— use pdf.shape[0]"
-                    )
-                expr = None
-                for side, mult in sorted(dec.items()):
-                    leaf = ctx.leaf(side, F.count(F.lit(1)))
-                    term = leaf.col if mult == 1 else leaf.col * F.lit(mult)
-                    expr = term if expr is None else expr + term
-                outs.append(expr.cast(f.dataType).alias(f.name))
-            elif v == w or (v != v and w != w):  # equal constants (or both NaN)
-                outs.append(F.lit(v).cast(f.dataType).alias(f.name))
-            else:
-                raise TraceError(
-                    f"output {f.name!r} depends on len(pdf) arithmetic — use pdf.shape[0]"
-                )
         else:
-            raise TraceError(f"output {f.name!r} has untraceable type {type(v).__name__}")
+            outs.append(_literal_out(f.name, v, f.dataType))
     return outs
 
 
@@ -1560,7 +1518,6 @@ def _analyzed(out: DataFrame) -> DataFrame:
 def _compile_window_shape(
     df: DataFrame,
     res: dict,
-    res2: dict,
     ctx: _TraceCtx,
     out_schema: T.StructType,
     keys: "list[str]",
@@ -1579,19 +1536,9 @@ def _compile_window_shape(
             "per-row dict outputs compile only with partition keys"
         )
     plan = _with_window_leaves(df, ctx, keys, frame)
-    from pyspark.sql import Window
-
-    wk = Window.partitionBy(
-        *[_nan_safe_group(F.col(frame.safe(k)), frame.dtype(k)) for k in keys]
-    )
     outs: list[Column] = []
     for f in out_schema.fields:
-        v, w2 = res[f.name], res2[f.name]
-        if isinstance(v, _Base):
-            if type(w2) is not type(v) or str(w2.col) != str(v.col):
-                raise TraceError(
-                    f"output {f.name!r} depends on len(pdf) arithmetic — use pdf.shape[0]"
-                )
+        v = res[f.name]
         if isinstance(v, _KeyRef):
             outs.append(
                 _key_value_out(F.col(frame.safe(v.name)), frame.dtype(v.name))
@@ -1608,42 +1555,15 @@ def _compile_window_shape(
             outs.append(v.col.cast(f.dataType).alias(f.name))
         elif isinstance(v, _Scalar):
             outs.append(v.col.cast(f.dataType).alias(f.name))
-        elif isinstance(v, bool) or v is None or isinstance(v, str):
-            if w2 != v:
-                raise TraceError(f"output {f.name!r} is not len()-invariant")
-            outs.append(F.lit(v).cast(f.dataType).alias(f.name))
-        elif isinstance(v, (int, float)):
-            dec = _decode_len_sum(v, 0, 1)
-            if dec is not None:
-                if _decode_len_sum(w2, 1, 1) != dec:
-                    raise TraceError(
-                        f"output {f.name!r} mixes len(pdf) with other "
-                        "arithmetic — use pdf.shape[0]"
-                    )
-                c = F.count(F.lit(1)).over(wk)
-                mult = dec.get(0, 1)
-                outs.append(
-                    (c if mult == 1 else c * F.lit(mult)).cast(f.dataType).alias(f.name)
-                )
-            elif v == w2 or (v != v and w2 != w2):
-                outs.append(F.lit(v).cast(f.dataType).alias(f.name))
-            else:
-                raise TraceError(
-                    f"output {f.name!r} depends on len(pdf) arithmetic — use pdf.shape[0]"
-                )
         else:
-            raise TraceError(
-                f"output {f.name!r} has untraceable type {type(v).__name__}"
-            )
+            outs.append(_literal_out(f.name, v, f.dataType))
     return _widen_nullable(_analyzed(plan.select(*outs)))
 
 
 def _compile_map_shape(
     df: DataFrame,
     res: "Any",
-    res2: "Any",
     ctx: _TraceCtx,
-    ctx2: _TraceCtx,
     out_schema: T.StructType,
     keys: "list[str] | None" = None,
 ) -> DataFrame:
@@ -1657,35 +1577,6 @@ def _compile_map_shape(
     which compile as window aggregates over the partition keys: one
     exchange instead of a Python stage."""
     a = res if isinstance(res, _DerivedFrame) else _DerivedFrame(res)
-    b = res2 if isinstance(res2, _DerivedFrame) else _DerivedFrame(res2)
-    # len()-sentinel invariance: the derivation must be identical across
-    # both traces (a filter threshold or assigned constant built from
-    # len(pdf) would differ here)
-    if (
-        (a._cond is None) != (b._cond is None)
-        or (a._cond is not None and str(a._cond) != str(b._cond))
-        or list(a._assigned) != list(b._assigned)
-        or a.columns != b.columns
-        or a._sort != b._sort
-        or a._limit != b._limit
-        or a._dedup_subset != b._dedup_subset
-        or any(
-            str(x.col) != str(y.col)
-            if isinstance(x, _Base)
-            else (type(x) is not type(y) or x != y)
-            for x, y in zip(a._assigned.values(), b._assigned.values())
-        )
-    ):
-        raise TraceError(
-            "the returned frame depends on len(pdf) — not row-local"
-        )
-    if len(ctx.leaves) != len(ctx2.leaves) or any(
-        s1 != s2 or str(c1) != str(c2)
-        for (s1, c1), (s2, c2) in zip(ctx.leaves, ctx2.leaves)
-    ):
-        raise TraceError(
-            "the traced aggregations depend on len(pdf) — use pdf.shape[0]"
-        )
     available = set(a.columns)
     missing = [f.name for f in out_schema.fields if f.name not in available]
     if missing:
@@ -1910,44 +1801,31 @@ def try_compile_aggregation(
     nts = name_to_safe or {}
     if purity_check:
         assert_statically_pure(fn)
-    fn = _rewrite_casts(fn)
-
-    def run_trace(trace: int):
-        ctx = _TraceCtx()
-        frame = _TraceFrame(schema, keys, presort, nts, _len_token(trace, 0), ctx, 0)
-        return _trace(fn, [frame], kwargs, wants_cursor), ctx, frame
-
-    # trace twice with different len() sentinels: outputs must be invariant,
-    # which catches any arithmetic on len(pdf) (a plain int by CPython rule)
-    # leaking into results as a bogus constant — including inside exprs
-    res, ctx, frame = run_trace(0)
-    res2, ctx2, _ = run_trace(1)
-    out_cols = [f.name for f in out_schema.fields]
+    fn = _rewrite_builtins(fn)
+    ctx = _TraceCtx()
+    frame = _TraceFrame(schema, keys, presort, nts, ctx)
+    res = _trace(fn, [frame], kwargs, wants_cursor)
     if isinstance(res, (_TraceFrame, _DerivedFrame)):
-        return _compile_map_shape(df, res, res2, ctx, ctx2, out_schema, keys=keys)
+        return _compile_map_shape(df, res, ctx, out_schema, keys=keys)
     if not keys and not allow_ungrouped_agg:
         raise TraceError(
             "keyless dict outputs are one-row-per-physical-partition on the "
             "pandas path — auto-compile refuses; pass compile=True for the "
             "global-aggregation reading"
         )
-    res, res2 = _require_dict(res), _require_dict(res2)
-    _check_invariant(res, res2, ctx, ctx2, out_cols, 1)
+    res = _require_dict(res, out_schema)
     if any(
         isinstance(v, _Vec) and not isinstance(v, _KeyRef) for v in res.values()
     ):
         # dict-of-arrays shape: per-row vectors (possibly mixed with
         # reductions) → window plan, one output row per group row
-        return _compile_window_shape(df, res, res2, ctx, out_schema, keys, frame)
+        return _compile_window_shape(df, res, ctx, out_schema, keys, frame)
 
     safe = frame.safe
     gk = {k: f"__gk_{i}__" for i, k in enumerate(keys)}
     outs = _assemble_outputs(
         res,
-        res2,
-        ctx,
         out_schema,
-        1,
         key_resolver=lambda k: _key_value_out(F.col(gk[k]), frame.dtype(k)),
     )
     aggs = [col.alias(f"__agg{i}__") for i, (_, col) in enumerate(ctx.leaves)]
@@ -1992,25 +1870,14 @@ def try_compile_cotransform(
         raise TraceError(f"only how='inner' cotransforms compile (got {how!r})")
     if not keys:
         raise TraceError("cross zip does not compile")
-    n = len(dfs)
     if purity_check:
         assert_statically_pure(fn)
-    fn = _rewrite_casts(fn)
-
-    def run_trace(trace: int):
-        ctx = _TraceCtx()
-        frames = [
-            _TraceFrame(
-                dfs[i].schema, keys, presort, {}, _len_token(trace, i), ctx, i
-            )
-            for i in range(n)
-        ]
-        return _require_dict(_trace(fn, frames, kwargs, wants_cursor)), ctx
-
-    res, ctx = run_trace(0)
-    res2, ctx2 = run_trace(1)
-    out_cols = [f.name for f in out_schema.fields]
-    _check_invariant(res, res2, ctx, ctx2, out_cols, n)
+    fn = _rewrite_builtins(fn)
+    ctx = _TraceCtx()
+    frames = [
+        _TraceFrame(d.schema, keys, presort, {}, ctx, i) for i, d in enumerate(dfs)
+    ]
+    res = _require_dict(_trace(fn, frames, kwargs, wants_cursor), out_schema)
 
     key_dt = {k: dfs[0].schema[k].dataType for k in keys}
     # per-side aggregation over the SAME keys, then inner-join the sides:
@@ -2041,10 +1908,7 @@ def try_compile_cotransform(
         )
     else:
         key_resolver = lambda k: _key_value_out(F.col(k), key_dt[k])  # noqa: E731
-    # NOTE: _assemble_outputs may APPEND leaves to ctx (len() sentinel sums
-    # decode into count leaves there), so it must run before the per-side
-    # agg lists below are materialized
-    outs = _assemble_outputs(res, res2, ctx, out_schema, n, key_resolver=key_resolver)
+    outs = _assemble_outputs(res, out_schema, key_resolver=key_resolver)
     sides: list[DataFrame] = []
     for i, df in enumerate(dfs):
         aggs = [

@@ -385,10 +385,12 @@ def _verified_pair_counts(
     the optimizer estimate of the ``corpus`` input does not fit
     ``_VERIFY_PREFILTER_MIN_INPUT_BYTES``, the candidate frame is
     materialized (its lazy checkpoint is read again by the first verify
-    join) and probed with ONE bounded driver job — a
-    ``limit(bound+1).count()``, so an over-bound candidate set (the
-    pathological dup-rate regime) stops the probe after bound+1 rows
-    instead of materializing every pair. When bounded by
+    join) and probed with ONE driver job — a ``limit(bound+1).count()``.
+    The count it returns is bounded, the work is not: the job runs the
+    limit on every partition, and the lazy checkpoint stores each partition
+    it computes whole, so above the bound (the pathological dup-rate
+    regime) the probe still materializes every candidate pair in executor
+    block storage. When bounded by
     ``_VERIFY_PREFILTER_MAX_PAIRS``, each index side is semi-filtered to the
     candidate ids through a broadcast BEFORE the verify joins. The indexes
     are corpus-sized (every doc × every shingle) while candidates are

@@ -142,6 +142,14 @@ def _file_version(path: str) -> "tuple | None":
     return (real, st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns)
 
 
+def _set_confs(spark: SparkSession) -> "dict[str, str]":
+    """The session's explicitly set confs, read in two py4j calls instead of
+    one per ``spark.conf.get``. Scala's ``Map.mkString`` renders an entry as
+    ``key -> value``."""
+    text = spark.conf._jconf.getAll().mkString("\n")
+    return dict(line.split(" -> ", 1) for line in text.split("\n") if " -> " in line)
+
+
 def _read_parquet_file(spark: SparkSession, reader, path: str) -> DataFrame:
     """``reader.parquet(path)``, passing the schema Spark inferred for the
     same file version under the same confs when there is one (see
@@ -150,12 +158,15 @@ def _read_parquet_file(spark: SparkSession, reader, path: str) -> DataFrame:
     version = _file_version(path)
     if version is None:
         return reader.parquet(path)
-    fs = spark.conf.get("fs.defaultFS", None)
+    confs = _set_confs(spark)
+    fs = confs.get("fs.defaultFS")
     if fs is None:
         fs = spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
     if not str(fs).startswith("file:"):
         return reader.parquet(path)
-    key = (version, tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    # an unset conf keys as None: each of the 11 has a fixed default
+    # (a ConfigEntryWithDefault, not a fallback to another conf)
+    key = (version, tuple(confs.get(k) for k in _SCHEMA_CONFS))
     schema = _SCHEMA_MEMO.get(key)
     if schema is not None:
         return reader.schema(schema).parquet(path)

@@ -1345,3 +1345,129 @@ def test_unexpected_compile_failure_warns_auto_raises_explicit(spark, monkeypatc
         transform(
             df, pure, schema="k:long,n:long", partition={"by": ["k"]}, compile=True
         )
+
+
+# ---------------- len() as a count leaf, one trace ----------------
+
+
+def _groups_of_2_and_3(spark):
+    return spark.createDataFrame(
+        pd.DataFrame({"k": [1, 1, 2, 2, 2], "q": [1.0, 2.0, 3.0, 4.0, 5.0]})
+    )
+
+
+@pytest.mark.parametrize("case", ["parity", "capped"])
+def test_len_arithmetic_auto_matches_python_path(spark, case):
+    """len(pdf) inside arithmetic or a builtin must give each group's own
+    count: a constant standing in for it would give every group the same
+    answer."""
+    df = _groups_of_2_and_3(spark)
+
+    def parity(pdf):
+        return {"k": pdf.k.iloc[0], "p": len(pdf) % 2}
+
+    def capped(pdf):
+        return {"k": pdf.k.iloc[0], "c": min(len(pdf), 3)}
+
+    fn, schema, want, compiles = {
+        "parity": (parity, "k:long,p:long", [(1, 0), (2, 1)], True),
+        # min() compares, so it branches on the count: Python path
+        "capped": (capped, "k:long,c:long", [(1, 2), (2, 3)], False),
+    }[case]
+    auto = transform(df, fn, schema=schema, partition={"by": ["k"]})
+    py = transform(df, fn, schema=schema, partition={"by": ["k"]}, compile=False)
+    assert sorted_rows(py) == want
+    assert sorted_rows(auto) == want
+    assert _py_stage(auto) is not compiles
+
+
+@pytest.mark.parametrize("case", ["equal", "difference"])
+def test_cotransform_len_arithmetic_auto_matches_python_path(spark, case):
+    from fugue_spark.cotransform import cotransform
+
+    a = _groups_of_2_and_3(spark)
+    b = spark.createDataFrame(pd.DataFrame({"k": [1, 1, 2], "r": [1.0, 2.0, 3.0]}))
+
+    def equal(left, right):
+        return {"k": left.k.iloc[0], "eq": len(left) == len(right)}
+
+    def difference(left, right):
+        return {"k": left.k.iloc[0], "d": len(left) - len(right)}
+
+    fn, schema, want = {
+        "equal": (equal, "k:long,eq:bool", [(1, True), (2, False)]),
+        "difference": (difference, "k:long,d:long", [(1, 0), (2, 2)]),
+    }[case]
+    auto = cotransform([a, b], fn, schema=schema, how="inner")
+    py = cotransform([a, b], fn, schema=schema, how="inner", compile=False)
+    assert sorted_rows(py) == want
+    assert sorted_rows(auto) == want
+    assert not _py_stage(auto)
+
+
+def test_len_composes_like_a_reduction_under_strict(spark):
+    import pyarrow as pa
+
+    df = _groups_of_2_and_3(spark)
+
+    def mean_q(pdf):
+        return {"k": pdf.k.iloc[0], "m": pdf.q.sum() / len(pdf)}
+
+    def plus_one(pdf):
+        return {"k": pdf.k.iloc[0], "n": len(pdf) + 1}
+
+    def arrow_rows(t: pa.Table):
+        return {"k": t.column("k")[0].as_py(), "n": t.num_rows * 2 - 1}
+
+    for fn, schema in (
+        (mean_q, "k:long,m:double"),
+        (plus_one, "k:long,n:long"),
+        (arrow_rows, "k:long,n:long"),
+    ):
+        part = {"by": ["k"]}
+        strict = transform(df, fn, schema=schema, partition=part, compile="strict")
+        py = transform(df, fn, schema=schema, partition=part, compile=False)
+        assert not _py_stage(strict), fn.__name__
+        assert sorted_rows(strict) == sorted_rows(py), fn.__name__
+
+
+def test_strict_compile_traces_the_function_once(spark):
+    from fugue_spark.cotransform import cotransform
+
+    df = _groups_of_2_and_3(spark)
+    calls = []
+
+    def counted(pdf):
+        calls.append("transform")
+        return {"k": pdf.k.iloc[0], "n": len(pdf)}
+
+    def counted_zip(left, right):
+        calls.append("cotransform")
+        return {"k": left.k.iloc[0], "n": len(left) + len(right)}
+
+    transform(df, counted, schema="k:long,n:long", partition={"by": ["k"]}, compile="strict")
+    cotransform([df, df], counted_zip, schema="k:long,n:long", how="inner", compile="strict")
+    assert calls == ["transform", "cotransform"]
+
+
+def test_len_out_of_the_rewriters_sight_falls_back(spark):
+    """len() reached through a helper or a lambda cannot be rewritten: auto
+    runs the Python path, strict names the limit."""
+    df = _groups_of_2_and_3(spark)
+
+    def _group_rows(pdf):
+        return len(pdf)
+
+    def via_helper(pdf):
+        return {"k": pdf.k.iloc[0], "n": _group_rows(pdf)}
+
+    via_lambda = lambda pdf: {"k": pdf.k.iloc[0], "n": len(pdf)}  # noqa: E731
+
+    part = {"by": ["k"]}
+    for fn in (via_helper, via_lambda):
+        auto = transform(df, fn, schema="k:long,n:long", partition=part)
+        py = transform(df, fn, schema="k:long,n:long", partition=part, compile=False)
+        assert _py_stage(auto)
+        assert sorted_rows(auto) == sorted_rows(py) == [(1, 2), (2, 3)]
+        with pytest.raises(TraceError, match="direct call"):
+            transform(df, fn, schema="k:long,n:long", partition=part, compile="strict")
