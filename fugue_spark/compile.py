@@ -81,6 +81,20 @@ Compiled plans:
     joined on the keys (inner join ≡ the zip engine's skip-empty-group
     rule), then the output projection combines sides' leaves
 
+Proxies hold SQL text, not Columns: the trace is pure Python and sends no
+py4j command. Columns are built once per compiled plan, in one lowering
+step (``F.expr`` for group keys and leaves, ``selectExpr`` for outputs —
+see :func:`_lowered`). Rendering rules (:func:`_sql_lit`, :func:`_qid`):
+identifiers are back-quoted with inner backticks doubled; every binary
+operation renders as ``(a OP b)`` with spaces (``a - -5`` must not become
+the comment ``a--5``); ints keep ``lit``'s INT/BIGINT typing; floats are
+DOUBLE literals (``1.5D`` — a bare ``1.5`` is a DECIMAL), NaN and ±inf a
+cast; a string holding a backslash or a quote renders as its UTF-8 bytes
+cast to STRING, so patterns reach Java regex byte-for-byte under either
+``spark.sql.parser.escapedStringLiterals``; ``isin([])`` renders as
+``false`` (SQL has no empty IN list); key defaults are typed literals
+(``DATE '…'``, ``TIMESTAMP_NTZ '…'``, ``X''``).
+
 Rounding caveat: ``np.round`` is round-half-even, Spark/DuckDB ``round``
 is half-away-from-zero for positives; they differ only on exact .5
 boundaries, which arbitrary doubles essentially never hit. Documented
@@ -98,10 +112,11 @@ from __future__ import annotations
 
 import ast
 import inspect
+import math
 import textwrap
 from typing import Any, Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -168,12 +183,12 @@ _DTYPES = {
     "int8": "tinyint",
     "int16": "smallint",
     "int32": "int",
-    "int64": "long",
+    "int64": "bigint",
     "float32": "float",
     "float64": "double",
     "double": "double",
     "float": "double",  # numpy-style name
-    "int": "long",
+    "int": "bigint",
     "bool": "boolean",
     "boolean": "boolean",
     "str": "string",
@@ -189,130 +204,159 @@ def _cast_name(dtype: Any) -> str:
         raise TraceError(f"astype({dtype!r}) has no Catalyst mapping")
 
 
-def _lift(other: Any) -> "Column | Any":
+# -- SQL rendering: the one place Python values and names become SQL text ---
+def _qid(name: str) -> str:
+    """A back-quoted identifier; inner backticks are doubled."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_lit(v: Any) -> str:
+    """SQL text of a Python constant, typed the way ``F.lit`` types it:
+    ints are INT when they fit and BIGINT otherwise, floats are DOUBLE
+    (``1.5D``; a bare ``1.5`` would be a DECIMAL), NaN/±inf go through a
+    cast. A string holding a backslash or a quote renders as its UTF-8
+    bytes cast to STRING, which parses to the same value whatever
+    ``spark.sql.parser.escapedStringLiterals`` says — regex patterns reach
+    Java byte-for-byte."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        if not -(2**63) <= v < 2**63:
+            raise TraceError(f"integer constant {v} does not fit a bigint")
+        return int.__repr__(v)
+    if isinstance(v, float):
+        if math.isnan(v) or math.isinf(v):
+            name = "NaN" if math.isnan(v) else ("Infinity" if v > 0 else "-Infinity")
+            return f"CAST('{name}' AS DOUBLE)"
+        # float.__repr__: the shortest round-trip digits, also for numpy
+        # scalars (whose own repr reads np.float64(...))
+        return float.__repr__(v).upper() + "D"
+    if isinstance(v, str):
+        if "\\" in v or "'" in v:
+            return f"CAST(X'{v.encode().hex()}' AS STRING)"
+        return f"'{v}'"
+    raise TraceError(f"cannot render {type(v).__name__} as a SQL constant")
+
+
+def _cast(sql: str, type_name: str) -> str:
+    return f"CAST({sql} AS {type_name})"
+
+
+def _lift(other: Any) -> str:
     if isinstance(other, (_Vec, _Scalar)):
-        return other.col
+        return other.sql
     if isinstance(other, (int, float, bool, str)):
-        return other
+        return _sql_lit(other)
     raise TraceError(f"cannot mix {type(other).__name__} into a traced expression")
 
 
 class _TraceCtx:
     """Per-trace registry of aggregation leaves. Every reduction becomes a
-    ``(side, agg Column)`` leaf referenced as ``__aggN__``; composite scalar
-    expressions are built over the references, so a cross-side expression
-    (zip) can still be split into per-side aggregations at assembly."""
+    ``(side, aggregate SQL)`` leaf referenced as ``__aggN__``; composite
+    scalar expressions are built over the references, so a cross-side
+    expression (zip) can still be split into per-side aggregations at
+    assembly."""
 
     __slots__ = ("leaves",)
 
     def __init__(self):
-        self.leaves: list[tuple[int, Column]] = []
+        self.leaves: list[tuple[int, str]] = []
 
-    def leaf(self, side: int, col: Column) -> "_Scalar":
+    def leaf(self, side: int, sql: str) -> "_Scalar":
         i = len(self.leaves)
-        self.leaves.append((side, col))
-        return _Scalar(F.col(f"__agg{i}__"))
+        self.leaves.append((side, sql))
+        return _Scalar(_qid(f"__agg{i}__"))
+
+
+def _binop(op: str, reflected: bool = False, boolean: bool = False):
+    """Operator method rendering ``(a OP b)``: the parentheses keep the
+    tree, the spaces keep ``a - -5`` from becoming the comment ``a--5``."""
+
+    def method(self, o):
+        a, b = self.sql, self._lift(o)
+        if reflected:
+            a, b = b, a
+        return (self._make_bool if boolean else self._make)(f"({a} {op} {b})")
+
+    return method
 
 
 class _Base:
     """Shared operator surface for vector (per-row) and scalar (reduced)
-    proxies; every operation returns a new proxy over a pyspark Column."""
+    proxies. A proxy holds SQL text (``sql``) and every operation returns a
+    new proxy over new text, so a trace is pure Python: no Column exists
+    and no py4j command is sent until the compiled plan is lowered, once,
+    by ``try_compile_aggregation`` / ``try_compile_cotransform`` and the
+    shape compilers (``F.expr`` / ``selectExpr``). Constants and names
+    render through :func:`_sql_lit` and :func:`_qid`."""
 
     # _round0_child: set by round(decimals=0) so astype(int) can fuse the
     # pair into the allocation-free HALF_UP form (see astype)
-    __slots__ = ("col", "_round0_child")
+    __slots__ = ("sql", "_round0_child")
 
-    def __init__(self, col: Column):
-        self.col = col
+    def __init__(self, sql: str):
+        self.sql = sql
 
-    def _make(self, col: Column):
-        return type(self)(col)
+    def _make(self, sql: str):
+        return type(self)(sql)
 
-    def _lift(self, other: Any):
+    _make_bool = _make
+
+    def _lift(self, other: Any) -> str:
         return _lift(other)
 
     # arithmetic -----------------------------------------------------------
-    def __add__(self, o):
-        return self._make(self.col + self._lift(o))
-
-    def __radd__(self, o):
-        return self._make(self._lift(o) + self.col)
-
-    def __sub__(self, o):
-        return self._make(self.col - self._lift(o))
-
-    def __rsub__(self, o):
-        return self._make(self._lift(o) - self.col)
-
-    def __mul__(self, o):
-        return self._make(self.col * self._lift(o))
-
-    def __rmul__(self, o):
-        return self._make(self._lift(o) * self.col)
-
-    def __truediv__(self, o):
-        return self._make(self.col / self._lift(o))
-
-    def __rtruediv__(self, o):
-        return self._make(self._lift(o) / self.col)
+    __add__ = _binop("+")
+    __radd__ = _binop("+", reflected=True)
+    __sub__ = _binop("-")
+    __rsub__ = _binop("-", reflected=True)
+    __mul__ = _binop("*")
+    __rmul__ = _binop("*", reflected=True)
+    __truediv__ = _binop("/")
+    __rtruediv__ = _binop("/", reflected=True)
+    __mod__ = _binop("%")
 
     def __floordiv__(self, o):
-        return self._make(F.floor(self.col / self._lift(o)).cast("long"))
-
-    def __mod__(self, o):
-        return self._make(self.col % self._lift(o))
+        return self._make(_cast(f"floor(({self.sql} / {self._lift(o)}))", "bigint"))
 
     def __pow__(self, o):
-        return self._make(F.pow(self.col, self._lift(o)))
+        return self._make(f"power({self.sql}, {self._lift(o)})")
 
     def __neg__(self):
-        return self._make(-self.col)
+        return self._make(f"(- {self.sql})")
 
     def __abs__(self):
-        return self._make(F.abs(self.col))
+        return self._make(f"abs({self.sql})")
 
-    # comparisons / boolean ------------------------------------------------
-    def __eq__(self, o):  # type: ignore[override]
-        return self._make(self.col == self._lift(o))
-
-    def __ne__(self, o):  # type: ignore[override]
-        return self._make(self.col != self._lift(o))
-
-    def __lt__(self, o):
-        return self._make(self.col < self._lift(o))
-
-    def __le__(self, o):
-        return self._make(self.col <= self._lift(o))
-
-    def __gt__(self, o):
-        return self._make(self.col > self._lift(o))
-
-    def __ge__(self, o):
-        return self._make(self.col >= self._lift(o))
-
-    def __and__(self, o):
-        return self._make(self.col & self._lift(o))
-
-    def __or__(self, o):
-        return self._make(self.col | self._lift(o))
+    # comparisons / boolean: boolean-typed results on vectors --------------
+    __eq__ = _binop("=", boolean=True)  # type: ignore[assignment]
+    __ne__ = _binop("!=", boolean=True)  # type: ignore[assignment]
+    __lt__ = _binop("<", boolean=True)
+    __le__ = _binop("<=", boolean=True)
+    __gt__ = _binop(">", boolean=True)
+    __ge__ = _binop(">=", boolean=True)
+    __and__ = _binop("AND", boolean=True)
+    __or__ = _binop("OR", boolean=True)
 
     def __invert__(self):
-        return self._make(~self.col)
+        return self._make_bool(f"(NOT {self.sql})")
 
-    # numpy ufunc protocol -------------------------------------------------
+    # numpy ufunc protocol: SQL templates over the lifted inputs -----------
     _UFUNCS = {
-        "sqrt": F.sqrt,
-        "log": F.log,
-        "log1p": F.log1p,
-        "exp": F.exp,
-        "absolute": F.abs,
-        "fabs": F.abs,
-        "floor": F.floor,
-        "ceil": F.ceil,
-        "rint": lambda c: F.round(c, 0),
-        "negative": lambda c: -c,
-        "minimum": F.least,
-        "maximum": F.greatest,
+        "sqrt": "sqrt({})",
+        "log": "ln({})",
+        "log1p": "log1p({})",
+        "exp": "exp({})",
+        "absolute": "abs({})",
+        "fabs": "abs({})",
+        "floor": "floor({})",
+        "ceil": "ceil({})",
+        "rint": "round({}, 0)",
+        "negative": "(- {})",
+        "minimum": "least({}, {})",
+        "maximum": "greatest({}, {})",
     }
     _UFUNC_BINOPS = {
         "add": "__add__",
@@ -337,7 +381,9 @@ class _Base:
             if not isinstance(cond, _Base):
                 raise TraceError("np.where condition must be a traced expression")
             make = cond._make if isinstance(cond, _Vec) else _Scalar
-            return make(F.when(cond.col, cond._lift(a)).otherwise(cond._lift(b)))
+            return make(
+                f"CASE WHEN {cond.sql} THEN {cond._lift(a)} ELSE {cond._lift(b)} END"
+            )
         if func in (np.round, np.around):
             a = args[0]
             decimals = args[1] if len(args) > 1 else kwargs.get("decimals", 0)
@@ -364,13 +410,10 @@ class _Base:
             if isinstance(a, _Base):
                 return getattr(a, self._UFUNC_BINOPS[name])(b)
             return getattr(b, "__r" + self._UFUNC_BINOPS[name][2:])(a)
-        fn = self._UFUNCS.get(name)
-        if fn is None:
+        tmpl = self._UFUNCS.get(name)
+        if tmpl is None:
             raise TraceError(f"ufunc {name} is not traceable")
-        if name in ("minimum", "maximum"):
-            return self._make(fn(self._lift(inputs[0]), self._lift(inputs[1])))
-        (x,) = inputs
-        return self._make(fn(self._lift(x)))
+        return self._make(tmpl.format(*[self._lift(x) for x in inputs]))
 
     # common methods -------------------------------------------------------
     def round(self, decimals: int = 0, out: Any = None, **_kw: Any):
@@ -379,17 +422,17 @@ class _Base:
         # letting numpy fall back to an object-array rint loop
         if out is not None:
             raise TraceError("round(out=...) is not traceable")
-        r = self._make(F.round(self.col, int(decimals)))
+        r = self._make(f"round({self.sql}, {int(decimals)})")
         if int(decimals) == 0:
-            # remember the pre-round column so astype(int) can lower
+            # remember the pre-round expression so astype(int) can lower
             # round→cast to the allocation-free floor form (see astype)
-            r._round0_child = self.col
+            r._round0_child = self.sql
         return r
 
     def astype(self, dtype: Any):
         name = _cast_name(dtype)
         ch = getattr(self, "_round0_child", None)
-        if ch is not None and name in ("long", "int", "smallint", "tinyint"):
+        if ch is not None and name in ("bigint", "int", "smallint", "tinyint"):
             # .round().astype(int): Spark's round() on doubles allocates a
             # BigDecimal (via Double.toString) per row — measured as 3× the
             # whole aggregate's cost at sf10 (scripts/expr_variants.py q1).
@@ -403,20 +446,20 @@ class _Base:
             # half-even produces, so the documented pandas-parity caveat
             # narrows). NaN, ±Inf, |x| > 2^51 and null take the original
             # round path unchanged.
-            chd = ch.cast("double")
-            fl = F.floor(chd)
-            half_up = fl + ((chd - fl) >= F.lit(0.5)).cast("long")
-            guarded = F.when(
-                F.isnan(chd) | (F.abs(chd) > F.lit(2.0**51)),
-                self.col.cast("long"),
-            ).otherwise(half_up)
-            return self._make(guarded if name == "long" else guarded.cast(name))
-        return self._make(self.col.cast(name))
+            chd = _cast(ch, "double")
+            fl = f"floor({chd})"
+            half_up = f"({fl} + {_cast(f'(({chd} - {fl}) >= 0.5D)', 'bigint')})"
+            guarded = (
+                f"CASE WHEN (isnan({chd}) OR (abs({chd}) > {_sql_lit(2.0**51)})) "
+                f"THEN {_cast(self.sql, 'bigint')} ELSE {half_up} END"
+            )
+            return self._make(guarded if name == "bigint" else _cast(guarded, name))
+        return self._make(_cast(self.sql, name))
 
     def fillna(self, value: Any):
         if not isinstance(value, (int, float, bool, str)):
             raise TraceError("fillna with a non-constant is not traceable")
-        return self._make(F.coalesce(self.col, F.lit(value)))
+        return self._make(f"coalesce({self.sql}, {_sql_lit(value)})")
 
     # refuse silent coercion ----------------------------------------------
     def __bool__(self):
@@ -461,124 +504,99 @@ class _Vec(_Base):
     boolean vectors cast to long inside sum/mean — SQL would reject
     sum(boolean) outright.
 
-    ``cond`` carries the row filter of the _DerivedFrame a column was read
-    from (``pdf[mask].y``): reductions become conditional aggregates
-    (``sum(CASE WHEN cond THEN y END)``). Vectors from DIFFERENT filters
-    refuse to combine — pandas would align them by index, which has no
-    row-local SQL equivalent."""
+    ``cond`` carries the row filter (SQL text) of the _DerivedFrame a
+    column was read from (``pdf[mask].y``): reductions become conditional
+    aggregates (``sum(CASE WHEN cond THEN y END)``). Vectors from DIFFERENT
+    filters refuse to combine — pandas would align them by index, which
+    has no row-local SQL equivalent."""
 
     __slots__ = ("frame", "name", "boolish", "cond")
 
     def __init__(
         self,
-        col: Column,
+        sql: str,
         frame: "_TraceFrame | None" = None,
         name: "str | None" = None,
         boolish: bool = False,
-        cond: "Column | None" = None,
+        cond: "str | None" = None,
     ):
-        super().__init__(col)
+        super().__init__(sql)
         self.frame = frame
         self.name = name
         self.boolish = boolish
         self.cond = cond
 
-    def _make(self, col: Column):
+    def _make(self, sql: str):
         # derived vectors lose key identity but keep the frame (side/presort)
-        return _Vec(col, frame=self.frame, cond=self.cond)
+        return _Vec(sql, frame=self.frame, cond=self.cond)
 
-    def _make_bool(self, col: Column):
-        return _Vec(col, frame=self.frame, boolish=True, cond=self.cond)
-
-    # comparisons / logical: boolean-typed results ------------------------
-    def __eq__(self, o):  # type: ignore[override]
-        return self._make_bool(self.col == self._lift(o))
-
-    def __ne__(self, o):  # type: ignore[override]
-        return self._make_bool(self.col != self._lift(o))
-
-    def __lt__(self, o):
-        return self._make_bool(self.col < self._lift(o))
-
-    def __le__(self, o):
-        return self._make_bool(self.col <= self._lift(o))
-
-    def __gt__(self, o):
-        return self._make_bool(self.col > self._lift(o))
-
-    def __ge__(self, o):
-        return self._make_bool(self.col >= self._lift(o))
-
-    def __and__(self, o):
-        return self._make_bool(self.col & self._lift(o))
-
-    def __or__(self, o):
-        return self._make_bool(self.col | self._lift(o))
-
-    def __invert__(self):
-        return self._make_bool(~self.col)
+    def _make_bool(self, sql: str):
+        return _Vec(sql, frame=self.frame, boolish=True, cond=self.cond)
 
     def isna(self):
-        return self._make_bool(self.col.isNull())
+        return self._make_bool(f"({self.sql} IS NULL)")
 
-    def isnull(self):
-        return self._make_bool(self.col.isNull())
+    isnull = isna
 
     def notna(self):
-        return self._make_bool(self.col.isNotNull())
+        return self._make_bool(f"({self.sql} IS NOT NULL)")
 
     def isin(self, values):
         vals = list(values)
         if not all(isinstance(v, (int, float, bool, str)) for v in vals):
             raise TraceError("isin with non-constant values is not traceable")
-        return self._make_bool(self.col.isin(vals))
+        if not vals:
+            # SQL has no empty IN list; pandas' isin([]) is False everywhere
+            return self._make_bool("false")
+        return self._make_bool(f"({self.sql} IN ({', '.join(map(_sql_lit, vals))}))")
 
     def between(self, left, right, inclusive: str = "both"):
         if inclusive != "both":
             raise TraceError("between(inclusive != 'both') is not traceable")
-        return self._make_bool(
-            (self.col >= self._lift(left)) & (self.col <= self._lift(right))
-        )
+        return (self >= left) & (self <= right)
 
     def abs(self):
-        return self._make(F.abs(self.col))
+        return abs(self)
 
     def clip(self, lower=None, upper=None):
         for b in (lower, upper):
             if b is not None and not isinstance(b, (int, float)):
                 raise TraceError("clip bounds must be numeric constants")
-        c = self.col
+        c = self.sql
         if lower is not None:
-            c = F.greatest(c, F.lit(lower))
+            c = f"greatest({c}, {_sql_lit(lower)})"
         if upper is not None:
-            c = F.least(c, F.lit(upper))
+            c = f"least({c}, {_sql_lit(upper)})"
         return self._make(c)
 
-    def _lift(self, other: Any):
+    def _lift(self, other: Any) -> str:
         if isinstance(other, _Vec):
             if other.frame is not self.frame:
                 raise TraceError(
                     "cannot combine per-row expressions from different zip sides "
                     "(reduce each side first)"
                 )
-            if _cond_str(other.cond) != _cond_str(self.cond):
+            if other.cond != self.cond:
                 raise TraceError(
                     "cannot combine columns read through different row filters "
                     "(pandas would align them by index)"
                 )
         return _lift(other)
 
-    def _agg_arg(self, c: Column) -> Column:
+    def _agg_arg(self, sql: str) -> str:
         # a column read through pdf[mask] reduces conditionally: rows
         # outside the mask become NULL, which every SQL aggregate skips —
         # exactly pandas' subset reduction
-        return F.when(self.cond, c) if self.cond is not None else c
+        return sql if self.cond is None else f"CASE WHEN {self.cond} THEN {sql} END"
 
-    def _leaf(self, col: Column) -> _Scalar:
+    def _leaf(self, agg: str) -> _Scalar:
         f = self.frame
         if f is None:  # pragma: no cover - vectors always carry a frame
             raise TraceError("reduction on an unbound expression")
-        return f.ctx.leaf(f.side, col)
+        return f.ctx.leaf(f.side, agg)
+
+    def _reduce(self, fn: str) -> _Scalar:
+        return self._leaf(f"{fn}({self._agg_arg(self._num())})")
 
     # array-like surface ---------------------------------------------------
     @property
@@ -601,68 +619,64 @@ class _Vec(_Base):
 
     @property
     def size(self):
-        return self._leaf(F.count(self._agg_arg(F.lit(1))))
+        return self._leaf(f"count({self._agg_arg('1')})")
 
     # reductions -----------------------------------------------------------
-    def _num(self) -> Column:
+    def _num(self) -> str:
         # pandas reduces boolean Series numerically
-        return self.col.cast("long") if self.boolish else self.col
+        return _cast(self.sql, "bigint") if self.boolish else self.sql
 
     def sum(self, *a, **k):
         # pandas Series.sum() is 0 over an empty filtered subset AND over
         # an all-NaN column (min_count=0 default); SQL SUM is NULL in both
         # cases. The coalesce wraps the LEAF REFERENCE, never the leaf
         # itself — leaves must stay pure aggregate functions so the window
-        # shape can apply `.over()` to them (r07 fuzz finding).
-        leaf = self._leaf(F.sum(self._agg_arg(self._num())))
-        return _Scalar(F.coalesce(leaf.col, F.lit(0)))
+        # shape can put them under OVER (r07 fuzz finding).
+        return _Scalar(f"coalesce({self._reduce('sum').sql}, 0)")
 
     def min(self, *a, **k):
         # empty filtered subset: SQL NULL where pandas gives NaN — the one
         # (documented) divergence; coalescing to NaN would break strings
-        return self._leaf(F.min(self._agg_arg(self._num())))
+        return self._reduce("min")
 
     def max(self, *a, **k):
-        return self._leaf(F.max(self._agg_arg(self._num())))
+        return self._reduce("max")
 
-    def _nan_empty(self, leaf: "_Scalar") -> "_Scalar":
+    def _nan_empty(self, fn: str) -> "_Scalar":
         # pandas: mean/std/var/median over an empty subset is NaN, not
         # NULL; wrap the reference (see sum) so the leaf stays window-able
+        leaf = self._reduce(fn)
         if self.cond is not None:
-            return _Scalar(F.coalesce(leaf.col, F.lit(float("nan"))))
+            return _Scalar(f"coalesce({leaf.sql}, {_sql_lit(math.nan)})")
         return leaf
 
     def mean(self, *a, **k):
-        return self._nan_empty(self._leaf(F.avg(self._agg_arg(self._num()))))
+        return self._nan_empty("avg")
 
     def count(self, *a, **k):
-        return self._leaf(F.count(self._agg_arg(self.col)))
+        return self._leaf(f"count({self._agg_arg(self.sql)})")
 
     def nunique(self, *a, **k):
-        return self._leaf(F.count_distinct(self._agg_arg(self.col)))
+        return self._leaf(f"count(DISTINCT {self._agg_arg(self.sql)})")
 
     def std(self, ddof: int = 1):
         if ddof not in (0, 1):
             raise TraceError("std(ddof) must be 0 or 1")
-        fn = F.stddev_samp if ddof == 1 else F.stddev_pop
-        return self._nan_empty(self._leaf(fn(self._agg_arg(self._num()))))
+        return self._nan_empty("stddev_samp" if ddof == 1 else "stddev_pop")
 
     def var(self, ddof: int = 1):
         if ddof not in (0, 1):
             raise TraceError("var(ddof) must be 0 or 1")
-        fn = F.var_samp if ddof == 1 else F.var_pop
-        return self._nan_empty(self._leaf(fn(self._agg_arg(self._num()))))
+        return self._nan_empty("var_samp" if ddof == 1 else "var_pop")
 
     def median(self):
-        return self._nan_empty(self._leaf(F.median(self._agg_arg(self._num()))))
+        return self._nan_empty("median")
 
     # ordered (running) transforms — per-row outputs over the declared
     # presort, compiled to ordered window functions over the partition keys.
     # These make the window-shaped output compile (dict-of-arrays results):
     # running totals, lag/lead deltas — one exchange, no Python.
-    def _ordered_window(self, op: str):
-        from pyspark.sql import Window
-
+    def _ordered_window(self, op: str) -> str:
         f = self.frame
         if f is None:
             raise TraceError(f"{op} on an unbound expression is not traceable")
@@ -681,34 +695,30 @@ class _Vec(_Base):
                 f"{op} without a declared presort is input-order-dependent — "
                 "not traceable"
             )
-        order = []
-        for name, asc in f.presort:
-            c = F.col(f.safe(name))
-            order.append(c.asc() if asc else c.desc())
-        return Window.partitionBy(
-            *[_nan_safe_group(F.col(f.safe(k)), f.dtype(k)) for k in f.keys]
-        ).orderBy(*order)
-
-    def _running(self, op: str, agg) -> "_Vec":
-        from pyspark.sql import Window
-
-        w = self._ordered_window(op).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
+        order = ", ".join(
+            f"{_qid(f.safe(name))} {'ASC' if asc else 'DESC'}" for name, asc in f.presort
         )
+        return f"{_partition_by(f, f.keys)} ORDER BY {order}"
+
+    def _running(self, op: str, agg: str) -> "_Vec":
+        w = self._ordered_window(op)
         # pandas cum* skips NaN inside the accumulation but emits NaN AT
         # the NaN position; SQL running aggregates would emit the running
         # value there — mask it back to NULL for parity
-        run = F.when(self.col.isNotNull(), agg(self._num()).over(w))
-        return _Vec(run, frame=self.frame)
+        return _Vec(
+            f"CASE WHEN ({self.sql} IS NOT NULL) THEN {agg}({self._num()}) OVER "
+            f"({w} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) END",
+            frame=self.frame,
+        )
 
     def cumsum(self):
-        return self._running("cumsum", F.sum)
+        return self._running("cumsum", "sum")
 
     def cummax(self):
-        return self._running("cummax", F.max)
+        return self._running("cummax", "max")
 
     def cummin(self):
-        return self._running("cummin", F.min)
+        return self._running("cummin", "min")
 
     def shift(self, periods: int = 1, fill_value: Any = None):
         """pandas Series.shift over the declared presort → lag/lead window.
@@ -722,15 +732,17 @@ class _Vec(_Base):
         if not isinstance(periods, int) or isinstance(periods, bool):
             raise TraceError("shift(periods) must be a constant int")
         w = self._ordered_window("shift")
-        c = F.lag(self.col, periods).over(w)
+        c = f"lag({self.sql}, {periods}) OVER ({w})"
         if fill_value is not None:
             if not isinstance(fill_value, (int, float, bool, str)):
                 raise TraceError("shift fill_value must be a constant")
             # boundary detector: lag of a constant is NULL exactly at the
             # shifted-in positions (works for negative periods/lead too) —
             # fill only there, never on lagged data NULLs
-            at_boundary = F.lag(F.lit(1), periods).over(w).isNull()
-            c = F.when(at_boundary, F.lit(fill_value)).otherwise(c)
+            c = (
+                f"CASE WHEN (lag(1, {periods}) OVER ({w}) IS NULL) "
+                f"THEN {_sql_lit(fill_value)} ELSE {c} END"
+            )
         return _Vec(c, frame=self.frame)
 
     def diff(self, periods: int = 1):
@@ -744,7 +756,7 @@ class _Vec(_Base):
             raise TraceError("first-row access on a derived expression is not traceable")
         if self.name is not None and self.name in f.keys:
             # group key: constant within the group (filtered or not)
-            return _KeyRef(self.col, frame=f, name=self.name)
+            return _KeyRef(self.sql, frame=f, name=self.name)
         if self.cond is not None:
             raise TraceError(
                 "first-row access on a filtered frame is not traceable — "
@@ -764,24 +776,17 @@ class _Vec(_Base):
         for name, asc in f.presort:
             if name not in f._fields:
                 raise TraceError(f"presort column {name!r} not on this zip side")
-            kcol = F.col(f.safe(name))
-            flip = (asc and use_max) or (not asc and not use_max)
-            if flip:
-                dt = f.dtype(name)
-                if not isinstance(dt, T.NumericType):
+            kcol = _qid(f.safe(name))
+            if asc == use_max:
+                if not isinstance(f.dtype(name), T.NumericType):
                     raise TraceError(
                         f"mixed-direction presort on non-numeric column {name!r} "
                         "cannot compile to min_by/max_by"
                     )
-                kcol = -kcol
+                kcol = f"(- {kcol})"
             orderings.append(kcol)
-        order = F.struct(*orderings) if len(orderings) > 1 else orderings[0]
-        agg = F.max_by(self.col, order) if use_max else F.min_by(self.col, order)
-        return self._leaf(agg)
-
-
-def _cond_str(c: "Column | None") -> "str | None":
-    return None if c is None else str(c)
+        order = f"struct({', '.join(orderings)})" if len(orderings) > 1 else orderings[0]
+        return self._leaf(f"{'max_by' if use_max else 'min_by'}({self.sql}, {order})")
 
 
 class _StrOps:
@@ -803,38 +808,42 @@ class _StrOps:
             raise TraceError(".str pattern must be a constant string")
         return pat
 
+    def _fn(self, fn: str, *args: str, boolean: bool = False) -> _Vec:
+        sql = f"{fn}({', '.join((self.vec.sql,) + args)})"
+        return self.vec._make_bool(sql) if boolean else self.vec._make(sql)
+
     def contains(self, pat, case: bool = True, regex: bool = True, na: Any = None):
         if na is not None:
             raise TraceError(".str.contains(na=...) is not traceable")
         pat = self._req_const(pat)
-        col = self.vec.col
         if regex:
             # case-insensitivity via flags, not pattern lowercasing (which
             # corrupts escape classes: \S -> \s, [A-Z] -> [a-z]). The
             # compiled pattern runs ONLY under Java regex, so (?iu) is safe
             # — (?i) alone is ASCII-only in Java while Python re folds
             # Unicode by default; (?u) adds UNICODE_CASE to match
-            c = col.rlike(("(?iu)" + pat) if not case else pat)
-        else:
-            if not case:
-                col, pat = F.lower(col), pat.lower()
-            c = col.contains(pat)
-        return self.vec._make_bool(c)
+            pat = pat if case else "(?iu)" + pat
+            return self.vec._make_bool(f"({self.vec.sql} RLIKE {_sql_lit(pat)})")
+        if case:
+            return self._fn("contains", _sql_lit(pat), boolean=True)
+        return self.vec._make_bool(
+            f"contains(lower({self.vec.sql}), {_sql_lit(pat.lower())})"
+        )
 
     def startswith(self, pat):
-        return self.vec._make_bool(self.vec.col.startswith(self._req_const(pat)))
+        return self._fn("startswith", _sql_lit(self._req_const(pat)), boolean=True)
 
     def endswith(self, pat):
-        return self.vec._make_bool(self.vec.col.endswith(self._req_const(pat)))
+        return self._fn("endswith", _sql_lit(self._req_const(pat)), boolean=True)
 
     def len(self):
-        return self.vec._make(F.length(self.vec.col))
+        return self._fn("length")
 
     def lower(self):
-        return self.vec._make(F.lower(self.vec.col))
+        return self._fn("lower")
 
     def upper(self):
-        return self.vec._make(F.upper(self.vec.col))
+        return self._fn("upper")
 
     # Python str.strip()'s whitespace set (str.isspace): Java \s is ASCII-
     # only, so the class spells out the Unicode members Python also strips
@@ -845,26 +854,22 @@ class _StrOps:
     def strip(self):
         # pandas .str.strip() strips ALL whitespace — tabs, newlines, AND
         # Unicode spaces (NBSP, thin space, …) — not just ASCII spaces as
-        # F.trim would, nor only Java's ASCII \s
+        # trim() would, nor only Java's ASCII \s
         ws = self._STRIP_WS
-        return self.vec._make(
-            F.regexp_replace(self.vec.col, f"^{ws}+|{ws}+$", "")
-        )
+        return self._fn("regexp_replace", _sql_lit(f"^{ws}+|{ws}+$"), "''")
 
     def replace(self, pat, repl, regex: bool = False):
         # default regex=False matches pandas >= 2.0 (.str.replace is literal
         # unless regex=True is passed explicitly)
         pat, repl = self._req_const(pat), self._req_const(repl)
-        if regex:
-            return self.vec._make(F.regexp_replace(self.vec.col, pat, repl))
-        import re as _re
+        if not regex:
+            import re as _re
 
-        # literal mode: escape regex metachars in the pattern AND the
-        # replacement-string metachars (backslash, $ group refs) in repl
-        lit_repl = repl.replace("\\", "\\\\").replace("$", "\\$")
-        return self.vec._make(
-            F.regexp_replace(self.vec.col, _re.escape(pat), lit_repl)
-        )
+            # literal mode: escape regex metachars in the pattern AND the
+            # replacement-string metachars (backslash, $ group refs) in repl
+            pat = _re.escape(pat)
+            repl = repl.replace("\\", "\\\\").replace("$", "\\$")
+        return self._fn("regexp_replace", _sql_lit(pat), _sql_lit(repl))
 
 
 class _KeyRef(_Vec):
@@ -905,7 +910,7 @@ class _TraceFrame:
     def _col(self, name: str) -> _Vec:
         if name not in self._fields:
             raise TraceError(f"column {name!r} not in input schema")
-        return _Vec(F.col(self.safe(name)), frame=self, name=name)
+        return _Vec(_qid(self.safe(name)), frame=self, name=name)
 
     def __getitem__(self, name):
         if isinstance(name, str):
@@ -942,7 +947,7 @@ class _TraceFrame:
 
     def _rows(self) -> _Scalar:
         """The group's row count: a count(*) leaf on this side."""
-        return self.ctx.leaf(self.side, F.count(F.lit(1)))
+        return self.ctx.leaf(self.side, "count(1)")
 
     @property
     def shape(self):
@@ -981,7 +986,7 @@ class _DerivedFrame:
     def __init__(
         self,
         base: _TraceFrame,
-        cond: "Column | None" = None,
+        cond: "str | None" = None,
         assigned: "dict[str, Any] | None" = None,
         proj: "list[str] | None" = None,
         sort: "list | None" = None,
@@ -1022,17 +1027,17 @@ class _DerivedFrame:
             if isinstance(v, _Vec):
                 # re-bind under THIS frame's filter (reads through pdf[mask]
                 # reduce conditionally)
-                return _Vec(v.col, frame=v.frame, boolish=v.boolish, cond=self._cond)
+                return _Vec(v.sql, frame=v.frame, boolish=v.boolish, cond=self._cond)
             if isinstance(v, _Scalar):
                 # an assigned reduction read back as a (constant-per-group)
                 # vector — the __aggN__ reference resolves to the in-plan
                 # window column
-                return _Vec(v.col, frame=self._base, cond=self._cond)
-            return _Vec(F.lit(v), frame=self._base, cond=self._cond)
+                return _Vec(v.sql, frame=self._base, cond=self._cond)
+            return _Vec(_sql_lit(v), frame=self._base, cond=self._cond)
         base = self._base._col(name)
         if self._cond is None:
             return base
-        return _Vec(base.col, frame=base.frame, name=base.name, cond=self._cond)
+        return _Vec(base.sql, frame=base.frame, name=base.name, cond=self._cond)
 
     def __getitem__(self, key):
         if isinstance(key, str):
@@ -1058,12 +1063,12 @@ class _DerivedFrame:
                 raise TraceError("pdf[...] mask must be a boolean expression")
             if key.frame is not self._base:
                 raise TraceError("mask must be built from this frame's columns")
-            if key.cond is not None and _cond_str(key.cond) != _cond_str(self._cond):
+            if key.cond is not None and key.cond != self._cond:
                 raise TraceError(
                     "mask was built through a different row filter — "
                     "pandas would align it by index"
                 )
-            cond = key.col if self._cond is None else (self._cond & key.col)
+            cond = key.sql if self._cond is None else f"({self._cond} AND {key.sql})"
             return _DerivedFrame(
                 self._base, cond, self._assigned, self._proj, sort=self._sort
             )
@@ -1165,7 +1170,7 @@ class _DerivedFrame:
             elif isinstance(v, _Vec):
                 if v.frame is not self._base:
                     raise TraceError("assigned expression from a different frame")
-                if v.cond is not None and _cond_str(v.cond) != _cond_str(self._cond):
+                if v.cond is not None and v.cond != self._cond:
                     raise TraceError(
                         "assigned expression read through a different row "
                         "filter — pandas would align it by index"
@@ -1237,7 +1242,7 @@ def _trace_int(x: Any):
         raise TraceError("int() on a non-integer group key is not traceable")
     if isinstance(x, _Scalar):
         # Python int() truncates toward zero; so does Spark's cast to long
-        return _Scalar(x.col.cast("long"))
+        return _Scalar(_cast(x.sql, "bigint"))
     if isinstance(x, _Base):
         raise TraceError("int() on a per-row expression is ambiguous — reduce first")
     if isinstance(x, (_TraceFrame, _DerivedFrame)):
@@ -1255,7 +1260,7 @@ def _trace_float(x: Any):
             return x
         raise TraceError("float() on a non-numeric group key is not traceable")
     if isinstance(x, _Scalar):
-        return _Scalar(x.col.cast("double"))
+        return _Scalar(_cast(x.sql, "double"))
     if isinstance(x, _Base):
         raise TraceError("float() on a per-row expression is ambiguous — reduce first")
     if isinstance(x, (_TraceFrame, _DerivedFrame)):
@@ -1374,145 +1379,138 @@ def _require_dict(res: Any, out_schema: T.StructType) -> dict:
     return res
 
 
-def _literal_out(name: str, v: Any, dt: T.DataType) -> Column:
-    """A constant output (no traced value reached it)."""
-    if v is None or isinstance(v, (int, float, str)):
-        return F.lit(v).cast(dt).alias(name)
-    raise TraceError(f"output {name!r} has untraceable type {type(v).__name__}")
+def _out(sql: str, dt: T.DataType, name: str) -> str:
+    """An output field: ``sql`` cast to its schema type, under its name."""
+    return f"{_cast(sql, dt.simpleString())} AS {_qid(name)}"
 
 
-def _assemble_outputs(res, out_schema, key_resolver):
-    """→ list of per-field output Columns (over ``__aggN__`` refs and
-    resolved key columns)."""
-    outs: list[Column] = []
+def _assemble_outputs(res, out_schema, key_resolver, per_row: bool = False) -> "list[str]":
+    """→ the output fields' SQL (over ``__aggN__`` refs and resolved key
+    columns). ``per_row`` admits per-row vectors (the window shape)."""
+    outs: list[str] = []
     for f in out_schema.fields:
         v = res[f.name]
         if isinstance(v, _KeyRef):
-            outs.append(key_resolver(v.name).cast(f.dataType).alias(f.name))
-        elif isinstance(v, _Scalar):
-            outs.append(v.col.cast(f.dataType).alias(f.name))
-        elif isinstance(v, _Vec):
+            outs.append(_out(key_resolver(v.name), f.dataType, f.name))
+        elif isinstance(v, _Vec) and not per_row:
             raise TraceError(
                 f"output {f.name!r} is a per-row expression — reduce it "
                 "(sum/min/max/mean/first) before returning"
             )
+        elif isinstance(v, _Vec) and v.cond is not None:
+            raise TraceError(
+                f"output {f.name!r} was read through a row filter — its "
+                "length differs from the group's (return the filtered "
+                "frame itself instead)"
+            )
+        elif isinstance(v, _Base):
+            outs.append(_out(v.sql, f.dataType, f.name))
+        elif v is None or isinstance(v, (int, float, str)):
+            # a constant output (no traced value reached it)
+            outs.append(_out(_sql_lit(v), f.dataType, f.name))
         else:
-            outs.append(_literal_out(f.name, v, f.dataType))
+            raise TraceError(f"output {f.name!r} has untraceable type {type(v).__name__}")
     return outs
 
 
-def _nan_safe_group(col: Column, dt: T.DataType) -> Column:
+def _nan_safe_group(sql: str, dt: T.DataType) -> str:
     """Grouping/partitioning expression that merges float NaN and NULL into
     ONE key — the pandas path cannot distinguish them (both are NaN in a
     float64 column), so compiled grouping must not split them (the map
     engine applies the same normalization in its exchange — see
     fugue_spark/partition.py:_nan_safe_key_exprs)."""
     if isinstance(dt, (T.FloatType, T.DoubleType)):
-        return F.nanvl(col, F.lit(None).cast(dt))
-    return col
+        return f"nanvl({sql}, {_cast('NULL', dt.simpleString())})"
+    return sql
 
 
-def _null_free_default(dt: T.DataType) -> "Column | None":
+def _partition_by(frame: "_TraceFrame", keys, *extra: str) -> str:
+    """``PARTITION BY`` the NaN-safe group keys (then ``extra``)."""
+    parts = [_nan_safe_group(_qid(frame.safe(k)), frame.dtype(k)) for k in keys]
+    return "PARTITION BY " + ", ".join(parts + list(extra))
+
+
+def _null_free_default(dt: T.DataType) -> "str | None":
     """A type-default literal used to normalize a nullable group key into a
     non-nullable ``(coalesce(key, default), isnull(key))`` pair — the same
     rewrite Spark applies internally to null-safe equality. Collisions with
     real values are harmless (the isnull flag disambiguates); returns None
     for types without an obvious default (caller falls back to an
     eqNullSafe join)."""
-    import datetime
-
-    if isinstance(
-        dt,
-        (
-            T.ByteType,
-            T.ShortType,
-            T.IntegerType,
-            T.LongType,
-            T.FloatType,
-            T.DoubleType,
-            T.DecimalType,
-        ),
-    ):
-        return F.lit(0).cast(dt)
+    if isinstance(dt, T.NumericType):
+        return _cast("0", dt.simpleString())
     if isinstance(dt, T.StringType):
-        return F.lit("")
+        return "''"
     if isinstance(dt, T.BooleanType):
-        return F.lit(False)
+        return "false"
     if isinstance(dt, T.DateType):
-        return F.lit(datetime.date(1970, 1, 1))
+        return "DATE '1970-01-01'"
     if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        return F.lit(datetime.datetime(1970, 1, 1)).cast(dt)
+        return f"{dt.simpleString().upper()} '1970-01-01 00:00:00'"
     if isinstance(dt, T.BinaryType):
-        return F.lit(b"")
+        return "X''"
     return None
 
 
-def _key_value_out(col: Column, dt: T.DataType) -> Column:
+def _key_value_out(sql: str, dt: T.DataType) -> str:
     """Emitted value for a returned group key: on the pandas path a float64
     key column renders every NULL as NaN (Arrow→pandas conversion), so the
     compiled plan emits NaN for the merged NULL/NaN group too (measured
     parity, not convention)."""
     if isinstance(dt, (T.FloatType, T.DoubleType)):
-        return F.coalesce(col, F.lit(float("nan")).cast(dt))
-    return col
+        return f"coalesce({sql}, {_cast(_sql_lit(math.nan), dt.simpleString())})"
+    return sql
 
 
-def _widen_nullable(out: DataFrame) -> DataFrame:
-    """Widen non-nullable agg outputs (count(*)) to the engine's
-    all-nullable schema contract: when(isNotNull, x) resets the nullability
-    flag at analysis time (when(lit(True), x) is constant-folded and does
-    not)."""
-    if any(not f.nullable for f in out.schema.fields):
-        out = out.select(
-            *[
-                F.when(F.col(f.name).isNotNull(), F.col(f.name)).alias(f.name)
-                if not f.nullable
-                else F.col(f.name)
-                for f in out.schema.fields
-            ]
-        )
-    return out
+def _lowered(build: "Callable[[], DataFrame]") -> DataFrame:
+    """The one lowering step of a compiled plan: ``build`` turns the traced
+    SQL text into Columns and DataFrame operations (``F.expr`` /
+    ``selectExpr``). Analysis runs here, so unsupported constructs (e.g.
+    count_distinct as a window function) surface as TraceError — the
+    fallback trigger — instead of escaping at action time; a parse error
+    is a rendering defect and propagates as is.
+
+    Non-nullable outputs (count(*)) are then widened to the engine's
+    all-nullable schema contract: ``CASE WHEN x IS NOT NULL THEN x END``
+    resets the nullability flag at analysis time (a constant-true
+    condition would be folded away)."""
+    from pyspark.errors import AnalysisException, ParseException
+
+    try:
+        out = build()
+        fields = out.schema.fields
+    except ParseException:
+        raise
+    except AnalysisException as ex:
+        raise TraceError(f"compiled plan failed analysis: {ex}") from ex
+    if all(f.nullable for f in fields):
+        return out
+    return out.selectExpr(
+        *[
+            q if f.nullable else f"CASE WHEN ({q} IS NOT NULL) THEN {q} END AS {q}"
+            for f in fields
+            for q in [_qid(f.name)]
+        ]
+    )
 
 
-def _with_window_leaves(df: DataFrame, ctx: _TraceCtx, keys, frame) -> DataFrame:
-    """Materialize each aggregation leaf as ``__aggN__`` window columns
-    (agg OVER (PARTITION BY keys)) so per-row outputs can reference
-    reductions. One exchange on the keys; map-side nothing — Spark's
-    window exec sorts within partitions, which at 100 TB is the standard
-    'attach group aggregate to every row' plan."""
+def _window_leaves(ctx: _TraceCtx, keys, frame: "_TraceFrame") -> "list[str]":
+    """Each aggregation leaf as an ``__aggN__`` window column (agg OVER
+    (PARTITION BY keys)) so per-row outputs can reference reductions. One
+    exchange on the keys; map-side nothing — Spark's window exec sorts
+    within partitions, which at 100 TB is the standard 'attach group
+    aggregate to every row' plan."""
     if not ctx.leaves:
-        return df
+        return []
     if not keys:
         raise TraceError(
             "per-row outputs mixing reductions compile only with partition "
             "keys (a keyless window is a single-partition bottleneck)"
         )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(
-        *[_nan_safe_group(F.col(frame.safe(k)), frame.dtype(k)) for k in keys]
-    )
-    try:
-        for i, (_, col) in enumerate(ctx.leaves):
-            df = df.withColumn(f"__agg{i}__", col.over(w))
-    except TraceError:
-        raise
-    except Exception as ex:  # e.g. count_distinct is not a window function
-        raise TraceError(f"reduction cannot run as a window function: {ex}") from ex
-    return df
-
-
-def _analyzed(out: DataFrame) -> DataFrame:
-    """Force plan analysis so unsupported constructs (e.g. count_distinct
-    as a window function) surface as TraceError — the fallback trigger —
-    instead of escaping as AnalysisException at action time."""
-    try:
-        out.schema
-    except TraceError:
-        raise
-    except Exception as ex:  # AnalysisException and friends
-        raise TraceError(f"compiled plan failed analysis: {ex}") from ex
-    return out
+    w = _partition_by(frame, keys)
+    return [
+        f"{sql} OVER ({w}) AS {_qid(f'__agg{i}__')}" for i, (_, sql) in enumerate(ctx.leaves)
+    ]
 
 
 def _compile_window_shape(
@@ -1535,29 +1533,16 @@ def _compile_window_shape(
         raise TraceError(
             "per-row dict outputs compile only with partition keys"
         )
-    plan = _with_window_leaves(df, ctx, keys, frame)
-    outs: list[Column] = []
-    for f in out_schema.fields:
-        v = res[f.name]
-        if isinstance(v, _KeyRef):
-            outs.append(
-                _key_value_out(F.col(frame.safe(v.name)), frame.dtype(v.name))
-                .cast(f.dataType)
-                .alias(f.name)
-            )
-        elif isinstance(v, _Vec):
-            if v.cond is not None:
-                raise TraceError(
-                    f"output {f.name!r} was read through a row filter — its "
-                    "length differs from the group's (return the filtered "
-                    "frame itself instead)"
-                )
-            outs.append(v.col.cast(f.dataType).alias(f.name))
-        elif isinstance(v, _Scalar):
-            outs.append(v.col.cast(f.dataType).alias(f.name))
-        else:
-            outs.append(_literal_out(f.name, v, f.dataType))
-    return _widen_nullable(_analyzed(plan.select(*outs)))
+    leaves = _window_leaves(ctx, keys, frame)
+    outs = _assemble_outputs(
+        res,
+        out_schema,
+        key_resolver=lambda k: _key_value_out(_qid(frame.safe(k)), frame.dtype(k)),
+        per_row=True,
+    )
+    return _lowered(
+        lambda: (df.selectExpr("*", *leaves) if leaves else df).selectExpr(*outs)
+    )
 
 
 def _compile_map_shape(
@@ -1585,55 +1570,50 @@ def _compile_map_shape(
             f"(has {a.columns})"
         )
 
-    def resolve(name: str) -> Column:
+    def resolve(name: str) -> str:
         v = a._assigned.get(name)
         if isinstance(v, (_Vec, _Scalar)):
-            return v.col
+            return v.sql
         if v is not None:
-            return F.lit(v)
-        return a._base._col(name).col
+            return _sql_lit(v)
+        return a._base._col(name).sql
 
-    outs = [resolve(f.name).cast(f.dataType).alias(f.name) for f in out_schema.fields]
+    outs = [_out(resolve(f.name), f.dataType, f.name) for f in out_schema.fields]
     # reductions embedded in the derivation (assigned _Scalars) become
     # window aggregates over the partition keys, computed over the WHOLE
     # group (the leaf's CASE WHEN carries any read-time filter) BEFORE the
     # frame's row filter applies — exactly the pandas-path order
-    plan = _with_window_leaves(df, ctx, keys, a._base)
-    plan = plan if a._cond is None else plan.filter(a._cond)
+    leaves = _window_leaves(ctx, keys, a._base)
+    top_k = None
     if a._limit is not None:
         # per-group top-k: sort_values(...).head(k) → row_number window.
-        # Only with partition keys — a head over a PHYSICAL partition on
-        # the pandas path is input-order-dependent, so no keys = no compile.
+        # Only with partition keys — a head()/drop_duplicates() over a
+        # PHYSICAL partition on the pandas path is partitioning-dependent,
+        # so no keys = no compile.
         if not keys:
-            # a head()/drop_duplicates() over a PHYSICAL partition on the
-            # pandas path is partitioning-dependent — no keys, no compile
             raise TraceError(
                 "head()/drop_duplicates() compile only with partition keys "
                 "(the ungrouped pandas result is physical-partition-dependent)"
             )
-        from pyspark.sql import Window
-
-        order = []
-        for name, asc, nulls_last in a._sort:
-            c = resolve(name)
-            # nulls_last=True = pandas sort_values(na_position='last');
-            # False = the exact reversal produced by drop_duplicates(keep='last')
-            if asc:
-                order.append(c.asc_nulls_last() if nulls_last else c.asc_nulls_first())
-            else:
-                order.append(c.desc_nulls_last() if nulls_last else c.desc_nulls_first())
-        part_cols = [
-            _nan_safe_group(a._base._col(k).col, a._base.dtype(k)) for k in (keys or [])
-        ]
-        if a._dedup_subset is not None:
-            # drop_duplicates: one row per (keys + subset) combination
-            part_cols += [resolve(c) for c in a._dedup_subset]
-        w = Window.partitionBy(*part_cols).orderBy(*order)
-        plan = (
-            plan.withColumn("__rn__", F.row_number().over(w))
-            .filter(F.col("__rn__") <= a._limit)
+        # nulls_last=True = pandas sort_values(na_position='last');
+        # False = the exact reversal produced by drop_duplicates(keep='last')
+        order = ", ".join(
+            f"{resolve(name)} {'ASC' if asc else 'DESC'} NULLS {'LAST' if nl else 'FIRST'}"
+            for name, asc, nl in a._sort
         )
-    return _widen_nullable(_analyzed(plan.select(*outs)))
+        # drop_duplicates: one row per (keys + subset) combination
+        subset = [resolve(c) for c in a._dedup_subset or []]
+        w = f"{_partition_by(a._base, keys, *subset)} ORDER BY {order}"
+        top_k = f"row_number() OVER ({w}) AS __rn__"
+
+    def build() -> DataFrame:
+        plan = df.selectExpr("*", *leaves) if leaves else df
+        plan = plan if a._cond is None else plan.filter(a._cond)
+        if top_k is not None:
+            plan = plan.selectExpr("*", top_k).filter(f"__rn__ <= {a._limit}")
+        return plan.selectExpr(*outs)
+
+    return _lowered(build)
 
 
 # modules whose attributes are safe to touch at trace time: their functions
@@ -1821,30 +1801,30 @@ def try_compile_aggregation(
         # reductions) → window plan, one output row per group row
         return _compile_window_shape(df, res, ctx, out_schema, keys, frame)
 
-    safe = frame.safe
     gk = {k: f"__gk_{i}__" for i, k in enumerate(keys)}
     outs = _assemble_outputs(
         res,
         out_schema,
-        key_resolver=lambda k: _key_value_out(F.col(gk[k]), frame.dtype(k)),
+        key_resolver=lambda k: _key_value_out(_qid(gk[k]), frame.dtype(k)),
     )
-    aggs = [col.alias(f"__agg{i}__") for i, (_, col) in enumerate(ctx.leaves)]
-    if keys:
-        # alias grouping columns to internal names so output aliases that
-        # reuse a key's name (the common case) never become ambiguous;
-        # float keys group NaN and NULL together (pandas-path parity)
-        grouped = df.groupBy(
-            *[
-                _nan_safe_group(F.col(safe(k)), frame.dtype(k)).alias(gk[k])
-                for k in keys
-            ]
-        )
-        out = grouped.agg(*aggs) if aggs else grouped.agg(
-            F.count(F.lit(1)).alias("__dummy__")
-        )
-    else:
-        out = df.agg(*aggs) if aggs else df.agg(F.count(F.lit(1)).alias("__dummy__"))
-    return _widen_nullable(_analyzed(out.select(*outs)))
+    aggs = [
+        f"{sql} AS {_qid(f'__agg{i}__')}" for i, (_, sql) in enumerate(ctx.leaves)
+    ] or ["count(1) AS __dummy__"]
+    # alias grouping columns to internal names so output aliases that
+    # reuse a key's name (the common case) never become ambiguous; float
+    # keys group NaN and NULL together (pandas-path parity)
+    gcols = [
+        f"{_nan_safe_group(_qid(frame.safe(k)), frame.dtype(k))} AS {_qid(gk[k])}"
+        for k in keys
+    ]
+
+    def build() -> DataFrame:
+        if not keys:
+            return df.selectExpr(*aggs).selectExpr(*outs)
+        grouped = df.groupBy(*map(F.expr, gcols))
+        return grouped.agg(*map(F.expr, aggs)).selectExpr(*outs)
+
+    return _lowered(build)
 
 
 def try_compile_cotransform(
@@ -1904,43 +1884,48 @@ def try_compile_cotransform(
     kn = {k: f"__zkn{ki}__" for ki, k in enumerate(keys)}
     if use_norm:
         key_resolver = lambda k: _key_value_out(  # noqa: E731
-            F.when(~F.col(kn[k]), F.col(kv[k])), key_dt[k]
+            f"CASE WHEN (NOT {_qid(kn[k])}) THEN {_qid(kv[k])} END", key_dt[k]
         )
     else:
-        key_resolver = lambda k: _key_value_out(F.col(k), key_dt[k])  # noqa: E731
+        key_resolver = lambda k: _key_value_out(_qid(k), key_dt[k])  # noqa: E731
     outs = _assemble_outputs(res, out_schema, key_resolver=key_resolver)
-    sides: list[DataFrame] = []
-    for i, df in enumerate(dfs):
+    sides_sql = []  # per side: (grouping columns, aggregation leaves)
+    for i, d in enumerate(dfs):
+        gcols = []
+        for k in keys:
+            nk = _nan_safe_group(_qid(k), d.schema[k].dataType)
+            if use_norm:
+                gcols += [
+                    f"coalesce({nk}, {defaults[k]}) AS {_qid(kv[k])}",
+                    f"({nk} IS NULL) AS {_qid(kn[k])}",
+                ]
+            else:
+                gcols.append(f"{nk} AS {_qid(k)}")
         aggs = [
-            col.alias(f"__agg{j}__")
-            for j, (s, col) in enumerate(ctx.leaves)
-            if s == i
+            f"{sql} AS {_qid(f'__agg{j}__')}"
+            for j, (side, sql) in enumerate(ctx.leaves)
+            if side == i
+        ] or [f"count(1) AS __present_{i}__"]
+        sides_sql.append((gcols, aggs))
+
+    def build() -> DataFrame:
+        sides = [
+            df.groupBy(*map(F.expr, gcols)).agg(*map(F.expr, aggs))
+            for df, (gcols, aggs) in zip(dfs, sides_sql)
         ]
-        if not aggs:
-            aggs = [F.count(F.lit(1)).alias(f"__present_{i}__")]
-        if use_norm:
-            gcols = []
-            for k in keys:
-                nk = _nan_safe_group(F.col(k), df.schema[k].dataType)
-                gcols.append(F.coalesce(nk, defaults[k]).alias(kv[k]))
-                gcols.append(nk.isNull().alias(kn[k]))
-        else:
-            gcols = [
-                _nan_safe_group(F.col(k), df.schema[k].dataType).alias(k)
-                for k in keys
-            ]
-        sides.append(df.groupBy(*gcols).agg(*aggs))
-    joined = sides[0]
-    for g in sides[1:]:
-        if use_norm:
-            jnames = [c for k in keys for c in (kv[k], kn[k])]
-            joined = joined.join(g, on=jnames, how="inner")
-        else:
-            cond = None
-            for k in keys:
-                c = joined[k].eqNullSafe(g[k])
-                cond = c if cond is None else cond & c
-            joined = joined.join(g, on=cond, how="inner").drop(
-                *[g[k] for k in keys]
-            )
-    return _widen_nullable(_analyzed(joined.select(*outs)))
+        joined = sides[0]
+        for g in sides[1:]:
+            if use_norm:
+                jnames = [c for k in keys for c in (kv[k], kn[k])]
+                joined = joined.join(g, on=jnames, how="inner")
+            else:
+                cond = None
+                for k in keys:
+                    c = joined[k].eqNullSafe(g[k])
+                    cond = c if cond is None else cond & c
+                joined = joined.join(g, on=cond, how="inner").drop(
+                    *[g[k] for k in keys]
+                )
+        return joined.selectExpr(*outs)
+
+    return _lowered(build)

@@ -26,6 +26,8 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 
+from fugue_spark.extensions import DataFrames
+
 __all__ = ["FugueWorkflow", "WorkflowDataFrame", "FugueWorkflowError"]
 
 
@@ -445,32 +447,10 @@ class FugueWorkflow:
         return dict(self._yields)
 
 
-class WorkflowDataFrames(dict):
+class WorkflowDataFrames(DataFrames):
     """Named collection of deferred frames (reference fugue/workflow/
     workflow.py ``WorkflowDataFrames``): dict or positional init,
     ``[i]`` by index or name."""
-
-    def __init__(self, *args: Any, **kwargs: Any):
-        super().__init__()
-        serial = 0
-        for a in args:
-            if isinstance(a, dict):
-                for k, v in a.items():
-                    self[k] = v
-            elif isinstance(a, (list, tuple)):
-                for v in a:
-                    self[f"_{serial}"] = v
-                    serial += 1
-            else:
-                self[f"_{serial}"] = a
-                serial += 1
-        for k, v in kwargs.items():
-            self[k] = v
-
-    def __getitem__(self, key: Any):  # type: ignore[override]
-        if isinstance(key, int):
-            return list(self.values())[key]
-        return super().__getitem__(key)
 
 
 class FugueSQLWorkflow(FugueWorkflow):

@@ -53,7 +53,7 @@ class DataFrames(dict):
         super().__init__()
         serial = 0
         for a in args:
-            if isinstance(a, DataFrames) or isinstance(a, dict):
+            if isinstance(a, dict):
                 for k, v in a.items():
                     self[k] = v
             elif isinstance(a, (list, tuple)):

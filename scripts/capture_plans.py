@@ -33,10 +33,7 @@ def main() -> None:
     from fugue_spark.benchmarks import QUERIES
     from fugue_spark.session import get_spark, tune_for_input
 
-    spark = get_spark(
-        app_name="capture_plans", master="local[8]", shuffle_partitions=8,
-        spark__ui__enabled="false",
-    )
+    spark = get_spark(app_name="capture_plans", spark__ui__enabled="false")
     tune_for_input(spark, sf_dir)
     if names is None:
         names = [n for n, s in QUERIES.items() if s.bench]

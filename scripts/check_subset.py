@@ -25,10 +25,15 @@ def main() -> None:
     from fugue_spark.session import get_spark, tune_for_input
     from fugue_spark.testing import normalize, run_oracle
 
+    # master and shuffle partitions follow get_spark's defaults
+    # (SPARK_GRAFT_CPUS, else the cores this process may use); the heap
+    # defaults to a quarter of physical memory
+    ram_gb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 30
     spark = get_spark(
-        app_name="check_subset", master="local[8]", shuffle_partitions=8,
-        spark__ui__enabled="false",
-        spark__driver__memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+        app_name="check_subset", spark__ui__enabled="false",
+        spark__driver__memory=os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM", f"{max(1, ram_gb // 4)}g"
+        ),
     )
     qs, osql = e.queries(), e.oracle_sql()
     failures = 0

@@ -239,7 +239,7 @@ def test_fugue_sql_workflow(spark):
     """FugueSQLWorkflow (reference fugue/sql/workflow.py): calling the
     dag with a script defers it; frames/functions pass as variables;
     YIELDs land in the run result."""
-    from fugue_spark import FugueSQLWorkflow, WorkflowDataFrames
+    from fugue_spark import DataFrames, FugueSQLWorkflow, WorkflowDataFrames
 
     dag = FugueSQLWorkflow({"fugue.sql.compile.ignore_case": True})
     src = dag.df([[1], [2]], "a:long")
@@ -261,6 +261,7 @@ def test_fugue_sql_workflow(spark):
     # WorkflowDataFrames resolve to a member-accessible collection
     dag2 = FugueSQLWorkflow({"fugue.sql.compile.ignore_case": True})
     pair = WorkflowDataFrames(lo=dag2.df([[1]], "a:long"), hi=dag2.df([[9]], "a:long"))
+    assert isinstance(pair, DataFrames) and pair[0] is pair["lo"]
     dag2(
         """
         out = select * from pair[lo] union all select * from pair[hi]
