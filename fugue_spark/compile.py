@@ -89,9 +89,10 @@ identifiers are back-quoted with inner backticks doubled; every binary
 operation renders as ``(a OP b)`` with spaces (``a - -5`` must not become
 the comment ``a--5``); ints keep ``lit``'s INT/BIGINT typing; floats are
 DOUBLE literals (``1.5D`` — a bare ``1.5`` is a DECIMAL), NaN and ±inf a
-cast; a string holding a backslash or a quote renders as its UTF-8 bytes
-cast to STRING, so patterns reach Java regex byte-for-byte under either
-``spark.sql.parser.escapedStringLiterals``; ``isin([])`` renders as
+cast; a string renders as its UTF-8 bytes cast to STRING, so neither
+``spark.sql.parser.escapedStringLiterals`` nor variable substitution
+(``${...}``) touches it and patterns reach Java regex byte-for-byte; a
+name holding ``${`` is a TraceError; ``isin([])`` renders as
 ``false`` (SQL has no empty IN list); key defaults are typed literals
 (``DATE '…'``, ``TIMESTAMP_NTZ '…'``, ``X''``).
 
@@ -206,7 +207,11 @@ def _cast_name(dtype: Any) -> str:
 
 # -- SQL rendering: the one place Python values and names become SQL text ---
 def _qid(name: str) -> str:
-    """A back-quoted identifier; inner backticks are doubled."""
+    """A back-quoted identifier; inner backticks are doubled. The parser
+    substitutes ``${...}`` even inside backticks, so such a name cannot
+    be rendered."""
+    if "${" in name:
+        raise TraceError(f"column name {name!r} holds '${{'")
     return "`" + name.replace("`", "``") + "`"
 
 
@@ -214,10 +219,11 @@ def _sql_lit(v: Any) -> str:
     """SQL text of a Python constant, typed the way ``F.lit`` types it:
     ints are INT when they fit and BIGINT otherwise, floats are DOUBLE
     (``1.5D``; a bare ``1.5`` would be a DECIMAL), NaN/±inf go through a
-    cast. A string holding a backslash or a quote renders as its UTF-8
-    bytes cast to STRING, which parses to the same value whatever
-    ``spark.sql.parser.escapedStringLiterals`` says — regex patterns reach
-    Java byte-for-byte."""
+    cast. A string renders as its UTF-8 bytes cast to STRING (constant-
+    folded to a plain literal): no quoting rule, no
+    ``spark.sql.parser.escapedStringLiterals`` setting and no ``${...}``
+    variable substitution can change it, so regex patterns reach Java
+    byte-for-byte."""
     if v is None:
         return "NULL"
     if isinstance(v, bool):
@@ -234,9 +240,7 @@ def _sql_lit(v: Any) -> str:
         # scalars (whose own repr reads np.float64(...))
         return float.__repr__(v).upper() + "D"
     if isinstance(v, str):
-        if "\\" in v or "'" in v:
-            return f"CAST(X'{v.encode().hex()}' AS STRING)"
-        return f"'{v}'"
+        return f"CAST(X'{v.encode().hex()}' AS STRING)"
     raise TraceError(f"cannot render {type(v).__name__} as a SQL constant")
 
 

@@ -160,15 +160,9 @@ def get_spark(
     builder = builder.master(master)
     builder = configure_builder(builder)
     if shuffle_partitions is None:
-        # local mode: match core count (the cores this process may use),
-        # not the 200 default
+        # local mode: match core count, not the 200 default
         cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
-        if cpus_env and cpus_env.isdigit():
-            shuffle_partitions = int(cpus_env)
-        elif hasattr(os, "sched_getaffinity"):
-            shuffle_partitions = len(os.sched_getaffinity(0))
-        else:  # no affinity API (macOS)
-            shuffle_partitions = os.cpu_count() or 1
+        shuffle_partitions = int(cpus_env) if cpus_env and cpus_env.isdigit() else 32
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     for k, v in conf.items():
         builder = builder.config(k.replace("__", "."), v)

@@ -26,7 +26,7 @@ def main() -> None:
     from fugue_spark.testing import normalize, run_oracle
 
     # master and shuffle partitions follow get_spark's defaults
-    # (SPARK_GRAFT_CPUS, else the cores this process may use); the heap
+    # (SPARK_GRAFT_CPUS, else local[*] and 32 partitions); the heap
     # defaults to a quarter of physical memory
     ram_gb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 30
     spark = get_spark(

@@ -44,3 +44,24 @@ def count_jobs(spark, fn):
     finally:
         sc._jsc.clearJobGroup()
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture
+def py4j_sent(monkeypatch):
+    """The py4j commands sent while the test runs, counted on every
+    connection's send_command as perfbench's Py4jCounter does, less the
+    proxy deletes (``m\\nd\\n``) py4j's finalizer thread sends at its own
+    pace."""
+    from py4j.clientserver import ClientServerConnection
+    from py4j.java_gateway import GatewayConnection
+
+    sent: list[str] = []
+    for cls in (ClientServerConnection, GatewayConnection):
+
+        def counted(conn, command, *a, _send=cls.send_command, **k):
+            if not command.startswith("m\nd\n"):
+                sent.append(command)
+            return _send(conn, command, *a, **k)
+
+        monkeypatch.setattr(cls, "send_command", counted)
+    return sent

@@ -10,6 +10,7 @@ import math
 import pandas as pd
 import pytest
 
+from fugue_spark.compile import TraceError
 from fugue_spark.cotransform import cotransform
 from fugue_spark.transform import transform
 
@@ -32,16 +33,16 @@ def _both(df, fn, schema, **kw):
     return _rows(compiled), _rows(transform(df, fn, schema=schema, compile=False, **kw))
 
 
-_STRINGS = ["it's", "back\\slash", "$1", "--", "\n", "naïve ☃"]
+_STRINGS = ["it's", "back\\slash", "$1", "${spark.app.name}", "--", "\n", "naïve ☃"]
 
 
 @pytest.mark.parametrize("c", _STRINGS)
 def test_string_constants_render_exactly(spark, c):
     pdf = pd.DataFrame(
         {
-            "id": range(7),
+            "id": range(8),
             "s": _STRINGS + ["cost $1 -- it's\n"],
-            "t": [None, "x", None, "y", None, "z", None],
+            "t": [None, "x", None, "y", None, "z", None, "w"],
         }
     )
     df = spark.createDataFrame(pdf)
@@ -133,6 +134,27 @@ def test_odd_column_names_in_a_transform(spark):
     assert got == want == [(1, "3.0", "5.0"), (2, "4.0", "7.0")]
 
 
+def test_variable_reference_in_a_column_name(spark):
+    # the SQL parser substitutes ${...} even between backticks: an input
+    # column runs under a safe alias, an output name cannot be rendered
+    df = spark.createDataFrame(pd.DataFrame({"k": [1, 1, 2], "${x}": [1.0, 2.0, 4.0]}))
+
+    def f(pdf):
+        return {"k": pdf.k.iloc[0], "s": pdf["${x}"].sum()}
+
+    def g(pdf):
+        return {"k": pdf.k.iloc[0], "${y}": pdf["${x}"].sum()}
+
+    part = {"by": ["k"]}
+    got, want = _both(df, f, "k:long,s:double", partition=part)
+    assert got == want == [(1, "3.0"), (2, "4.0")]
+    schema = "k:long,`${y}`:double"
+    with pytest.raises(TraceError, match="holds"):
+        transform(df, g, schema=schema, partition=part, compile="strict")
+    out = transform(df, g, schema=schema, partition=part)
+    assert out.columns == ["k", "${y}"] and _rows(out) == [(1, "3.0"), (2, "4.0")]
+
+
 def test_reserved_column_names_in_cotransform_sides(spark):
     # zip sides keep their real names (identifiers only): reserved words
     left = spark.createDataFrame(pd.DataFrame({"order": [1, 1, 2], "select": [1.0, 2.0, 4.0]}))
@@ -197,23 +219,11 @@ def test_regex_patterns_under_escaped_string_literals(spark, escaped):
 
 
 @pytest.fixture
-def py4j_scopes(monkeypatch):
-    """Count py4j commands (GC deletes excluded) inside the compiler's
-    entry points and inside the trace itself."""
-    from py4j.clientserver import ClientServerConnection
-    from py4j.java_gateway import GatewayConnection
-
+def py4j_scopes(monkeypatch, py4j_sent):
+    """py4j commands sent inside the compiler's entry points and inside
+    the trace itself."""
     import fugue_spark.compile as C
 
-    sent = [0]
-    for cls in (ClientServerConnection, GatewayConnection):
-
-        def counted(conn, command, *a, _send=cls.send_command, **k):
-            if not command.startswith("m\nd\n"):
-                sent[0] += 1
-            return _send(conn, command, *a, **k)
-
-        monkeypatch.setattr(cls, "send_command", counted)
     scopes: dict[str, int] = {}
     for name, scope in (
         ("try_compile_aggregation", "compiler"),
@@ -222,11 +232,11 @@ def py4j_scopes(monkeypatch):
     ):
 
         def wrapped(*a, _fn=getattr(C, name), _scope=scope, **k):
-            n0 = sent[0]
+            n0 = len(py4j_sent)
             try:
                 return _fn(*a, **k)
             finally:
-                scopes[_scope] = scopes.get(_scope, 0) + sent[0] - n0
+                scopes[_scope] = scopes.get(_scope, 0) + len(py4j_sent) - n0
 
         monkeypatch.setattr(C, name, wrapped)
     return scopes

@@ -257,28 +257,14 @@ def test_schema_memo_is_bounded(spark, tmp_path, monkeypatch):
     assert count_jobs(spark, lambda: fa.load(spark, paths[0]))[1] == 1
 
 
-def test_schema_memo_hit_reads_confs_in_one_round_trip(spark, tmp_path, monkeypatch):
+def test_schema_memo_hit_reads_confs_in_one_round_trip(spark, tmp_path, py4j_sent):
     """A memo hit reads the session confs in one JVM round trip: the whole
     load sends at most 17 py4j commands (27 when each of the 11 key confs
-    and fs.defaultFS was read with its own call). Counted on every
-    connection's send_command, as perfbench's Py4jCounter does, less the
-    proxy deletes py4j's finalizer thread sends at its own pace."""
-    from py4j.clientserver import ClientServerConnection
-    from py4j.java_gateway import GatewayConnection
-
+    and fs.defaultFS was read with its own call)."""
     p = str(tmp_path / "t.parquet")
     _save_file(spark, p, [[1, "x"]], "a:long,b:str")
     fa.load(spark, p)
-    sent = []
-    for cls in (ClientServerConnection, GatewayConnection):
-        send = cls.send_command
-
-        def counted(conn, command, *a, _send=send, **k):
-            if not command.startswith("m\nd\n"):
-                sent.append(command)
-            return _send(conn, command, *a, **k)
-
-        monkeypatch.setattr(cls, "send_command", counted)
+    py4j_sent.clear()
     df = fa.load(spark, p)
-    assert len(sent) <= 17, sent
+    assert len(py4j_sent) <= 17, py4j_sent
     assert rows(df) == [(1, "x")]
