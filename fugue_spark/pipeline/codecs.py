@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import struct
 import zlib
+from collections.abc import Iterator
 
 import numpy as np
 
@@ -76,32 +77,46 @@ def encode_wav(
     return hdr + pcm
 
 
+def _riff_chunks(raw: bytes, pos: int, end: int) -> "Iterator[tuple[bytes, int, int]]":
+    """``(chunk id, body offset, body size)`` of each RIFF chunk in
+    ``raw[pos:end]`` — the one chunk walk of the WAV and AVI decoders.
+    Chunks are word-aligned: an odd-sized body is followed by a pad byte."""
+    while pos + 8 <= end:
+        (sz,) = struct.unpack("<I", raw[pos + 4 : pos + 8])
+        yield raw[pos : pos + 4], pos + 8, sz
+        pos += 8 + sz + (sz & 1)
+
+
+def _wav_pcm(raw: bytes) -> "tuple[int, int, int, bytes]":
+    """``(n_channels, sample_rate, bits, payload)`` of a PCM RIFF/WAVE
+    stream. Walks the chunk list (not fixed offsets — WAV files may carry
+    LIST/fact chunks before data)."""
+    if len(raw) < 12 or raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
+        raise ValueError("not a RIFF/WAVE stream")
+    fmt, data = None, None
+    for cid, body, sz in _riff_chunks(raw, 12, len(raw)):
+        if cid == b"fmt ":
+            fmt = struct.unpack("<HHIIHH", raw[body : body + min(sz, 16)])
+        elif cid == b"data":
+            data = raw[body : body + sz]
+    if fmt is None or data is None:
+        raise ValueError("missing fmt/data chunk")
+    audio_format, n_channels, sample_rate, _byte_rate, _block_align, bits = fmt
+    if audio_format != 1:
+        raise ValueError(f"unsupported (non-PCM) audio format {audio_format}")
+    return n_channels, sample_rate, bits, data
+
+
 def decode_wav(raw: bytes) -> dict:
     """Parse RIFF/WAVE chunks and decode the PCM payload.
 
-    Walks the chunk list (not fixed offsets — WAV files may carry LIST/fact
-    chunks before data), reads the fmt fields, and computes sample-level
-    stats from the decoded waveform: ``n_frames`` (samples per channel),
-    ``duration_ms`` (integer floor), ``peak`` (max |amplitude|, with 8-bit
-    unsigned PCM centered at 128 per the spec), and ``rms_e2`` (RMS ×100,
-    floored — integer-exact cross-engine).
+    Reads the fmt fields and computes sample-level stats from the decoded
+    waveform: ``n_frames`` (samples per channel), ``duration_ms`` (integer
+    floor), ``peak`` (max |amplitude|, with 8-bit unsigned PCM centered at
+    128 per the spec), and ``rms_e2`` (RMS ×100, floored — integer-exact
+    cross-engine).
     """
-    if len(raw) < 12 or raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE stream")
-    pos, fmt, data = 12, None, None
-    while pos + 8 <= len(raw):
-        cid, sz = raw[pos : pos + 4], struct.unpack("<I", raw[pos + 4 : pos + 8])[0]
-        body = raw[pos + 8 : pos + 8 + sz]
-        if cid == b"fmt ":
-            fmt = struct.unpack("<HHIIHH", body[:16])
-        elif cid == b"data":
-            data = body
-        pos += 8 + sz + (sz & 1)  # chunks are word-aligned
-    if fmt is None or data is None:
-        raise ValueError("missing fmt/data chunk")
-    audio_format, n_channels, sample_rate, _byte_rate, block_align, bits = fmt
-    if audio_format != 1:
-        raise ValueError(f"unsupported (non-PCM) audio format {audio_format}")
+    n_channels, sample_rate, bits, data = _wav_pcm(raw)
     if bits == 8:
         samples = np.frombuffer(data, dtype=np.uint8).astype(np.int32) - 128
     elif bits == 16:
@@ -931,10 +946,7 @@ def _decode_avi_body(raw: bytes) -> "tuple[dict, list[bytes]]":
     meta: dict = {}
 
     def walk(pos: int, end: int) -> None:
-        while pos + 8 <= end:
-            cid = raw[pos : pos + 4]
-            (sz,) = struct.unpack("<I", raw[pos + 4 : pos + 8])
-            body = pos + 8
+        for cid, body, sz in _riff_chunks(raw, pos, end):
             if cid == b"LIST":
                 walk(body + 4, body + sz)
             elif cid == b"avih":
@@ -947,7 +959,6 @@ def _decode_avi_body(raw: bytes) -> "tuple[dict, list[bytes]]":
                 stream_types.append(raw[body : body + 4])
             elif cid[2:4] in (b"dc", b"db") and cid[:2].isdigit():
                 chunks.append((int(cid[:2]), raw[body : body + sz]))
-            pos = body + sz + (sz & 1)  # chunks are word-aligned
 
     walk(12, len(raw))
     if not meta:

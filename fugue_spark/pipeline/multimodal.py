@@ -1,36 +1,50 @@
 """Multimodal columns: images/audio/video as opaque ``binary`` + typed
-metadata structs, with decode/feature steps as Arrow-batched pandas UDFs.
+metadata structs, with decode/feature steps on the package's map engine.
 
-The Spark-side plumbing (schemas, batch shapes, partitioning) is real and
-tested. Decoding is dispatched by mime via ``register_decoder``; WAV, PNG,
-JPEG and MJPEG-in-AVI video ship with REAL pure-python decoders
-(``codecs.py`` — RIFF chunk walk + PCM decode, zlib inflate + scanline
-unfilter, baseline JFIF entropy decode + IDCT, AVI container walk), so
-features for those formats are actual decoded properties. Unregistered
-mimes (MP3, H.264 …) RAISE by default —
-``allow_stub=True`` opts into a clearly-documented deterministic stub for
-end-to-end plumbing tests; swapping in librosa/ffmpeg is one
-``register_decoder`` call, not a plan change.
+Every Python step is a per-row function run by ``_map_rows`` on
+``transform._map_stream`` (one ``mapInArrow``, one Arrow table out per
+input batch); the output ``id`` keeps the type of the input's id column.
+The ``meta`` struct (mime, byte length, sha1) and the text-or-binary
+source bytes are JVM-side expressions.
+
+Decoding is dispatched by mime via ``register_decoder``; WAV, PNG, JPEG
+and MJPEG-in-AVI video ship with REAL pure-python decoders (``codecs.py``
+— RIFF chunk walk + PCM decode, zlib inflate + scanline unfilter,
+baseline JFIF entropy decode + IDCT, AVI container walk), so features for
+those formats are actual decoded properties. Unregistered mimes (MP3,
+H.264 …) raise; swapping in librosa/ffmpeg is one ``register_decoder``
+call, not a plan change.
 """
 
 from __future__ import annotations
 
 import struct
-import zlib
 from collections.abc import Iterable
 from typing import Callable
 
-import pandas as pd
-from pyspark.sql import DataFrame
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from fugue_spark.pipeline.codecs import (
+    _wav_pcm,
+    decode_avi,
     decode_avi_stats,
     decode_jpeg,
+    decode_jpeg_pixels,
     decode_png,
+    decode_png_pixels,
     decode_wav,
+    encode_avi_mjpeg,
+    encode_jpeg,
+    encode_png,
+    encode_wav,
+    mean_e2,
 )
+from fugue_spark.transform import _map_stream
 
 __all__ = [
     "MEDIA_SCHEMA",
@@ -65,20 +79,6 @@ def register_decoder(mime_prefix: str, fn: Callable[[bytes], dict]) -> None:
     _DECODERS[mime_prefix] = fn
 
 
-def _fake_decode(raw: bytes) -> dict:
-    """Deterministic stand-in for formats whose decoders need native
-    libraries absent from this environment (MP3, MP4/H.264 …; WAV, PNG,
-    JPEG and MJPEG-AVI are REAL — codecs.py). Derives stable
-    pseudo-features from a CRC of the bytes so pipelines are exercisable
-    end-to-end; only reachable via extract_features(allow_stub=True)."""
-    crc = zlib.crc32(raw) & 0xFFFFFFFF
-    return {
-        "width": 1 + crc % 1024,
-        "height": 1 + (crc >> 10) % 1024,
-        "n_frames": 1 + (crc >> 20) % 64,
-    }
-
-
 # real decoders are the default for the formats pure python can handle
 register_decoder("audio/wav", decode_wav)
 register_decoder("audio/x-wav", decode_wav)
@@ -89,19 +89,59 @@ register_decoder("video/x-msvideo", decode_avi_stats)
 register_decoder("video/avi", decode_avi_stats)
 
 
+def _map_rows(
+    df: DataFrame,
+    id_col: str,
+    cols: "list[str]",
+    fn: "Callable[..., list[tuple]]",
+    out: "list[tuple[str, T.DataType]]",
+) -> DataFrame:
+    """Run ``fn(*values)`` — one input row's output rows, as tuples typed
+    by ``out`` — over ``df`` on the map engine, one Arrow table out per
+    input batch. Output: ``id`` (``id_col``, its type kept), then ``out``."""
+    src = df.select(
+        F.col(id_col).alias("id"), *[F.col(c).alias(f"_{i}") for i, c in enumerate(cols)]
+    )
+    schema = T.StructType(
+        [T.StructField("id", df.schema[id_col].dataType), *[T.StructField(n, t) for n, t in out]]
+    )
+    arrow = to_arrow_schema(schema)
+
+    def run(batches: "Iterable[pa.Table]", _cursor) -> "Iterable[pa.Table]":
+        for t in batches:
+            rows = [(i, *r) for i, *v in zip(*(c.to_pylist() for c in t.columns)) for r in fn(*v)]
+            columns = list(zip(*rows)) or [()] * len(arrow)
+            yield pa.Table.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(columns, arrow)], schema=arrow
+            )
+
+    return _map_stream(src, src.columns, "pa", run, schema, schema)
+
+
+def _source_bytes(df: DataFrame, source_col: str) -> Column:
+    """A column's bytes: binary passes through, anything else is utf-8
+    encoded text."""
+    src = F.col(source_col)
+    if isinstance(df.schema[source_col].dataType, T.BinaryType):
+        return src
+    return F.encode(src.cast("string"), "utf-8")
+
+
+def _meta(blob_col: str, mime: str) -> Column:
+    """The MEDIA_SCHEMA struct of a blob column: byte length + sha1."""
+    blob = F.col(blob_col)
+    return F.struct(
+        F.lit(mime).alias("mime"),
+        F.octet_length(blob).cast("long").alias("n_bytes"),
+        F.sha1(blob).alias("sha1"),
+    )
+
+
 def as_media(df: DataFrame, source_col: str, mime: str = "application/octet-stream") -> DataFrame:
     """Pack a column into (blob binary, meta struct). Text columns are
     utf-8 encoded; binary columns pass through."""
-    src = F.col(source_col)
-    dt = df.schema[source_col].dataType
-    blob = src if isinstance(dt, T.BinaryType) else F.encode(src.cast("string"), "utf-8")
-    return df.withColumn("blob", blob).withColumn(
-        "meta",
-        F.struct(
-            F.lit(mime).alias("mime"),
-            F.octet_length(F.col("blob")).cast("long").alias("n_bytes"),
-            F.sha1(F.col("blob")).alias("sha1"),
-        ),
+    return df.withColumn("blob", _source_bytes(df, source_col)).withColumn(
+        "meta", _meta("blob", mime)
     )
 
 
@@ -114,9 +154,7 @@ def pack_wav(
     payload is the source bytes — spec-conformant output any audio tool can
     open. Map-only (no shuffle, no Python); at 100 TB this is a scan-speed
     re-encoding."""
-    src = F.col(source_col)
-    dt = df.schema[source_col].dataType
-    data = src if isinstance(dt, T.BinaryType) else F.encode(src.cast("string"), "utf-8")
+    data = _source_bytes(df, source_col)
 
     def le32(c: F.Column) -> F.Column:
         # little-endian u32 as 4 hex byte pairs -> binary
@@ -130,14 +168,30 @@ def pack_wav(
         "<IHHIIHH", 16, 1, 1, sample_rate, sample_rate, 1, 8
     ) + b"data"
     blob = F.concat(F.lit(b"RIFF"), le32(n + 36), F.lit(mid), le32(n), data)
-    return df.withColumn("blob", blob).withColumn(
-        "meta",
-        F.struct(
-            F.lit("audio/wav").alias("mime"),
-            F.octet_length(F.col("blob")).cast("long").alias("n_bytes"),
-            F.sha1(F.col("blob")).alias("sha1"),
-        ),
+    return df.withColumn("blob", blob).withColumn("meta", _meta("blob", "audio/wav"))
+
+
+def _tile_jpegs(raw: bytes, gw: int, gh: int, n_frames: int, quality: int) -> "list[bytes]":
+    """``n_frames`` grayscale JPEGs of ``gw × gh`` constant 8x8 tiles:
+    frame ``f``'s tile ``i`` is byte ``(f*gw*gh + i) mod len`` (cycled)."""
+    b = np.frombuffer(raw, dtype=np.uint8)
+    per = gw * gh
+    tiles = [b[(f * per + np.arange(per)) % len(b)].reshape(gh, gw) for f in range(n_frames)]
+    return [encode_jpeg(np.repeat(np.repeat(t, 8, 0), 8, 1), quality=quality) for t in tiles]
+
+
+def _pack_rendered(
+    df: DataFrame, source_col: str, id_col: str, mime: str, render: "Callable[[bytes], bytes]"
+) -> DataFrame:
+    """``render`` each non-empty source value into one blob. Output:
+    ``id, blob, meta``."""
+    src = df.select(F.col(id_col), _source_bytes(df, source_col).alias("src")).filter(
+        F.octet_length("src") > 0
     )
+    blobs = _map_rows(
+        src, id_col, ["src"], lambda raw: [(render(raw),)], [("blob", T.BinaryType())]
+    )
+    return blobs.withColumn("meta", _meta("blob", mime))
 
 
 def pack_jpeg_tiles(
@@ -154,56 +208,16 @@ def pack_jpeg_tiles(
     quant step 1) the decode round-trip is EXACT, which is what lets an
     independent engine verify decoded features from the source bytes
     (the p35 gate contract; same synthesis role as pack_wav for audio).
+    The image is frame 0 of ``pack_avi_tiles``.
 
-    mapInPandas (encode is numpy-vectorized per image; one Arrow batch in
-    flight per core, map-only). Rows with empty source are dropped.
+    Map-only; rows with empty source are dropped.
     Output: ``id (from id_col), blob (binary), meta (MEDIA_SCHEMA)``.
     """
-    import hashlib
-
-    import numpy as np
-
-    from fugue_spark.pipeline.codecs import encode_jpeg
-
     gw, gh = int(grid[0]), int(grid[1])
     if gw <= 0 or gh <= 0:
         raise ValueError(f"grid must be positive, got {grid}")
-    src = F.col(source_col)
-    dt = df.schema[source_col].dataType
-    data = src if isinstance(dt, T.BinaryType) else F.encode(src.cast("string"), "utf-8")
-    packed = df.select(F.col(id_col).alias("id"), data.alias("__bytes__")).filter(
-        F.octet_length("__bytes__") > 0
-    )
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        n_tiles = gw * gh
-        for pdf in batches:
-            ids, blobs, nb, sha = [], [], [], []
-            for i, raw in zip(pdf["id"], pdf["__bytes__"]):
-                raw = raw if isinstance(raw, bytes) else bytes(raw)
-                b = np.frombuffer(raw, dtype=np.uint8)
-                tiles = b[np.arange(n_tiles) % len(b)].reshape(gh, gw)
-                img = np.repeat(np.repeat(tiles, 8, axis=0), 8, axis=1)
-                blob = encode_jpeg(img, quality=quality)
-                ids.append(i)
-                blobs.append(blob)
-                nb.append(len(blob))
-                sha.append(hashlib.sha1(blob).hexdigest())
-            yield pd.DataFrame(
-                {"id": ids, "blob": blobs, "n_bytes": nb, "sha1": sha}
-            )
-
-    flat = packed.mapInPandas(
-        run, "id long, blob binary, n_bytes long, sha1 string"
-    )
-    return flat.select(
-        "id",
-        "blob",
-        F.struct(
-            F.lit("image/jpeg").alias("mime"),
-            F.col("n_bytes"),
-            F.col("sha1"),
-        ).alias("meta"),
+    return _pack_rendered(
+        df, source_col, id_col, "image/jpeg", lambda raw: _tile_jpegs(raw, gw, gh, 1, quality)[0]
     )
 
 
@@ -223,56 +237,18 @@ def pack_avi_tiles(
     per-frame decoded features from the source bytes (the p36 gate
     contract; pack_wav/pack_jpeg_tiles's video sibling).
 
-    mapInPandas, map-only. Rows with empty source are dropped.
+    Map-only; rows with empty source are dropped.
     Output: ``id, blob (binary), meta (MEDIA_SCHEMA, mime video/x-msvideo)``.
     """
-    import hashlib
-
-    import numpy as np
-
-    from fugue_spark.pipeline.codecs import encode_avi_mjpeg, encode_jpeg
-
     gw, gh = int(grid[0]), int(grid[1])
     nf = int(n_frames)
     if gw <= 0 or gh <= 0 or nf <= 0:
         raise ValueError(f"grid and n_frames must be positive, got {grid}, {n_frames}")
-    src = F.col(source_col)
-    dt = df.schema[source_col].dataType
-    data = src if isinstance(dt, T.BinaryType) else F.encode(src.cast("string"), "utf-8")
-    packed = df.select(F.col(id_col).alias("id"), data.alias("__bytes__")).filter(
-        F.octet_length("__bytes__") > 0
-    )
 
-    def run(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        per_frame = gw * gh
-        for pdf in batches:
-            ids, blobs, nb, sha = [], [], [], []
-            for i, raw in zip(pdf["id"], pdf["__bytes__"]):
-                raw = raw if isinstance(raw, bytes) else bytes(raw)
-                b = np.frombuffer(raw, dtype=np.uint8)
-                frames = []
-                for f in range(nf):
-                    idx = (f * per_frame + np.arange(per_frame)) % len(b)
-                    tiles = b[idx].reshape(gh, gw)
-                    img = np.repeat(np.repeat(tiles, 8, axis=0), 8, axis=1)
-                    frames.append(encode_jpeg(img, quality=quality))
-                blob = encode_avi_mjpeg(frames, gw * 8, gh * 8, fps=fps)
-                ids.append(i)
-                blobs.append(blob)
-                nb.append(len(blob))
-                sha.append(hashlib.sha1(blob).hexdigest())
-            yield pd.DataFrame({"id": ids, "blob": blobs, "n_bytes": nb, "sha1": sha})
+    def render(raw: bytes) -> bytes:
+        return encode_avi_mjpeg(_tile_jpegs(raw, gw, gh, nf, quality), gw * 8, gh * 8, fps=fps)
 
-    flat = packed.mapInPandas(run, "id long, blob binary, n_bytes long, sha1 string")
-    return flat.select(
-        "id",
-        "blob",
-        F.struct(
-            F.lit("video/x-msvideo").alias("mime"),
-            F.col("n_bytes"),
-            F.col("sha1"),
-        ).alias("meta"),
-    )
+    return _pack_rendered(df, source_col, id_col, "video/x-msvideo", render)
 
 
 def video_frame_features(
@@ -284,56 +260,32 @@ def video_frame_features(
     """The video pipeline op: sample every ``every_n``-th frame from each
     MJPEG-in-AVI blob AND feature-extract the kept frames in the same pass
     (container walk + per-frame JPEG decode happen once; no intermediate
-    frame-blob materialization). mapInPandas, map-only — decode parallelism
-    is the partition count, one Arrow batch of videos in flight per core.
+    frame-blob materialization). Map-only — decode parallelism is the
+    partition count, one Arrow batch of videos in flight per core.
 
     Output: ``id, frame_idx, width, height, mean_e2`` (one row per kept
     frame; mean_e2 = decoded frame mean ×100, floored)."""
-    from fugue_spark.pipeline.codecs import decode_avi, decode_jpeg_pixels, mean_e2
-
     n = int(every_n)
     if n <= 0:
         raise ValueError(f"every_n must be positive, got {every_n}")
 
-    def run(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, ws, hs, means = [], [], [], [], []
-            for i, raw in zip(pdf[id_col], pdf[blob_col]):
-                raw = raw if isinstance(raw, bytes) else bytes(raw)
-                _meta, frames = decode_avi(raw)
-                for j in range(0, len(frames), n):
-                    info, px = decode_jpeg_pixels(frames[j])
-                    ids.append(i)
-                    idxs.append(j)
-                    ws.append(info["width"])
-                    hs.append(info["height"])
-                    means.append(mean_e2(px))
-            yield pd.DataFrame(
-                {"id": ids, "frame_idx": idxs, "width": ws, "height": hs, "mean_e2": means}
-            )
+    def frame_row(j: int, frame: bytes) -> tuple:
+        info, px = decode_jpeg_pixels(frame)
+        return j, info["width"], info["height"], mean_e2(px)
 
-    return df.select(F.col(id_col), F.col(blob_col)).mapInPandas(
-        run, "id long, frame_idx long, width long, height long, mean_e2 long"
-    )
+    def kept(raw: bytes) -> "list[tuple]":
+        frames = decode_avi(raw)[1]
+        return [frame_row(j, frames[j]) for j in range(0, len(frames), n)]
+
+    out = [(c, T.LongType()) for c in ("frame_idx", "width", "height", "mean_e2")]
+    return _map_rows(df, id_col, [blob_col], kept, out)
 
 
 def with_media_meta(df: DataFrame, blob_col: str = "blob") -> DataFrame:
     """Pure-JVM metadata: byte length + sha1 (no decode)."""
-    return df.withColumn(
-        "meta",
-        F.struct(
-            F.lit("application/octet-stream").alias("mime"),
-            F.octet_length(F.col(blob_col)).cast("long").alias("n_bytes"),
-            F.sha1(F.col(blob_col)).alias("sha1"),
-        ),
-    )
+    return df.withColumn("meta", _meta(blob_col, "application/octet-stream"))
 
 
-_FEATURE_SCHEMA = (
-    "id long, n_bytes long, width long, height long, n_frames long, "
-    "sample_rate long, n_channels long, duration_ms long, peak long, "
-    "rms_e2 long, mean_e2 long"
-)
 _FEATURE_KEYS = (
     "width",
     "height",
@@ -352,41 +304,30 @@ def extract_features(
     id_col: str = "doc_id",
     blob_col: str = "blob",
     mime: str = "application/octet-stream",
-    allow_stub: bool = False,
 ) -> DataFrame:
-    """Decode + feature-extract via mapInPandas (Arrow batches of blobs;
-    bounded memory — one batch of media in flight per core). Dispatches to
-    the registered decoder by longest mime prefix (WAV/PNG/JPEG are real
-    decoders by default). An UNREGISTERED mime raises up front — a decode
-    that silently produced pseudo-features would poison a pipeline;
-    ``allow_stub=True`` explicitly opts into the deterministic CRC stub for
-    end-to-end plumbing tests. Fields a decoder does not produce come back
-    null."""
+    """Decode + feature-extract each blob, map-only (one Arrow batch of
+    media in flight per core). Dispatches to the registered decoder by
+    longest mime prefix (WAV/PNG/JPEG/AVI are real decoders by default).
+    An UNREGISTERED mime raises up front — a decode that silently produced
+    pseudo-features would poison a pipeline. Fields a decoder does not
+    produce come back null.
+
+    Output: ``id, n_bytes`` and the ``_FEATURE_KEYS`` columns, all long."""
     decoder, best = None, -1
     for prefix, fn in _DECODERS.items():
         if mime.startswith(prefix) and len(prefix) > best:
             decoder, best = fn, len(prefix)
     if decoder is None:
-        if not allow_stub:
-            raise ValueError(
-                f"no decoder registered for mime {mime!r} — register one via "
-                "register_decoder(), or pass allow_stub=True to use the "
-                "deterministic CRC pseudo-feature stub (plumbing tests only)"
-            )
-        decoder = _fake_decode
+        raise ValueError(
+            f"no decoder registered for mime {mime!r} — register one via register_decoder()"
+        )
 
-    def run(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decoder(raw if isinstance(raw, bytes) else bytes(raw)) for raw in pdf[blob_col]]
-            out = {
-                "id": pdf[id_col].values,
-                "n_bytes": [len(r) for r in pdf[blob_col]],
-            }
-            for k in _FEATURE_KEYS:
-                out[k] = [f.get(k) for f in feats]
-            yield pd.DataFrame(out)
+    def features(raw: bytes) -> "list[tuple]":
+        f = decoder(raw)
+        return [(len(raw), *(f.get(k) for k in _FEATURE_KEYS))]
 
-    return df.select(F.col(id_col), F.col(blob_col)).mapInPandas(run, _FEATURE_SCHEMA)
+    out = [(c, T.LongType()) for c in ("n_bytes", *_FEATURE_KEYS)]
+    return _map_rows(df, id_col, [blob_col], features, out)
 
 
 def resize_images(
@@ -400,69 +341,43 @@ def resize_images(
     magic bytes): full decode — zlib inflate + unfilter for PNG, baseline
     entropy decode + IDCT for JPEG — then nearest-neighbor resample to
     (width, height) with pure numpy index arithmetic, re-encoded as PNG
-    (lossless output regardless of input format). mapInPandas — one Arrow
-    batch of images in flight per core, map-only, no shuffle; output blobs
-    are spec-conformant PNGs any tool can open.
+    (lossless output regardless of input format). Map-only, no shuffle;
+    output blobs are spec-conformant PNGs any tool can open.
 
-    Output: ``id_col, blob (binary), width, height, n_channels``. Unknown
-    formats raise per-row ValueError from the codec — honest failure, not
-    a silent skip.
+    Output: ``id (from id_col), blob (binary), width, height,
+    n_channels``. Unknown formats raise per-row ValueError from the codec
+    — honest failure, not a silent skip.
     """
-    import numpy as np
-
-    from fugue_spark.pipeline.codecs import (
-        decode_jpeg_pixels,
-        decode_png_pixels,
-        encode_png,
-    )
-
     w_out, h_out = int(width), int(height)
     if w_out <= 0 or h_out <= 0:
         raise ValueError(f"target size must be positive, got {width}x{height}")
 
-    def run(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs, chans = [], [], []
-            for i, raw in zip(pdf[id_col], pdf[blob_col]):
-                raw = raw if isinstance(raw, bytes) else bytes(raw)
-                # ONE full decode: meta + reconstructed pixels together
-                # (the per-pixel decode loop is the cost — never run twice)
-                if raw[:2] == b"\xff\xd8":
-                    meta, img = decode_jpeg_pixels(raw)
-                    meta = dict(meta, color_type=None)
-                else:
-                    meta, img = decode_png_pixels(raw)
-                w_in, h_in, ch = meta["width"], meta["height"], meta["n_channels"]
-                if meta["color_type"] == 3:
-                    raise ValueError(
-                        "palette PNG: pixels are palette indices — resizing "
-                        "them as luminance would corrupt the image (expand "
-                        "the palette first)"
-                    )
-                if ch == 2:
-                    raise ValueError(
-                        "gray+alpha PNG not supported by the re-encoder"
-                    )
-                # nearest-neighbor: source index = floor((i + 0.5) * in/out)
-                ys = np.minimum(((np.arange(h_out) + 0.5) * h_in / h_out).astype(int), h_in - 1)
-                xs = np.minimum(((np.arange(w_out) + 0.5) * w_in / w_out).astype(int), w_in - 1)
-                out = img[ys][:, xs]
-                ids.append(i)
-                blobs.append(encode_png(out if ch > 1 else out[:, :, 0]))
-                chans.append(ch)
-            yield pd.DataFrame(
-                {
-                    "id": ids,
-                    "blob": blobs,
-                    "width": [w_out] * len(ids),
-                    "height": [h_out] * len(ids),
-                    "n_channels": chans,
-                }
+    def resized(raw: bytes) -> "list[tuple]":
+        # ONE full decode: meta + reconstructed pixels together
+        # (the per-pixel decode loop is the cost — never run twice)
+        if raw[:2] == b"\xff\xd8":
+            meta, img = decode_jpeg_pixels(raw)
+            meta = dict(meta, color_type=None)
+        else:
+            meta, img = decode_png_pixels(raw)
+        w_in, h_in, ch = meta["width"], meta["height"], meta["n_channels"]
+        if meta["color_type"] == 3:
+            raise ValueError(
+                "palette PNG: pixels are palette indices — resizing "
+                "them as luminance would corrupt the image (expand "
+                "the palette first)"
             )
+        if ch == 2:
+            raise ValueError("gray+alpha PNG not supported by the re-encoder")
+        # nearest-neighbor: source index = floor((i + 0.5) * in/out)
+        ys = np.minimum(((np.arange(h_out) + 0.5) * h_in / h_out).astype(int), h_in - 1)
+        xs = np.minimum(((np.arange(w_out) + 0.5) * w_in / w_out).astype(int), w_in - 1)
+        out = img[ys][:, xs]
+        return [(encode_png(out if ch > 1 else out[:, :, 0]), w_out, h_out, ch)]
 
-    return df.select(F.col(id_col), F.col(blob_col)).mapInPandas(
-        run, "id long, blob binary, width long, height long, n_channels long"
-    )
+    out = [("blob", T.BinaryType())]
+    out += [(c, T.LongType()) for c in ("width", "height", "n_channels")]
+    return _map_rows(df, id_col, [blob_col], resized, out)
 
 
 def resample_audio(
@@ -473,60 +388,31 @@ def resample_audio(
 ) -> DataFrame:
     """REAL audio downsample over WAV blobs: decode PCM, keep every
     ``factor``-th frame (decimation — the frame-sample primitive for
-    audio), re-encode at ``sample_rate / factor``. mapInPandas, map-only.
+    audio), re-encode at ``sample_rate / factor``. Map-only.
 
-    Output: ``id_col → id, blob, n_frames, sample_rate``. The decimated
-    blob is spec-conformant WAV (stdlib-``wave`` readable)."""
-    import struct as _struct
-
-    import numpy as np
-
-    from fugue_spark.pipeline.codecs import decode_wav, encode_wav
-
+    Output: ``id (from id_col), blob, n_frames, sample_rate``. The
+    decimated blob is spec-conformant WAV (stdlib-``wave`` readable)."""
     k = int(factor)
     if k <= 0:
         raise ValueError(f"factor must be positive, got {factor}")
 
-    def run(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs, nfr, rates = [], [], [], []
-            for i, raw in zip(pdf[id_col], pdf[blob_col]):
-                raw = raw if isinstance(raw, bytes) else bytes(raw)
-                meta = decode_wav(raw)
-                if meta["n_channels"] != 1:
-                    raise ValueError(
-                        f"resample_audio supports mono PCM; got "
-                        f"{meta['n_channels']} channels (deinterleave first)"
-                    )
-                # byte-wise decimation is only sample-wise for 8-bit PCM;
-                # a 16-bit stream sliced by bytes would split samples —
-                # refuse honestly (decode_wav's contract)
-                if meta["bits"] != 8:
-                    raise ValueError(
-                        f"resample_audio supports 8-bit PCM; got {meta['bits']}-bit"
-                    )
-                # pull the PCM back out (8-bit path: bytes ARE the samples)
-                pos, data = 12, b""
-                while pos + 8 <= len(raw):
-                    cid = raw[pos : pos + 4]
-                    (sz,) = _struct.unpack("<I", raw[pos + 4 : pos + 8])
-                    if cid == b"data":
-                        data = raw[pos + 8 : pos + 8 + sz]
-                    pos += 8 + sz + (sz & 1)
-                arr = np.frombuffer(data, dtype=np.uint8)
-                dec = arr[::k].tobytes()
-                rate = max(meta["sample_rate"] // k, 1)
-                ids.append(i)
-                blobs.append(encode_wav(dec, sample_rate=rate, n_channels=1, bits=8))
-                nfr.append(len(dec))
-                rates.append(rate)
-            yield pd.DataFrame(
-                {"id": ids, "blob": blobs, "n_frames": nfr, "sample_rate": rates}
+    def decimated(raw: bytes) -> "list[tuple]":
+        n_channels, sample_rate, bits, pcm = _wav_pcm(raw)
+        if n_channels != 1:
+            raise ValueError(
+                f"resample_audio supports mono PCM; got {n_channels} channels "
+                "(deinterleave first)"
             )
+        # byte-wise decimation is only sample-wise for 8-bit PCM; a 16-bit
+        # stream sliced by bytes would split samples — refuse honestly
+        if bits != 8:
+            raise ValueError(f"resample_audio supports 8-bit PCM; got {bits}-bit")
+        kept = pcm[::k]
+        rate = max(sample_rate // k, 1)
+        return [(encode_wav(kept, sample_rate=rate, n_channels=1, bits=8), len(kept), rate)]
 
-    return df.select(F.col(id_col), F.col(blob_col)).mapInPandas(
-        run, "id long, blob binary, n_frames long, sample_rate long"
-    )
+    out = [("blob", T.BinaryType()), ("n_frames", T.LongType()), ("sample_rate", T.LongType())]
+    return _map_rows(df, id_col, [blob_col], decimated, out)
 
 
 def sample_frames(
@@ -548,8 +434,6 @@ def sample_frames(
         raise ValueError(f"every_n must be positive, got {every_n}")
 
     def _default_decoder(raw: bytes) -> "list[bytes]":
-        from fugue_spark.pipeline.codecs import decode_avi
-
         if raw[:4] == b"RIFF" and raw[8:12] == b"AVI ":
             return decode_avi(raw)[1]
         raise NotImplementedError(
@@ -559,17 +443,9 @@ def sample_frames(
 
     dec = decoder or _default_decoder
 
-    def run(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for i, raw in zip(pdf[id_col], pdf[blob_col]):
-                all_frames = dec(raw if isinstance(raw, bytes) else bytes(raw))
-                for j in range(0, len(all_frames), n):
-                    ids.append(i)
-                    idxs.append(j)
-                    frames.append(all_frames[j])
-            yield pd.DataFrame({"id": ids, "frame_idx": idxs, "frame": frames})
+    def kept(raw: bytes) -> "list[tuple]":
+        frames = dec(raw)
+        return [(j, frames[j]) for j in range(0, len(frames), n)]
 
-    return df.select(F.col(id_col), F.col(blob_col)).mapInPandas(
-        run, "id long, frame_idx long, frame binary"
-    )
+    out = [("frame_idx", T.LongType()), ("frame", T.BinaryType())]
+    return _map_rows(df, id_col, [blob_col], kept, out)

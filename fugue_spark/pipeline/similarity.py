@@ -8,11 +8,12 @@ Every operator is one skeleton — sketch → candidate join → exact re-rank
   the correctness baseline the approximate rungs are recall-tested against.
 * random-hyperplane LSH (``cosine_topk_lsh``, ``near_duplicates_lsh``) —
   ``_lsh_keys`` packs n_tables sign sketches into long keys; candidates come
-  from an equi-join on the key (self-pairs through ``dedup._bucket_pairs``,
-  the text-LSH family's pairing path). Recall < 1 by construction.
-* IVF (``cosine_topk_ivf``) — a spherical k-means coarse quantizer trained
-  on a bounded driver sample; the key is the cell, and each query probes
-  its n_probe nearest cells.
+  from an equi-join on the key (self and query-corpus pairs both through
+  ``dedup._bucket_pairs``, the text-LSH family's pairing path). Recall < 1
+  by construction.
+* IVF (``cosine_topk_ivf``) — a spherical k-means coarse quantizer
+  (``_lloyd``, the one k-means) trained on a bounded driver sample; the
+  key is the cell, and each query probes its n_probe nearest cells.
 * SemDeDup (``semantic_dedup``) — coarse-quantizer clusters are the key;
   the verify is a greedy prefix filter within each cluster.
 * PQ (``pq_train`` / ``pq_encode`` / ``pq_topk``) — product-quantization
@@ -27,10 +28,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from fugue_spark.pipeline.dedup import _bucket_pairs, _materialize_index
+from fugue_spark.transform import _map_stream
 
 __all__ = [
     "cosine_topk_bruteforce",
@@ -216,21 +219,23 @@ def cosine_topk_lsh(
 ) -> DataFrame:
     """Approximate top-k: random-hyperplane sign sketches bucket the corpus
     (n_tables independent tables to boost recall); exact cosine re-ranks
-    bucket-mates. Candidate generation is an equi-join on the packed
-    bucket key (:func:`_lsh_keys`) — no cross join anywhere.
+    bucket-mates. Candidates are the cross-frame pairs of the text-LSH
+    family's pairing path (``dedup._bucket_pairs`` with ``other``: an
+    equi-join on the packed bucket key of :func:`_lsh_keys`, the query
+    side broadcast) carrying each side's vector and norm — no cross join
+    anywhere.
     """
 
-    def bucketed(df: DataFrame, ids: str, vecs: str, norms: str) -> DataFrame:
-        keys = F.explode(_lsh_keys(F.col(vecs), n_planes, n_tables)).alias("bk")
-        return _side(df, id_col, vec_col, ids, vecs, norms).select(ids, vecs, norms, keys)
+    def bucketed(df: DataFrame) -> DataFrame:
+        keys = F.explode(_lsh_keys(F.col("v"), n_planes, n_tables)).alias("bk")
+        return _side(df, id_col, vec_col, "id", "v", "n").select("id", "v", "n", keys)
 
-    cb = bucketed(corpus, "neighbor_id", "cv", "cn")
-    qb = bucketed(queries, "query_id", "qv", "qn")
     cands = (
-        cb.join(F.broadcast(qb), on="bk")
+        _bucket_pairs(
+            F.broadcast(bucketed(queries)), None, "query_id", "neighbor_id", "bk", bucketed(corpus)
+        )
+        .toDF("query_id", "neighbor_id", "qv", "qn", "cv", "cn")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "qv", "qn", "neighbor_id", "cv", "cn")
-        .distinct()
     )
     return _cosine_topk(cands, k)
 
@@ -318,22 +323,32 @@ def near_duplicates_lsh(
     )
 
 
-def _kmeans_centroids(mat: "np.ndarray", k: int, iters: int = 10, seed: int = 42) -> "np.ndarray":
-    """Small k-means on a driver-side sample (spherical: normalized rows).
-    An empty sample has no centroids."""
+def _lloyd(
+    mat: "np.ndarray", k: int, iters: int, seed: int = 42, unit: bool = False
+) -> "np.ndarray":
+    """Lloyd's k-means on a small driver-side matrix: seeded initial
+    centroids drawn from the rows, then ``iters`` rounds of nearest-
+    centroid assignment and update. ``unit=True`` is spherical k-means for
+    unit rows (IVF cells, SemDeDup): a centroid is its members' normalized
+    sum, so centroids stay unit and the L2 assignment ranks like cosine; a
+    cluster whose members sum to zero keeps its old centroid. Otherwise a
+    centroid is its members' mean (PQ subspace codebooks). An empty matrix
+    has no centroids."""
     rng = np.random.default_rng(seed)
-    mat = _unit(mat)
     cent = mat[rng.choice(len(mat), size=min(k, len(mat)), replace=False)]
+    x2 = (mat * mat).sum(axis=1)[:, None]
     for _ in range(iters if len(cent) else 0):
-        sims = mat @ cent.T
-        assign = sims.argmax(axis=1)
+        # ||x-c||² = ||x||² - 2x·c + ||c||² via one matmul — never the
+        # (n, k, d) difference tensor (measured 8x on the PQ train path)
+        d2 = x2 - 2.0 * (mat @ cent.T) + (cent * cent).sum(axis=1)[None, :]
+        assign = d2.argmin(axis=1)
         for c in range(len(cent)):
             members = mat[assign == c]
             if len(members):
                 v = members.sum(axis=0)
-                n = np.linalg.norm(v)
-                if n > 0:
-                    cent[c] = v / n
+                scale = np.linalg.norm(v) if unit else len(members)
+                if scale > 0:
+                    cent[c] = v / scale
     return cent
 
 
@@ -359,7 +374,8 @@ def cosine_topk_ivf(
     ~n_probe/n_clusters of the corpus instead of all of it. Recall is
     tunable via n_probe (n_probe = n_clusters ⇒ exact).
     """
-    cent = _kmeans_centroids(_driver_sample(corpus, vec_col, sample_size), n_clusters, seed=seed)
+    sample = _unit(_driver_sample(corpus, vec_col, sample_size))
+    cent = _lloyd(sample, n_clusters, iters=10, seed=seed, unit=True)
     if not len(cent):  # empty corpus: no cell to probe, no candidate
         queries = queries.limit(0)
 
@@ -458,8 +474,11 @@ def semantic_dedup(
         )
         cent = [list(r[1]) for r in rows]
     else:
-        sample = _driver_sample(df, vec_col, sample_size)
-        cent = [list(map(float, c)) for c in _kmeans_centroids(sample, n_clusters, seed=seed)]
+        sample = _unit(_driver_sample(df, vec_col, sample_size))
+        cent = [
+            list(map(float, c))
+            for c in _lloyd(sample, n_clusters, iters=10, seed=seed, unit=True)
+        ]
     if not cent:
         return df.withColumn("cluster", F.lit(0).cast("int")).limit(0)
 
@@ -525,25 +544,6 @@ def semantic_dedup(
         .distinct()
     )
     return assigned.join(shadowed, on=id_col, how="left_anti")
-
-
-def _lloyd(mat: "np.ndarray", k: int, iters: int = 15, seed: int = 42) -> "np.ndarray":
-    """Plain L2 Lloyd's k-means on a small driver-side matrix (PQ subspace
-    codebooks are (k × dim/m) — a few KB each)."""
-    rng = np.random.default_rng(seed)
-    k = min(k, len(mat))
-    cent = mat[rng.choice(len(mat), size=k, replace=False)].copy()
-    x2 = (mat * mat).sum(axis=1)[:, None]
-    for _ in range(iters):
-        # ||x-c||² = ||x||² - 2x·c + ||c||² via one matmul — never the
-        # (n, k, d) difference tensor (measured 8x on the PQ train path)
-        d2 = x2 - 2.0 * (mat @ cent.T) + (cent * cent).sum(axis=1)[None, :]
-        assign = d2.argmin(axis=1)
-        for c in range(k):
-            members = mat[assign == c]
-            if len(members):
-                cent[c] = members.mean(axis=0)
-    return cent
 
 
 class PQCodebook:
@@ -617,7 +617,7 @@ def pq_train(
     sub = dim // m
     cents = np.stack(
         [
-            _lloyd(sample[:, j * sub : (j + 1) * sub], n_centroids, seed=seed + j)
+            _lloyd(sample[:, j * sub : (j + 1) * sub], n_centroids, iters=15, seed=seed + j)
             for j in range(m)
         ]
     )
@@ -668,19 +668,19 @@ def pq_topk(
 ) -> DataFrame:
     """Approximate top-k by asymmetric distance computation over PQ codes.
 
-    The corpus side never touches full vectors: one mapInPandas pass scores
-    every (corpus code, query) pair from per-query lookup tables
-    (LUT[j][code] = ‖query_sub_j − centroid‖², so a code's distance is m
-    table adds — the FAISS IVFADC inner loop, here over Arrow batches).
-    Queries (with LUTs: |Q|·m·k doubles) ship in the closure — guarded,
-    same posture as cosine_topk_bruteforce's broadcast side. Ranking is
-    one window on query_id. Output: query_id, neighbor_id, dist_e6, rank
-    (ascending distance; on normalized vectors d² = 2 − 2·cos, so the
-    order matches the cosine family)."""
+    The corpus side never touches full vectors: one map-only pass on the
+    package's map engine (``transform._map_stream``) scores every (corpus
+    code, query) pair from per-query lookup tables (LUT[j][code] =
+    ‖query_sub_j − centroid‖², so a code's distance is m table adds — the
+    FAISS IVFADC inner loop, here over Arrow batches). Queries (with LUTs:
+    |Q|·m·k doubles) ship in the closure — guarded, same posture as
+    cosine_topk_bruteforce's broadcast side. Ranking is one window on
+    query_id. Output: query_id, neighbor_id, dist_e6, rank (ascending
+    distance; on normalized vectors d² = 2 − 2·cos, so the order matches
+    the cosine family). Both id columns keep their input types."""
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    # id types follow the inputs (the rest of the cosine family preserves
-    # id columns through joins; the mapInPandas schema must do the same)
     schema = T.StructType(
         [
             T.StructField("query_id", queries.schema[id_col].dataType),
@@ -700,7 +700,7 @@ def pq_topk(
         )
     cent = codebook.centroids
     m, sub = codebook.m, codebook.dim // codebook.m
-    q_ids = np.array([r[0] for r in q_rows])
+    q_ids = [r[0] for r in q_rows]
     q_mat = _matrix(r[1] for r in q_rows)
     if codebook.normalized:
         q_mat = _unit(q_mat)
@@ -715,26 +715,24 @@ def pq_topk(
         axis=1,
     )
 
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            c = np.frombuffer(b"".join(pdf["pq_code"]), dtype=np.uint8).reshape(-1, m)
+    arrow = to_arrow_schema(schema)
+    q_arr = pa.array(q_ids, arrow.field("query_id").type)
+
+    def score(batches, _cursor):
+        for t in batches:
+            c = np.frombuffer(b"".join(t.column(1).to_pylist()), dtype=np.uint8).reshape(-1, m)
             # dists[q, n] = sum_j LUT[q, j, c[n, j]]
             dists = np.zeros((len(q_ids), len(c)))
             for j in range(m):
                 dists += luts[:, j, :][:, c[:, j]]
-            nid = pdf[id_col].to_numpy()
-            for qi, qid in enumerate(q_ids):
-                yield pd.DataFrame(
-                    {
-                        "query_id": qid,
-                        "neighbor_id": nid,
-                        "dist_e6": np.floor(dists[qi] * 1e6).astype("int64"),
-                    }
+            for qi in range(len(q_ids)):
+                dist_e6 = pa.array(np.floor(dists[qi] * 1e6).astype("int64"))
+                yield pa.Table.from_arrays(
+                    [pa.repeat(q_arr[qi], len(c)), t.column(0), dist_e6], schema=arrow
                 )
 
-    scored = codes.mapInPandas(score, schema=schema).filter(
+    corpus = codes.select(id_col, "pq_code")
+    scored = _map_stream(corpus, corpus.columns, "pa", score, schema, schema).filter(
         F.col("query_id") != F.col("neighbor_id")
     )
     return _rank_tail(scored, k, "dist_e6", descending=False)

@@ -991,12 +991,13 @@ def p11_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL media decode, value-checked: each document's bytes are packed
     as a spec-conformant 8-bit-PCM WAV (JVM-side RIFF assembly, pack_wav),
     then extract_features dispatches to the pure-python WAV decoder
-    (codecs.decode_wav — chunk walk, fmt parse, PCM decode) via
-    mapInPandas. The oracle re-derives every reported feature independently
-    in DuckDB from the same source bytes (hex-parsed sample values for
-    peak/RMS), so a decoder that misparses the header or payload fails the
-    gate. PNG takes the same path (codecs.decode_png) — value-checked in
-    pytest with all five scanline filters."""
+    (codecs.decode_wav — chunk walk, fmt parse, PCM decode) on the map
+    engine (transform._map_stream). The oracle re-derives every reported
+    feature independently in DuckDB from the same source bytes
+    (hex-parsed sample values for peak/RMS), so a decoder that misparses
+    the header or payload fails the gate. PNG takes the same path
+    (codecs.decode_png) — value-checked in pytest with all five scanline
+    filters."""
     from fugue_spark.pipeline import pack_wav
 
     docs = load_table(spark, sf_dir, "documents")

@@ -328,7 +328,8 @@ def q9_io_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = os.path.join(tempfile.gettempdir(), "fugue_spark_q9.parquet")
     fa.save(li, out, mode="overwrite", partition_by=["l_returnflag"])
-    back = fa.load(spark, out)
+    # the written frame's schema: the reload runs no schema-inference job
+    back = fa.load(spark, out, schema=fa.get_schema(li))
     # total-order output: the driver's value hash is row-order-sensitive
     return fa.aggregate(
         back,

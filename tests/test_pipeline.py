@@ -240,16 +240,26 @@ def test_embedding_family_empty_corpus(spark):
         pq_train(empty)
 
 
-def test_media_features_deterministic(spark, docs):
+def test_media_features_deterministic(spark, docs, monkeypatch):
+    import zlib
+
+    from fugue_spark.pipeline import multimodal
+
     media = as_media(docs.limit(20), "text", mime="text/plain")
     assert media.schema["meta"].dataType.fieldNames() == ["mime", "n_bytes", "sha1"]
-    # unregistered mime: loud failure by default, stub only on explicit opt-in
+    # unregistered mime: loud failure
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="no decoder registered"):
         extract_features(media)
-    f1 = sorted(map(tuple, extract_features(media, allow_stub=True).collect()))
-    f2 = sorted(map(tuple, extract_features(media, allow_stub=True).collect()))
+
+    def crc_stub(raw: bytes) -> dict:
+        crc = zlib.crc32(raw) & 0xFFFFFFFF
+        return {"width": 1 + crc % 1024, "height": 1 + (crc >> 10) % 1024}
+
+    monkeypatch.setitem(multimodal._DECODERS, "text/plain", crc_stub)
+    f1 = sorted(map(tuple, extract_features(media, mime="text/plain").collect()))
+    f2 = sorted(map(tuple, extract_features(media, mime="text/plain").collect()))
     assert f1 == f2
     assert all(t[1] > 0 and t[2] >= 1 for t in f1)  # n_bytes, width
 
@@ -1258,6 +1268,86 @@ def test_avi_mjpeg_codec_and_video_ops(spark):
     bad_media = as_media(bad, "raw", mime="video/mp4")
     with pytest.raises(Exception, match="MJPEG-in-AVI|ffmpeg"):
         sample_frames(bad_media, 1, id_col="doc_id").collect()
+
+
+@pytest.mark.parametrize("id_type", ["string", "int"])
+@pytest.mark.parametrize("op", ["pack_jpeg_tiles", "extract_features", "video_frame_features"])
+def test_media_ops_keep_id_type(spark, op, id_type):
+    """A media op's ``id`` keeps the input id column's type and values (a
+    string id used to fail in the worker converting to long)."""
+    import numpy as np
+
+    from fugue_spark.pipeline import (
+        encode_avi_mjpeg,
+        encode_jpeg,
+        pack_jpeg_tiles,
+        video_frame_features,
+    )
+
+    avi = encode_avi_mjpeg([encode_jpeg(np.full((8, 8), 9, np.uint8))], 8, 8)
+    df = spark.createDataFrame(
+        [("7", "abcdefgh", bytearray(avi)), ("9", "0123456789", bytearray(avi))],
+        "doc_id string, text string, blob binary",
+    ).withColumn("doc_id", F.col("doc_id").cast(id_type))
+    out = {
+        "pack_jpeg_tiles": lambda: pack_jpeg_tiles(df, "text", grid=(2, 2)),
+        "extract_features": lambda: extract_features(
+            pack_wav(df.drop("blob"), "text"), mime="audio/wav"
+        ),
+        "video_frame_features": lambda: video_frame_features(df),
+    }[op]()
+    assert out.schema["id"].dataType == df.schema["doc_id"].dataType
+    assert sorted(r.id for r in out.collect()) == sorted(r.doc_id for r in df.collect())
+
+
+def test_media_ops_batch_size_invariant(spark):
+    """Every Python media op gives identical rows whether each input
+    partition arrives as one Arrow batch or as batches of 2 rows, on a
+    5-row frame and on an empty one."""
+    from fugue_spark.pipeline import (
+        pack_avi_tiles,
+        pack_jpeg_tiles,
+        resample_audio,
+        resize_images,
+        sample_frames,
+        video_frame_features,
+    )
+
+    def ops(df):
+        avi = pack_avi_tiles(df, "text", n_frames=3, grid=(2, 2))
+        jpeg = pack_jpeg_tiles(df, "text", grid=(2, 2))
+        wav = pack_wav(df, "text")
+        return {
+            "pack_jpeg_tiles": jpeg,
+            "pack_avi_tiles": avi,
+            "video_frame_features": video_frame_features(avi, every_n=2, id_col="id"),
+            "sample_frames": sample_frames(avi, 2, id_col="id"),
+            "extract_features": extract_features(wav, mime="audio/wav"),
+            "resize_images": resize_images(jpeg, 8, 8, id_col="id"),
+            "resample_audio": resample_audio(wav, factor=2),
+        }
+
+    df = spark.createDataFrame(
+        [(i, "x" * i + "media") for i in range(5)], "doc_id long, text string"
+    ).coalesce(1)
+
+    def collect_all():
+        return {
+            (name, n): sorted(op.collect())
+            for n, frame in ((5, df), (0, df.limit(0)))
+            for name, op in ops(frame).items()
+        }
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = collect_all()
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        small = collect_all()
+    finally:
+        spark.conf.set(key, old)
+    assert small == default
+    assert all(len(v) >= 5 if n else not v for (_, n), v in default.items())
 
 
 def test_pack_avi_tiles_round_trip(spark):
