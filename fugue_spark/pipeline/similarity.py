@@ -222,20 +222,24 @@ def cosine_topk_lsh(
     bucket-mates. Candidates are the cross-frame pairs of the text-LSH
     family's pairing path (``dedup._bucket_pairs`` with ``other``: an
     equi-join on the packed bucket key of :func:`_lsh_keys`, the query
-    side broadcast) carrying each side's vector and norm — no cross join
-    anywhere.
+    side broadcast), de-duplicated on ids only; the vectors and norms are
+    joined back afterwards (the query side broadcast again), as in
+    :func:`near_duplicates_lsh` — no cross join anywhere.
     """
 
     def bucketed(df: DataFrame) -> DataFrame:
-        keys = F.explode(_lsh_keys(F.col("v"), n_planes, n_tables)).alias("bk")
-        return _side(df, id_col, vec_col, "id", "v", "n").select("id", "v", "n", keys)
+        keys = F.explode(_lsh_keys(F.col(vec_col), n_planes, n_tables)).alias("bk")
+        return df.select(F.col(id_col).alias("id"), keys)
 
+    q = _side(queries, id_col, vec_col, "query_id", "qv", "qn")
+    c = _side(corpus, id_col, vec_col, "neighbor_id", "cv", "cn")
     cands = (
         _bucket_pairs(
             F.broadcast(bucketed(queries)), None, "query_id", "neighbor_id", "bk", bucketed(corpus)
         )
-        .toDF("query_id", "neighbor_id", "qv", "qn", "cv", "cn")
         .filter(F.col("query_id") != F.col("neighbor_id"))
+        .join(F.broadcast(q), on="query_id")
+        .join(c, on="neighbor_id")
     )
     return _cosine_topk(cands, k)
 

@@ -195,6 +195,48 @@ def test_cache_of_a_stopped_session_is_rebuilt():
     assert proc.returncode == 0, proc.stderr[-3000:]
 
 
+def test_driver_jvm_gets_c2_directives_before_caller_flags():
+    # needs its own JVM: JVM flags only apply to a JVM this process launches
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from fugue_spark.session import get_spark
+
+        spark = get_spark(
+            app_name="jvm_flags", master="local[1]", shuffle_partitions=1,
+            spark__ui__enabled="false", spark__driver__memory="512m",
+            spark__driver__extraJavaOptions="-Dfugue.marker=1",
+        )
+        jvm = spark.sparkContext._jvm
+        for arg in jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments():
+            print("ARG", arg)
+        spark.stop()
+        """
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True, timeout=300
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    args = [line[4:] for line in proc.stdout.splitlines() if line.startswith("ARG ")]
+    flag = "-XX:CompilerDirectivesFile="
+    files = [a[len(flag) :] for a in args if a.startswith(flag)]
+    assert len(files) == 1 and os.path.isfile(files[0]), args
+    # the caller's flags come last, so they win over ours
+    assert args.index(flag + files[0]) < args.index("-Dfugue.marker=1"), args
+
+
+def test_shipped_c2_directives_load():
+    # a missing or malformed directives file stops every JVM from starting
+    from fugue_spark.session import _C2_DIRECTIVES
+
+    home = os.environ.get("JAVA_HOME")
+    java = os.path.join(home, "bin", "java") if home else shutil.which("java")
+    flags = ["-XX:+UnlockDiagnosticVMOptions", f"-XX:CompilerDirectivesFile={_C2_DIRECTIVES}"]
+    proc = subprocess.run([java, *flags, "-version"], capture_output=True, text=True, timeout=60)
+    assert proc.returncode == 0, proc.stdout + proc.stderr
+
+
 def test_path_bytes_sizes_files_and_directories(tmp_path):
     from fugue_spark.session import _path_bytes
 
