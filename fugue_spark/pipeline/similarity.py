@@ -238,8 +238,10 @@ def cosine_topk_lsh(
             F.broadcast(bucketed(queries)), None, "query_id", "neighbor_id", "bk", bucketed(corpus)
         )
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .join(F.broadcast(q), on="query_id")
+        # corpus first: a corpus too big to broadcast sort-merge joins on a
+        # pair shuffle that still carries ids only
         .join(c, on="neighbor_id")
+        .join(F.broadcast(q), on="query_id")
     )
     return _cosine_topk(cands, k)
 

@@ -9,6 +9,7 @@ UTC session time so timestamp semantics are deterministic across engines.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -57,6 +58,9 @@ _DEFAULTS = {
 #   jdk/internal/loader, jdk/internal/org   class loading; the JDK's ASM
 #                       spinning lambda and method-handle classes
 #   scala/reflect/internal, scala/reflect/runtime   TypeTag unpickling
+#                       (0.65-1.01 s of C2 without the directives, in three
+#                       JFR recordings of a small-sf0.1 set-up + cold pass;
+#                       the smallest entries on the list)
 # Left out although they compile once-per-query code: com/ibm/icu (Spark
 # maps case with ICU per row), com/fasterxml (Jackson parses JSON rows),
 # java/lang/invoke and sun/invoke (the method-handle glue C2 inlines into
@@ -69,11 +73,16 @@ _DEFAULTS = {
 # C1 for everything (-XX:TieredStopAtLevel=1) is a trap: on relational-sf0.5
 # it took cold_cpu_s from 46.4 to 30.4 but warm.cpu_s from 12.2 to 19.0.
 # DisplayVMOutputToStderr sends the JVM's "1 compiler directives added"
-# line to stderr instead of the program's stdout.
+# line to stderr instead of the program's stdout. CompilerDirectivesFile
+# needs JDK 9 or later (a JDK 8 JVM refuses to start on it); Spark 4, the
+# package's floor in pyproject.toml, runs on JDK 17 or later only.
 _C2_DIRECTIVES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "c2_directives.json")
+# Spark's launcher splits an option string like a shell: inside double
+# quotes a backslash escapes the next character, so escape the path's own
+# backslashes (Windows separators) and double quotes.
 _JIT_FLAGS = (
     "-XX:+UnlockDiagnosticVMOptions -XX:+DisplayVMOutputToStderr "
-    f'"-XX:CompilerDirectivesFile={_C2_DIRECTIVES}"'
+    '"-XX:CompilerDirectivesFile=%s"' % re.sub(r'([\\"])', r"\\\1", _C2_DIRECTIVES)
 )
 
 
@@ -195,8 +204,14 @@ def get_spark(
     passes there). Spark puts that key in front of
     ``spark.driver.extraJavaOptions``, so a caller's own JVM flags come
     last and win, and an ``extraJavaOptions`` from spark-defaults.conf is
-    not overridden. JVM flags take effect only when this call launches the
-    JVM; a session built on an already-running JVM keeps that JVM's flags.
+    not overridden. A ``spark.driver.defaultJavaOptions`` from
+    spark-defaults.conf *is* replaced, since builder confs override that
+    file: a caller who needs those flags passes them as
+    ``spark__driver__defaultJavaOptions``, which keeps them after ours.
+    The directives need JDK 9 or later; Spark 4, which the package
+    requires, runs on JDK 17 or later. JVM flags take effect only when this
+    call launches the JVM; a session built on an already-running JVM keeps
+    that JVM's flags.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None:

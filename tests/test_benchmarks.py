@@ -195,12 +195,22 @@ def test_cache_of_a_stopped_session_is_rebuilt():
     assert proc.returncode == 0, proc.stderr[-3000:]
 
 
-def test_driver_jvm_gets_c2_directives_before_caller_flags():
-    # needs its own JVM: JVM flags only apply to a JVM this process launches
+def test_driver_jvm_gets_c2_directives_before_caller_flags(tmp_path):
+    # needs its own JVM: JVM flags only apply to a JVM this process launches.
+    # The package is imported from a copy whose path holds a space, a
+    # backslash and a double quote, all of which Spark's launcher would
+    # split or unescape if the flag did not quote and escape the path.
+    home = tmp_path / 'pkg dir\\with "quote"'
+    shutil.copytree(
+        os.path.join(REPO, "fugue_spark"),
+        home / "fugue_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    directives = str(home / "fugue_spark" / "c2_directives.json")
     script = textwrap.dedent(
         f"""
         import sys
-        sys.path.insert(0, {REPO!r})
+        sys.path.insert(0, {str(home)!r})
         from fugue_spark.session import get_spark
 
         spark = get_spark(
@@ -221,7 +231,7 @@ def test_driver_jvm_gets_c2_directives_before_caller_flags():
     args = [line[4:] for line in proc.stdout.splitlines() if line.startswith("ARG ")]
     flag = "-XX:CompilerDirectivesFile="
     files = [a[len(flag) :] for a in args if a.startswith(flag)]
-    assert len(files) == 1 and os.path.isfile(files[0]), args
+    assert files == [directives], args
     # the caller's flags come last, so they win over ours
     assert args.index(flag + files[0]) < args.index("-Dfugue.marker=1"), args
 
